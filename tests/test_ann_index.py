@@ -20,6 +20,7 @@ tests/test_soak.py.
 
 from __future__ import annotations
 
+import math
 import random
 
 import pytest
@@ -59,6 +60,23 @@ def _assign_sets(index: IvfIndex) -> dict[int, int]:
     return {r.vec_id: r.cell
             for r in index.assign.read().select("vec_id", "cell")
             .collect()}
+
+
+def _result_rows(df) -> list[tuple]:
+    """A search result as sorted (query_id, neighbor_id, cos_sim, rk)
+    tuples, NaN made comparable."""
+    return sorted(
+        (r.query_id, r.neighbor_id,
+         "NaN" if r.cos_sim is not None and math.isnan(r.cos_sim)
+         else r.cos_sim, r.rk)
+        for r in df.collect())
+
+
+def _is_resident(df) -> bool:
+    """True when a search answered from the driver-resident posting
+    lists (a local relation) rather than the distributed plan."""
+    return df._jdf.queryExecution().analyzed().toString().startswith(
+        "LocalRelation")
 
 
 def _fresh_assign(spark, index: IvfIndex,
@@ -696,14 +714,13 @@ def test_optimize_prunes_probe_files_and_search_stays_identical(
         len(one_cell), len(all_files))
 
     q = corpus.read().filter(F.col("vec_id") < 4)
-    pruned = {(r.query_id, r.neighbor_id, r.rk)
-              for r in ix.search(q, 3, nprobe=2,
-                                 prune_files=True).collect()}
-    full = {(r.query_id, r.neighbor_id, r.rk)
-            for r in ix.search(q, 3, nprobe=2,
-                               prune_files=False).collect()}
-    auto = {(r.query_id, r.neighbor_id, r.rk)
-            for r in ix.search(q, 3, nprobe=2).collect()}
+    pruned = _result_rows(ix.search(q, 3, nprobe=2, prune_files=True))
+    full = _result_rows(ix.search(q, 3, nprobe=2, prune_files=False))
+    auto_df = ix.search(q, 3, nprobe=2)
+    # a small index: auto answers from the driver-resident posting
+    # lists, row-for-row (cos_sim included) equal to both scan plans
+    assert _is_resident(auto_df)
+    auto = _result_rows(auto_df)
     assert pruned == full == auto and pruned
 
     # churn until the cell layout decays, then the index plan must
@@ -940,3 +957,371 @@ def test_kmeans_sampled_training_matches_full_within_epsilon(
     with pytest.raises(ValueError, match="sample_n"):
         IvfIndex(spark, str(tmp_path / "ix_bad")).build(
             corpus, n_centroids=8, sample_n=400)
+
+
+# ---- resident route: bit-identical to the distributed plan ----------
+
+def _assert_routes_agree(ix: IvfIndex, q, k: int, nprobe: int) -> list:
+    """The auto route must answer residently and match the distributed
+    full-scan plan row for row (cos_sim included), schema included."""
+    auto = ix.search(q, k, nprobe=nprobe)
+    dist = ix.search(q, k, nprobe=nprobe, prune_files=False)
+    assert _is_resident(auto)
+    assert auto.schema == dist.schema
+    got = _result_rows(auto)
+    assert got == _result_rows(dist), (k, nprobe)
+    return got
+
+
+def test_round4_matches_spark_round_bit_for_bit(spark):
+    """The resident kernel's rounding must be Spark's round(x, 4) on
+    doubles (HALF_UP on the decimal string) for every 4th-decimal tie
+    point in [-1, 1], its neighbouring doubles, and random values —
+    compared bitwise, so a sign-of-zero slip fails too."""
+    import numpy as np
+    import pyarrow as pa
+
+    from yelp_data_engineering_pipeline_spark.operators.ann_index import (
+        _round4,
+    )
+
+    m = np.arange(0, 10001, dtype=np.float64)
+    ties = (2 * m + 1) / 2e4
+    bounds = m / 1e4
+    rng = np.random.default_rng(3)
+    vals = np.concatenate([
+        ties, bounds, np.nextafter(ties, 0), np.nextafter(ties, 2),
+        np.nextafter(bounds, 0), np.nextafter(bounds, 2),
+        rng.uniform(-1.01, 1.01, 20000),
+        [0.0, 1.0000000000000002, 5e-5, 4.9999999999999996e-05,
+         float("nan"), float("inf")]])
+    vals = np.concatenate([vals, -vals])
+    df = spark.createDataFrame(pa.table({"i": np.arange(len(vals)),
+                                         "x": vals}))
+    got = df.selectExpr("i", "round(x, 4) AS r").toArrow()
+    want = got["r"].to_numpy()[np.argsort(got["i"].to_numpy())]
+    mine = _round4(vals)
+    same = ((want.view(np.int64) == mine.view(np.int64))
+            | (np.isnan(want) & np.isnan(mine)))
+    assert same.all(), vals[~same][:10]
+
+
+def test_resident_cosine_kernel_matches_spark_unrounded(spark):
+    """Before rounding, the NumPy verify kernel must equal the Spark
+    cosine expression bit for bit (double casts of float32 input,
+    left-fold sums, sqrt norms): a re-associated sum (np.sum, np.dot)
+    moves last bits that round(·, 4) would almost never expose."""
+    import numpy as np
+    import pyarrow as pa
+
+    from yelp_data_engineering_pipeline_spark.operators.ann_index import (
+        _lfold,
+    )
+    from yelp_data_engineering_pipeline_spark.operators.similarity import (
+        _cosine_spark_sql,
+    )
+
+    rng = np.random.default_rng(17)
+    n, dim = 4000, 64
+    a = rng.standard_normal((n, dim)).astype(np.float32)
+    b = rng.standard_normal((n, dim)) * rng.uniform(1e-3, 1e3, (n, 1))
+    df = spark.createDataFrame(pa.table({
+        "i": np.arange(n),
+        "a": pa.array(list(a), type=pa.list_(pa.float32())),
+        "b": pa.array(list(b), type=pa.list_(pa.float64()))}))
+    got = df.selectExpr(
+        "i", f"{_cosine_spark_sql('a', 'b')} AS c").toArrow()
+    want = got["c"].to_numpy()[np.argsort(got["i"].to_numpy())]
+    a64 = a.astype(np.float64)
+    mine = _lfold(a64 * b) / (np.sqrt(_lfold(np.square(a64)))
+                              * np.sqrt(_lfold(np.square(b))))
+    assert (want.view(np.int64) == mine.view(np.int64)).all()
+
+
+def test_resident_search_matches_distributed_edge_cases(spark, tmp_path):
+    """Ties at the 4th decimal (exact duplicates and a 1e-12 rescale),
+    a NaN cosine (Spark's NaN is the largest double: first in the
+    cos_sim DESC window, last in the probe sort), query ids present in
+    the corpus, an empty probed cell (duplicate centroids: the lower
+    cell wins every assignment), k above the candidate count and
+    duplicate query ids (their candidates pool under one query_id)."""
+    rng = random.Random(5)
+    base = _vec(rng, 3)
+    rows = [(0, base), (1, list(base))]
+    rows += [(i, _vec(rng, i % D)) for i in range(2, 120)]
+    rows += [(200, list(base)), (201, list(base)),
+             (202, [x * (1 + 1e-12) for x in base]),
+             (203, [float("nan")] + base[1:])]
+    corpus = ParquetMergeTable(spark, str(tmp_path / "c"), key="vec_id")
+    corpus.merge(spark.createDataFrame(rows, SCHEMA))
+    ix = IvfIndex(spark, str(tmp_path / "ix"))
+    ix.build(corpus, n_centroids=8)
+    assert 1 not in set(_assign_sets(ix).values())
+
+    dup = _vec(rng, 5)
+    q = spark.createDataFrame(
+        [(0, base), (5, _vec(rng, 5)), (500, _vec(rng, 2)),
+         (500, _vec(rng, 6)), (501, dup), (501, list(dup)),
+         (502, [float("nan")] + base[1:])], SCHEMA)
+    for k, nprobe in ((3, 1), (4, 2), (500, 2), (5, 8), (2, 20)):
+        got = _assert_routes_agree(ix, q, k, nprobe)
+    # the k=2, full-probe pass: NaN first, then exact ties by id
+    assert {r[3]: r[1:3] for r in got if r[0] == 0} == {
+        1: (203, "NaN"), 2: (1, 1.0)}
+    assert [r[1] for r in got if r[0] == 501] == [203, 203]
+
+    # warm posting lists: a search is ONE Spark job (the query batch)
+    sc = spark.sparkContext
+    sc.setJobGroup("resident-search", "resident search job count")
+    try:
+        ix.search(q, 3, nprobe=2).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("resident-search")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1, jobs
+
+
+def test_resident_search_zero_norm_defers_to_distributed(spark, tmp_path):
+    """A zero cosine denominator raises DIVIDE_BY_ZERO in the
+    distributed plan under ANSI (NULL otherwise); the resident kernel
+    hands such inputs to that plan, so both routes end the same way
+    for a zero-norm corpus vector and a zero-norm query."""
+    corpus = _corpus(spark, str(tmp_path / "c"), n=64)
+    ix = IvfIndex(spark, str(tmp_path / "ix"))
+    ix.build(corpus, n_centroids=8)
+    # injected straight into the assignment table: assigning a zero
+    # vector at build time divides by zero as well
+    ix.assign.merge(spark.createDataFrame(
+        [(900, [0.0] * D, 0)],
+        "vec_id long, embedding array<double>, cell long"))
+
+    def outcome(q, **kw):
+        try:
+            return _result_rows(ix.search(q, 3, nprobe=8, **kw))
+        except Exception as ex:  # noqa: BLE001 — compared, not hidden
+            return type(ex).__name__
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled") == "true"
+    for q in (corpus.read().filter(F.col("vec_id") < 3),
+              spark.createDataFrame([(901, [0.0] * D)], SCHEMA)):
+        got = outcome(q)
+        assert got == outcome(q, prune_files=False)
+        assert isinstance(got, str) == ansi, got
+
+
+def test_resident_search_matches_distributed_sq8_and_big_codebook(
+        spark, tmp_path):
+    """sq8 storage (scores over the dequantized q/127 grid) and a
+    64-cell codebook past the literal bound (the distributed probe
+    rides the one-row broadcast plane) stay bit-identical."""
+    from yelp_data_engineering_pipeline_spark.operators.similarity import (
+        _CODEBOOK_LITERAL_MAX_VALUES,
+    )
+
+    corpus = _corpus(spark, str(tmp_path / "c"), n=128)
+    ix = IvfIndex(spark, str(tmp_path / "ix8"), store="sq8")
+    ix.build(corpus, n_centroids=8)
+    q = corpus.read().filter(F.col("vec_id") % 9 == 0)
+    for nprobe in (1, 3):
+        _assert_routes_agree(ix, q, 5, nprobe)
+
+    dim = 40
+    rng = random.Random(9)
+    big = ParquetMergeTable(spark, str(tmp_path / "big"), key="vec_id")
+    big.merge(spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(dim)])
+         for i in range(320)], SCHEMA))
+    bix = IvfIndex(spark, str(tmp_path / "ix64"))
+    bix.build(big, n_centroids=64)
+    assert 64 * dim > _CODEBOOK_LITERAL_MAX_VALUES
+    qb = big.read().filter(F.col("vec_id") < 12)
+    for nprobe in (2, 5):
+        _assert_routes_agree(bix, qb, 5, nprobe)
+
+
+def test_resident_cache_follows_table_versions(spark, tmp_path):
+    """Every refresh / split_cell / optimize commits a new assignment
+    version; the resident posting lists must reload on it (never serve
+    the old version) and keep matching the distributed plan."""
+    from yelp_data_engineering_pipeline_spark.operators import ann_index as AI
+
+    rng = random.Random(13)
+    corpus = _corpus(spark, str(tmp_path / "c"), n=96)
+    ix = IvfIndex(spark, str(tmp_path / "ix"))
+    ix.build(corpus, n_centroids=8)
+    probe_vec = _vec(rng, 2)
+    q = spark.createDataFrame(
+        [(1000, probe_vec), (1001, _vec(rng, 5))], SCHEMA)
+    key = (spark.sparkContext.applicationId, ix.root)
+
+    def check() -> list:
+        got = _assert_routes_agree(ix, q, 5, 2)
+        assert AI._RESIDENT[key][0][0] == ix.assign.current_version()
+        return got
+
+    check()
+    corpus.merge(spark.createDataFrame([(2000, list(probe_vec))], SCHEMA))
+    ix.refresh(corpus)
+    assert (1000, 2000, 1.0, 1) in check()
+    hot = max(ix.cell_stats().collect(), key=lambda r: r.n_vectors).cell
+    ix.split_cell(hot)
+    check()
+    ix.optimize(target_files=4)
+    check()
+
+
+def test_resident_search_on_promoted_replica(spark, tmp_path):
+    """A replica whose assignment table was promoted (fence, drain,
+    carried layout — new commits, an extra provenance column) serves
+    resident searches identical to its distributed plan and to the
+    primary."""
+    from yelp_data_engineering_pipeline_spark.operators.ann_index import (
+        replicate_index,
+    )
+    from yelp_data_engineering_pipeline_spark.streaming.ingest import (
+        promote_replica,
+    )
+
+    corpus = _corpus(spark, str(tmp_path / "c"), n=96)
+    primary = IvfIndex(spark, str(tmp_path / "p"))
+    primary.build(corpus, n_centroids=8)
+    primary.optimize(target_files=4)
+    rep_root, ckpt = str(tmp_path / "r"), str(tmp_path / "ck")
+    replica = replicate_index(spark, primary, rep_root, ckpt)
+    q = corpus.read().filter(F.col("vec_id") % 11 == 0)
+    before = _assert_routes_agree(replica, q, 5, 3)
+    v0 = replica.assign.current_version()
+    promote_replica(spark, primary.assign, f"{rep_root}/assign", ckpt)
+    assert replica.assign.current_version() > v0
+    got = _assert_routes_agree(replica, q, 5, 3)
+    assert got == before == _result_rows(primary.search(q, 5, nprobe=3))
+
+
+def test_resident_posting_lists_load_once_under_concurrent_searches(
+        spark, tmp_path, monkeypatch):
+    """More client threads than cores, all searching a cold index at
+    once with a tiny switch interval: the check-then-load of the
+    resident cache is locked, so the table version loads exactly once
+    and every thread gets the reference answer."""
+    import sys
+    import threading
+
+    corpus = _corpus(spark, str(tmp_path / "c"), n=64)
+    ix = IvfIndex(spark, str(tmp_path / "ix"))
+    ix.build(corpus, n_centroids=8)
+    q = corpus.read().filter(F.col("vec_id") < 3)
+    want = _result_rows(ix.search(q, 4, nprobe=2, prune_files=False))
+
+    loads = []
+    real_load = IvfIndex._load_postings
+
+    def counting_load(self, version, store):
+        loads.append(version)
+        return real_load(self, version, store)
+
+    monkeypatch.setattr(IvfIndex, "_load_postings", counting_load)
+    got, errors = [], []
+
+    def client():
+        try:
+            got.append(_result_rows(ix.search(q, 4, nprobe=2)))
+        except Exception as ex:  # noqa: BLE001 — reported below
+            errors.append(ex)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert loads == [ix.assign.current_version()]
+    assert got == [want] * 8
+
+
+def test_resident_route_needs_known_sizes_below_its_cap(
+        spark, tmp_path, monkeypatch):
+    """The resident route loads the whole assignment table into the
+    driver, so the auto route takes it only when every manifest entry
+    records its size and the total is below _RESIDENT_MAX_BYTES. A file
+    with no recorded bytes (it could hold any amount of data) and a
+    table at the cap keep the distributed plan — same rows either way."""
+    corpus = _corpus(spark, str(tmp_path / "c"), n=64)
+    ix = IvfIndex(spark, str(tmp_path / "ix"))
+    ix.build(corpus, n_centroids=8)
+    ix.optimize(target_files=4)
+    q = corpus.read().filter(F.col("vec_id") < 3)
+    want = _result_rows(ix.search(q, 4, nprobe=2, prune_files=False))
+    size = _assign_bytes(ix)
+    assert 0 < size < IvfIndex._RESIDENT_MAX_BYTES
+
+    monkeypatch.setattr(IvfIndex, "_RESIDENT_MAX_BYTES", size)
+    at_cap = ix.search(q, 4, nprobe=2)
+    assert not _is_resident(at_cap) and _result_rows(at_cap) == want
+    monkeypatch.setattr(IvfIndex, "_RESIDENT_MAX_BYTES", size + 1)
+    below = ix.search(q, 4, nprobe=2)
+    assert _is_resident(below) and _result_rows(below) == want
+
+    real = ix.assign._zone_arrays
+
+    def one_unsized(version, cols, **kw):
+        keys, rows, byts, za = real(version, cols, **kw)
+        return keys, rows, [None] + list(byts[1:]), za
+
+    monkeypatch.setattr(ix.assign, "_zone_arrays", one_unsized)
+    unsized = ix.search(q, 4, nprobe=2)
+    assert not _is_resident(unsized) and _result_rows(unsized) == want
+
+
+def test_resident_load_blocks_only_its_own_index(
+        spark, tmp_path, monkeypatch):
+    """While one index's posting lists load, a cache hit on a second
+    index and a cold load of a third must answer without waiting for
+    the first load to finish."""
+    import threading
+
+    corpus = _corpus(spark, str(tmp_path / "c"), n=64)
+    ixs = []
+    for name in ("a", "b", "c"):
+        ix = IvfIndex(spark, str(tmp_path / name))
+        ix.build(corpus, n_centroids=8)
+        ixs.append(ix)
+    slow, warm, cold = ixs
+    q = corpus.read().filter(F.col("vec_id") < 3)
+    want = _result_rows(slow.search(q, 4, nprobe=2, prune_files=False))
+    warm.search(q, 4, nprobe=2)
+
+    started, release = threading.Event(), threading.Event()
+    real_load = IvfIndex._load_postings
+
+    def gated_load(self, version, store):
+        if self.root == slow.root:
+            started.set()
+            release.wait(timeout=300)
+        return real_load(self, version, store)
+
+    monkeypatch.setattr(IvfIndex, "_load_postings", gated_load)
+    got: dict = {}
+
+    def search(name, ix):
+        got[name] = _result_rows(ix.search(q, 4, nprobe=2))
+
+    blocked = threading.Thread(target=search, args=("slow", slow))
+    blocked.start()
+    try:
+        assert started.wait(timeout=120)
+        others = threading.Thread(
+            target=lambda: (search("warm", warm), search("cold", cold)))
+        others.start()
+        others.join(timeout=120)
+        assert not others.is_alive(), "waited behind another index's load"
+        assert blocked.is_alive()
+    finally:
+        release.set()
+        blocked.join(timeout=300)
+    assert got == {"slow": want, "warm": want, "cold": want}

@@ -1211,6 +1211,49 @@ def test_ivf_kernel_sql_twin_matches_column_form(spark, sf_dir):
         assert sorted(rr) == sorted(rn)
 
 
+def test_ivf_kernel_vector_column_named_like_placeholder(spark, sf_dir):
+    """A vector column whose name contains ``_cb`` (``emb_cb``) must
+    assign and probe exactly like the Column-form kernel: the SQL twin
+    once spliced the codebook literal over a ``_cb`` placeholder by
+    string replace, which also rewrote such column names."""
+    from yelp_data_engineering_pipeline_spark.operators.similarity import (
+        ivf_assign,
+        ivf_assign_cell,
+        ivf_probe_cells,
+    )
+    from yelp_data_engineering_pipeline_spark.tables import load
+
+    emb = load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").alias("emb_cb"))
+    cents = {
+        int(r["vec_id"]): list(r["emb_cb"])
+        for r in emb.orderBy("vec_id").limit(4).collect()
+    }
+    for nprobe, ref_expr in (
+        (None, ivf_assign_cell(F.col("emb_cb"), cents)),
+        (2, ivf_probe_cells(F.col("emb_cb"), cents, 2)),
+    ):
+        got = ivf_assign(emb, cents, vec_col="emb_cb", nprobe=nprobe)
+        want = emb.select("vec_id", "emb_cb", ref_expr.alias("cell"))
+        assert sorted(map(tuple, got.select("vec_id", "cell").collect())) \
+            == sorted(map(tuple, want.select("vec_id", "cell").collect()))
+
+
+def test_ivf_kernel_expression_memo_is_bounded(spark):
+    """The parsed-kernel memo keeps a small LRU, not one entry per
+    codebook version ever seen (split_cell and re-builds each yield a
+    new codebook)."""
+    from yelp_data_engineering_pipeline_spark.operators import similarity as S
+
+    for i in range(S._CELL_EXPR_CACHE_MAX + 8):
+        S._ivf_kernel_expr("embedding", {0: [1.0, float(i)], 1: [0.0, 1.0]},
+                           None)
+    assert len(S._CELL_EXPR_CACHE) == S._CELL_EXPR_CACHE_MAX
+    newest = {0: [1.0, float(S._CELL_EXPR_CACHE_MAX + 7)], 1: [0.0, 1.0]}
+    assert S._ivf_kernel_expr("embedding", newest, None) is \
+        S._ivf_kernel_expr("embedding", newest, None)
+
+
 def test_rank_histogram_grid_lazy_matches_eager(spark):
     """rank_histogram_grid_lazy (no collect, no eager job — r14) must
     assign the SAME ranks and total as the eager grid scheme, including

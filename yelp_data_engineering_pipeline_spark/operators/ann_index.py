@@ -37,25 +37,159 @@ has no vector search at all — this is part of the training-data
 extension surface (SURVEY.md §6), composing the r10 change feed with
 the r9 nprobe router exactly as VERDICT r10 next-4 demanded.
 
-Scale: every driver-side structure here is k×d (centroids) or
-O(commit churn) (the refresh batch boundary); assignments and search
-candidates stay distributed. Search cost is bounded by the probed
+Scale: maintenance keeps every driver-side structure at k×d
+(centroids) or O(commit churn) (the refresh batch boundary);
+assignments stay distributed. Search cost is bounded by the probed
 cells' occupancy — the same economics as ``topk_ivf`` but with the
-assignment scan amortized into the table instead of recomputed.
+assignment scan amortized into the table instead of recomputed. Search
+has two routes (:meth:`IvfIndex.search`): an index whose assignment
+table is below ``_RESIDENT_MAX_BYTES`` of parquet (24 MiB, measured)
+is served from driver-resident posting lists — loaded once per table
+version, ~2.2x the parquet bytes in driver memory per resident index —
+reading the query batch eagerly at ``search()`` time and running one
+Spark job per search; at or above the bound, or with
+``where``/``rerank``/an explicit ``prune_files``, candidates stay
+distributed (the join plan, probe-pruned from ``_PRUNE_MIN_BYTES``).
+The resident route pays most when many searches run per committed
+table version: a commit before every search makes each search reload
+the whole table.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
+from collections import OrderedDict
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType,
+    StructField,
+)
 
 from ..plans.catalog import register
 from ..tables import load
-from .similarity import _COS_SQL, cosine
+from .similarity import _COS_SQL, SQ8_SCALE, cosine
 from .upsert import ParquetMergeTable
+
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+_NUMERIC = _INTEGRAL + (FloatType, DoubleType)
+
+# Driver-resident posting lists for the small-index search route:
+# (applicationId, index root) -> ((version, id col, vec col, store),
+# _Postings | None), latest version only, at most a few indexes per
+# process (each below IvfIndex._RESIDENT_MAX_BYTES of parquet).
+# _RESIDENT_LOCK guards the dicts only; a load runs under its key's
+# own lock, so other indexes and cache hits never wait behind it.
+_RESIDENT: OrderedDict = OrderedDict()
+_RESIDENT_MAX_INDEXES = 4
+_RESIDENT_LOCK = threading.Lock()
+_LOAD_LOCKS: dict = {}
+_CHUNK = 1 << 16  # rows per double-precision temporary at load time
+
+
+@dataclass
+class _Postings:
+    """One assignment-table version as per-cell posting lists: cell c's
+    members are rows ``range(*spans[c])`` of ``ids``/``vecs``/``norms``.
+    ``vecs`` keeps the STORED element type (the raw float vectors, or
+    the int8 codes of an sq8 index); ``norms`` is sqrt(Σ x²) of the
+    double view :meth:`doubles` — the verify's corpus-side factor."""
+
+    spans: dict
+    ids: "np.ndarray"
+    vecs: "np.ndarray"
+    norms: "np.ndarray | None"
+    sq8: bool
+    id_field: StructField
+
+    def doubles(self, rows) -> "np.ndarray":
+        """The double view the distributed plan scores: the raw vector
+        cast to double, or the sq8 grid point q / 127."""
+        import numpy as np
+
+        v = self.vecs[rows].astype(np.float64)
+        return v / float(SQ8_SCALE) if self.sq8 else v
+
+
+def _matrix(vec) -> "np.ndarray | None":
+    """An Arrow list<number> array as an (n, d) NumPy matrix of its
+    element type, or None when a vector is null, holds a null, or the
+    lengths differ (Spark's zip_with pads those with NULL)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    flat = vec.flatten()
+    if vec.null_count or flat.null_count:
+        return None
+    if len(vec) == 0:
+        return np.empty((0, 0))
+    lens = pc.list_value_length(vec).to_numpy()
+    if (lens != lens[0]).any():
+        return None
+    return flat.to_numpy(zero_copy_only=False).reshape(len(vec), int(lens[0]))
+
+
+def _lfold(p: "np.ndarray") -> "np.ndarray":
+    """Σ over the last axis exactly as Spark's ``aggregate(arr, 0.0D,
+    (acc, x) -> acc + x)``: a strict left fold from 0.0. np.cumsum adds
+    in order; np.sum/np.dot re-associate and drift in the last bits.
+    Consumes ``p``."""
+    import numpy as np
+
+    if p.shape[-1] == 0:
+        return np.zeros(p.shape[:-1])
+    p[..., 0] += 0.0
+    return np.cumsum(p, axis=-1, out=p)[..., -1]
+
+
+def _round4(x: "np.ndarray") -> "np.ndarray":
+    """Spark's ``round(x, 4)`` on doubles, bit for bit:
+    ``BigDecimal.valueOf(x).setScale(4, HALF_UP).doubleValue()`` —
+    HALF_UP on the double's decimal string, NaN/±inf unchanged, a zero
+    result always +0.0. Comparing |x| with the doubles nearest to the
+    decimal bounds m/10⁴ and the midpoint (2m+1)/(2·10⁴) decides the
+    same way the decimal string does (float division of exact integers
+    is correctly rounded). Exact for |x| < 2⁵³/10⁴; cosines lie in
+    [-1, 1]."""
+    import numpy as np
+
+    out = np.array(x, dtype=np.float64)
+    fin = np.isfinite(out)
+    a = np.abs(out[fin])
+    m = np.floor(a * 1e4)
+    m -= m / 1e4 > a
+    m += (m + 1) / 1e4 <= a
+    m += a >= (2 * m + 1) / 2e4
+    r = m / 1e4
+    out[fin] = np.where((out[fin] < 0) & (m > 0), -r, r)
+    return out
+
+
+def _cos_round4(q, vecs, q_norm, v_norms) -> "np.ndarray | None":
+    """round(cosine(q, v), 4) for every row v of ``vecs`` with the
+    distributed verify's exact arithmetic (double products, left-fold
+    sums, sqrt norms), or None if a denominator is zero — Spark raises
+    DIVIDE_BY_ZERO there under ANSI and yields NULL otherwise, so the
+    caller hands such inputs to the distributed plan."""
+    den = q_norm * v_norms
+    if (den == 0).any():
+        return None
+    return _round4(_lfold(vecs * q) / den)
+
+
+def _rank(sims, ids, nan_first: bool) -> "np.ndarray":
+    """Indices ordering ``sims`` descending, ties by ``ids`` ascending.
+    Spark orders NaN above every double: first in the search window's
+    ``cos_sim DESC``, last in the probe's ascending ``-sim`` sort."""
+    import numpy as np
+
+    nan = np.isnan(sims)
+    return np.lexsort((ids, -np.where(nan, 0.0, sims),
+                       ~nan if nan_first else nan))
 
 
 class IvfIndex:
@@ -417,6 +551,22 @@ class IvfIndex:
     # 4/16 files at nprobe=4 of 16 cells
     _PRUNE_MIN_BYTES = 256 * 1024 * 1024
 
+    # below this many assignment-table bytes the auto route answers from
+    # driver-resident posting lists. Measured with
+    # tools/bench_resident_search.py (64-d float32, 16 cells, 4-core
+    # host, 2g driver heap), p50 ms of a top-10 search, resident vs
+    # distributed, two runs per size:
+    #   table (vectors)  many searches per version  commit before each
+    #   12 MiB (100k)    110/1150,  68/804          797/1220,  582/749
+    #   24 MiB (200k)    107/1138, 158/1690        1101/1181,  915/1243
+    #   48 MiB (400k)    109/1592, 150/1840        1907/1661, 1690/1828
+    # With a commit before every search the resident route reloads the
+    # whole table each time. The cap is the largest measured size at
+    # which it lost in no run. Posting lists take ~2.2x the parquet
+    # bytes (52 MiB at the cap), so the driver pins at most
+    # _RESIDENT_MAX_INDEXES x that.
+    _RESIDENT_MAX_BYTES = 24 * 1024 * 1024
+
     def search(self, queries: DataFrame, k: int,
                nprobe: int = 1,
                prune_files: bool | None = None,
@@ -424,23 +574,46 @@ class IvfIndex:
                rerank: "ParquetMergeTable | None" = None,
                rerank_factor: int = 4) -> DataFrame:
         """ANN top-k from the PERSISTED index: each query probes the
-        union of its ``nprobe`` nearest cells (bounded k-row window
-        per query), candidates come from one equi-join on ``cell``
-        against the assignment table, verify is exact cosine on the
-        candidates only. Output schema matches ``topk_ivf``
-        (query_id, neighbor_id, cos_sim, rk).
+        union of its ``nprobe`` nearest cells, candidates are those
+        cells' members, verify is exact cosine on the candidates only.
+        Output schema matches ``topk_ivf`` (query_id, neighbor_id,
+        cos_sim, rk).
 
-        ``prune_files``: the probed-cell union (bounded by the
-        codebook size — driver-scale by construction) routes the
-        candidate scan through ``read_point("cell", cells)``, so zone
+        Routing. Default ``prune_files=None`` = AUTO, decided by a
+        metadata-only probe of the assignment table's manifest bytes:
+
+        - below :attr:`_RESIDENT_MAX_BYTES`, every file's size known,
+          and no ``where`` or ``rerank``: the RESIDENT route. The
+          table's posting lists (ids, stored vectors, norms per cell)
+          are loaded into driver memory once per committed table
+          version and cached per (application, index root); every
+          ``merge``/``refresh``/``split_cell``/``optimize`` commits a
+          new version, so a changed index is reloaded, never served
+          stale. Per search the query batch is read EAGERLY — at
+          ``search()`` time, one Spark job — then probed and scored in
+          NumPy with the distributed plan's exact arithmetic, and the
+          top-k comes back as a local DataFrame of the same schema.
+          Results are bit-identical to the distributed plan
+          (test-pinned). The bound is the largest measured size at
+          which the route did not lose even with a commit (and so a
+          reload) before every search; it also bounds driver memory
+          (posting lists take ~2.2x the parquet bytes). Inputs the
+          NumPy kernel does not reproduce (null or ragged vectors,
+          non-integer ids, a zero cosine denominator — an error under
+          ANSI, NULL otherwise) fall back to the distributed plan.
+        - otherwise the distributed plan, with ``prune_files=True``
+          from :attr:`_PRUNE_MIN_BYTES` of manifest bytes up.
+
+        The DISTRIBUTED plan (explicit ``prune_files=True/False``,
+        ``where``, ``rerank``, or the large-index regime): the probed
+        cells come from a bounded k-row window per query, candidates
+        from one equi-join on ``cell`` against the assignment table,
+        ranking is a per-query window. ``prune_files=True`` routes the
+        candidate scan through ``read_point("cell", cells)`` (the
+        probed-cell union is bounded by the codebook size), so zone
         maps + the Bloom file index skip every assignment file holding
-        no probed cell (see :meth:`optimize`). Identical results
-        either way. Default ``None`` = AUTO: prune only when the
-        assignment table's manifest bytes pass
-        :attr:`_PRUNE_MIN_BYTES` — below that, the prune's two extra
-        driver jobs cost more than the scan they save (measured).
-        Force True/False to override (False also for corpus-sized
-        query batches that probe every cell anyway).
+        no probed cell (see :meth:`optimize`); ``False`` scans the
+        whole table. Identical results either way.
 
         ``where`` (r12): FILTERED ANN — a Column or SQL string over
         the assignment table's passthrough columns (the metadata the
@@ -464,17 +637,8 @@ class IvfIndex:
         scores and near-exact ranking at ~(nprobe/C + k'/corpus) of
         brute-force cost; with float storage it is a no-op ranking
         with extra I/O (skip it there)."""
-        from pyspark.sql import Window
-
-        from .similarity import ivf_assign
-
-        cents = self._cents_from_meta(self.meta())
-        q = ivf_assign(
-            queries.select(F.col(self.id_col).alias("query_id"),
-                           F.col(self.vec_col).alias("q_emb")),
-            cents, vec_col="q_emb", nprobe=max(1, nprobe),
-            explode=True,
-        )
+        m = self.meta()
+        cents = self._cents_from_meta(m)
         if prune_files is None:
             # metadata-only size probe: per-file bytes off the lazy
             # zone arrays, zero Spark jobs
@@ -483,6 +647,35 @@ class IvfIndex:
                 av, [], with_bytes=True, with_rows=False)
             total_b = sum(b for b in bytes_a if isinstance(b, int))
             prune_files = total_b >= self._PRUNE_MIN_BYTES
+            # a file with no recorded size could hold any amount of
+            # data: only a fully sized table is loaded into the driver
+            sized = all(isinstance(b, int) for b in bytes_a)
+            if (sized and total_b < self._RESIDENT_MAX_BYTES
+                    and where is None and rerank is None):
+                out = self._resident_search(
+                    queries, k, nprobe, av, cents, m.get("store", "float"))
+                if out is not None:
+                    return out
+        return self._distributed_search(
+            queries, k, nprobe, cents, prune_files, where, rerank,
+            rerank_factor)
+
+    def _distributed_search(self, queries: DataFrame, k: int, nprobe: int,
+                            cents: dict[int, list[float]],
+                            prune_files: bool, where,
+                            rerank: "ParquetMergeTable | None",
+                            rerank_factor: int) -> DataFrame:
+        """The Spark plan behind :meth:`search` (see its docstring)."""
+        from pyspark.sql import Window
+
+        from .similarity import _cosine_spark_sql, ivf_assign
+
+        q = ivf_assign(
+            queries.select(F.col(self.id_col).alias("query_id"),
+                           F.col(self.vec_col).alias("q_emb")),
+            cents, vec_col="q_emb", nprobe=max(1, nprobe),
+            explode=True,
+        )
         if prune_files:
             cells = [r["cell"] for r in
                      q.select("cell").distinct().collect()]
@@ -495,8 +688,6 @@ class IvfIndex:
         c = base.select(
             F.col(self.id_col).alias("neighbor_id"),
             self._stored_vec().alias("c_emb"), "cell")
-        from .similarity import _cosine_spark_sql
-
         pairs = (q.join(c, "cell")
                  .filter(F.col("query_id") != F.col("neighbor_id"))
                  .select("query_id", "q_emb", "neighbor_id",
@@ -531,6 +722,174 @@ class IvfIndex:
         return (exact.withColumn(
             "rk", F.row_number().over(w).cast("bigint"))
             .filter(F.col("rk") <= k))
+
+    # ---- resident route (small indexes) ------------------------------
+
+    def _postings(self, version: int, store: str) -> "_Postings | None":
+        """The cached posting lists of assignment-table ``version``
+        (loaded on first use), or None when the table cannot be served
+        residently. One entry per (application, index root), holding
+        only the latest version seen."""
+        app = self.spark.sparkContext.applicationId
+        key = (app, self.root)
+        sig = (version, self.id_col, self.vec_col, store)
+
+        def cached():
+            hit = _RESIDENT.get(key)
+            if hit is not None and hit[0] == sig:
+                _RESIDENT.move_to_end(key)
+                return hit
+            return None
+
+        with _RESIDENT_LOCK:
+            hit = cached()
+            load_lock = _LOAD_LOCKS.setdefault(key, threading.Lock())
+        if hit is not None:
+            return hit[1]
+        with load_lock:
+            with _RESIDENT_LOCK:
+                hit = cached()
+            if hit is not None:  # loaded while this thread waited
+                return hit[1]
+            post = self._load_postings(version, store)
+            with _RESIDENT_LOCK:
+                _RESIDENT[key] = (sig, post)
+                _RESIDENT.move_to_end(key)
+                for stale in [k_ for k_ in _RESIDENT if k_[0] != app]:
+                    del _RESIDENT[stale]
+                while len(_RESIDENT) > _RESIDENT_MAX_INDEXES:
+                    _RESIDENT.popitem(last=False)
+                for k_ in [k_ for k_, lk in _LOAD_LOCKS.items()
+                           if k_ not in _RESIDENT and not lk.locked()]:
+                    del _LOAD_LOCKS[k_]
+        return post
+
+    def _load_postings(self, version: int, store: str) -> "_Postings | None":
+        """Read assignment-table ``version`` through :meth:`read`
+        (deletion vectors and the storage backend honoured) into
+        per-cell NumPy posting lists via Arrow."""
+        import numpy as np
+        import pyarrow.compute as pc
+
+        if version == 0:
+            return None
+        vcol = self._Q8_COL if store == "sq8" else self.vec_col
+        snap = self.assign.read(version=version).select(
+            self.id_col, "cell", vcol)
+        id_field = snap.schema[self.id_col]
+        if not isinstance(id_field.dataType, _INTEGRAL):
+            return None
+        t = snap.toArrow()
+        ids = t.column(0).combine_chunks()
+        cells = t.column(1).combine_chunks()
+        # a null id never passes `query_id != neighbor_id` and a null
+        # cell never joins: such rows cannot appear in any answer
+        keep = pc.and_(ids.is_valid(), cells.is_valid())
+        vec = t.column(2).combine_chunks().filter(keep)
+        vecs = _matrix(vec)
+        if vecs is None or len(vecs) == 0:
+            return None
+        ids = ids.filter(keep).to_numpy().astype(np.int64)
+        cells = cells.filter(keep).to_numpy().astype(np.int64)
+        order = np.argsort(cells, kind="stable")
+        ids, cells, vecs = ids[order], cells[order], vecs[order]
+        uniq, starts = np.unique(cells, return_index=True)
+        ends = np.append(starts[1:], len(cells))
+        post = _Postings(
+            spans={int(c): (int(a), int(b))
+                   for c, a, b in zip(uniq, starts, ends)},
+            ids=ids, vecs=vecs, sq8=store == "sq8", norms=None,
+            id_field=id_field)
+        # bounded temporaries: the double view is built a chunk at a time
+        post.norms = np.concatenate([
+            np.sqrt(_lfold(np.square(post.doubles(slice(i, i + _CHUNK)))))
+            for i in range(0, len(ids), _CHUNK)])
+        return post
+
+    def _resident_search(self, queries: DataFrame, k: int, nprobe: int,
+                         version: int, cents: dict[int, list[float]],
+                         store: str) -> DataFrame | None:
+        """:meth:`search` from the driver-resident posting lists, or
+        None when these inputs need the distributed plan."""
+        import numpy as np
+        import pyarrow as pa
+        from pyspark.sql.types import ArrayType, StructType
+
+        if not cents:
+            return None
+        post = self._postings(version, store)
+        if post is None:
+            return None
+        qsel = queries.select(F.col(self.id_col).alias("query_id"),
+                              F.col(self.vec_col).alias("q_emb"))
+        q_field, v_field = qsel.schema.fields
+        if not (isinstance(q_field.dataType, _INTEGRAL)
+                and isinstance(v_field.dataType, ArrayType)
+                and isinstance(v_field.dataType.elementType, _NUMERIC)):
+            return None
+        t = qsel.toArrow()  # the route's one Spark job
+        qid_col = t.column(0).combine_chunks()
+        valid = qid_col.is_valid()
+        qvecs = _matrix(t.column(1).combine_chunks().filter(valid))
+        keys = sorted(cents)
+        cmat = np.array([cents[c] for c in keys], dtype=np.float64)
+        d = post.vecs.shape[1]
+        if qvecs is None or (len(qvecs) and (
+                qvecs.shape[1] != d or cmat.shape[1] != d)):
+            return None
+        qids = qid_col.filter(valid).to_numpy().astype(np.int64)
+        qv = qvecs.astype(np.float64)
+        cell_ids = np.array(keys, dtype=np.int64)
+        q_norm = np.sqrt(_lfold(np.square(qv)))
+        c_norm = np.sqrt(_lfold(np.square(cmat)))
+        n_probe = max(1, nprobe)
+        found: dict[int, list[tuple]] = {}
+        for i, qid in enumerate(qids.tolist()):
+            # probe: -round(cos, 4) ascending, ties to the lower cell,
+            # NaN last — array_sort over the (neg_sim, cell) structs
+            sims = _cos_round4(qv[i], cmat, q_norm[i], c_norm)
+            if sims is None:
+                return None
+            probe = cell_ids[_rank(sims, cell_ids, nan_first=False)]
+            rows = np.concatenate(
+                [np.arange(*post.spans[c]) for c in probe[:n_probe].tolist()
+                 if c in post.spans] or [np.empty(0, dtype=np.int64)])
+            rows = rows[post.ids[rows] != qid]
+            sims = _cos_round4(qv[i], post.doubles(rows), q_norm[i],
+                               post.norms[rows])
+            if sims is None:
+                return None
+            # duplicate query ids pool their candidates, like the
+            # window partitioned by query_id
+            found.setdefault(qid, []).append((post.ids[rows], sims))
+        out_q, out_n, out_s, out_r = [], [], [], []
+        for qid in sorted(found):
+            nids = np.concatenate([n for n, _ in found[qid]])
+            sims = np.concatenate([s for _, s in found[qid]])
+            top = _rank(sims, nids, nan_first=True)[:max(k, 0)]
+            out_q.append(np.full(len(top), qid, dtype=np.int64))
+            out_n.append(nids[top])
+            out_s.append(sims[top])
+            out_r.append(np.arange(1, len(top) + 1, dtype=np.int64))
+
+        def cat(parts, dtype):
+            return (np.concatenate(parts) if parts
+                    else np.empty(0, dtype=dtype))
+
+        schema = StructType([
+            StructField("query_id", q_field.dataType, q_field.nullable),
+            StructField("neighbor_id", post.id_field.dataType,
+                        post.id_field.nullable),
+            StructField("cos_sim", DoubleType(), True),
+            StructField("rk", LongType(), False),
+        ])
+        table = pa.table({
+            "query_id": cat(out_q, np.int64),
+            "neighbor_id": cat(out_n, np.int64),
+            "cos_sim": cat(out_s, np.float64),
+            "rk": cat(out_r, np.int64),
+        })
+        return self.spark.createDataFrame(table, schema=schema)
 
     # ---- occupancy / split maintenance ------------------------------
 
@@ -736,7 +1095,9 @@ def ann_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 neighbors for the first 10 vectors from the PERSISTED
     index (build → optimize → search), nprobe=2 — the maintained-index
     read path, differentially checked against the same window+join
-    arithmetic DuckDB replays from the raw table."""
+    arithmetic DuckDB replays from the raw table. The demo index is
+    small, so the auto route answers from the driver-resident posting
+    lists: this entry is the oracle check of the NumPy kernel."""
     ix = _demo_index(spark, sf_dir)
     q = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10)
     return ix.search(q, k=5, nprobe=_DEMO_NPROBE)
@@ -748,10 +1109,13 @@ def ann_index_search_bigbook(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND query probing both route through the one-row-broadcast
     codebook plane; the oracle replays the identical arithmetic, so a
     transport-plane defect lands as a third-party value mismatch, not
-    just a pytest equivalence failure."""
+    just a pytest equivalence failure. ``prune_files=False`` pins the
+    distributed plan: the demo index is far below the resident-route
+    bound, which would otherwise answer in NumPy and bypass the
+    broadcast plane this entry exists to exercise."""
     ix = _demo_index(spark, sf_dir, n_cells=_BIG_CELLS)
     q = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10)
-    return ix.search(q, k=5, nprobe=_DEMO_NPROBE)
+    return ix.search(q, k=5, nprobe=_DEMO_NPROBE, prune_files=False)
 
 
 def _search_oracle_sql(cells: int, nprobe: int) -> str:

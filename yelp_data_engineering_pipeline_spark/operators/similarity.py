@@ -27,6 +27,9 @@ in double precision — no Python UDF, no collect.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -440,16 +443,16 @@ def _cell_structs_sql(vec_frag: str, cents: dict[int, list[float]]) -> str:
     Column chatter per search/assign construction (measured ~0.3 s per
     ``ivf_assign`` call at 8 cells × 64 dims). Same expression tree,
     bit-identical values — pinned by
-    tests/test_plans.py::test_cell_structs_sql_twin_matches_column_form."""
+    tests/test_plans.py::test_ivf_kernel_sql_twin_matches_column_form."""
     from ..functions.bulklit import sql_double_matrix
 
     keys = sorted(cents)
     mat = sql_double_matrix([[float(x) for x in cents[c]] for c in keys])
     ids = "array(" + ",".join(f"{int(c)}L" for c in keys) + ")"
-    cos = _cosine_sql_frag(vec_frag, "element_at(_cb, i)")
+    cos = _cosine_sql_frag(vec_frag, f"element_at({mat}, i)")
     return (
         f"transform(sequence(1, {len(keys)}), i -> struct("
-        f"-round({cos.replace('_cb', mat)}, 4) AS neg_sim, "
+        f"-round({cos}, 4) AS neg_sim, "
         f"CAST(element_at({ids}, i) AS BIGINT) AS cell))"
     )
 
@@ -458,7 +461,13 @@ def _cell_structs_sql(vec_frag: str, cents: dict[int, list[float]]) -> str:
 # nprobe, codebook CONTENT) — an EXPRESSION memo like the LSH tag
 # memo above (unevaluated Catalyst trees, never results); serving
 # loops rebuild the identical kernel every search call otherwise.
-_CELL_EXPR_CACHE: dict = {}
+# A small LRU: every split_cell or re-build yields a new codebook
+# (a new key holding up to _CODEBOOK_LITERAL_MAX_VALUES literals), so
+# an unbounded memo would keep one dead expression per codebook
+# version for the life of the process.
+_CELL_EXPR_CACHE: OrderedDict = OrderedDict()
+_CELL_EXPR_CACHE_MAX = 16
+_CELL_EXPR_LOCK = threading.Lock()
 
 
 def _ivf_kernel_expr(vec_col: str, cents: dict[int, list[float]],
@@ -476,9 +485,11 @@ def _ivf_kernel_expr(vec_col: str, cents: dict[int, list[float]],
     sess = SparkSession.getActiveSession()
     if sess is not None:
         key = (sess.sparkContext.applicationId,) + key[1:]
-    cached = _CELL_EXPR_CACHE.get(key)
-    if cached is not None:
-        return cached
+    with _CELL_EXPR_LOCK:
+        cached = _CELL_EXPR_CACHE.get(key)
+        if cached is not None:
+            _CELL_EXPR_CACHE.move_to_end(key)
+            return cached
     structs = _cell_structs_sql(f"`{vec_col}`", cents)
     if nprobe is None:
         text = f"array_min({structs})['cell']"
@@ -488,7 +499,10 @@ def _ivf_kernel_expr(vec_col: str, cents: dict[int, list[float]],
             f"s -> s['cell'])"
         )
     parsed = F.expr(text)
-    _CELL_EXPR_CACHE[key] = parsed
+    with _CELL_EXPR_LOCK:
+        _CELL_EXPR_CACHE[key] = parsed
+        while len(_CELL_EXPR_CACHE) > _CELL_EXPR_CACHE_MAX:
+            _CELL_EXPR_CACHE.popitem(last=False)
     return parsed
 
 

@@ -43,9 +43,10 @@ from ..schemas import HEALTH_SCORE_PATTERN, PRICE_PATTERN, WEEKDAY_ORDER
 # ~millions of rows, identical results — equivalence tested). The
 # business table keys on the scraped string id → two-phase range
 # scheme; the five child tables lead with the dense business_id
-# surrogate → the fixed-grid scheme (ONE eager count job per table
-# instead of sample+persist+count — r13, guide §1.2; ids identical,
-# goldens + oracle sweep pin it).
+# surrogate → the fixed-grid scheme (no sample, no persist and no
+# eager job: the per-cell offsets are a lazy JVM-side window the
+# caller's action evaluates — r14, guide §1.2; ids identical, goldens
+# + oracle sweep pin it).
 _dense_ids = dense_ids
 _child_dense_ids = dense_ids_grid_long
 
@@ -154,14 +155,15 @@ def normalize(results: DataFrame) -> dict[str, DataFrame]:
             oh, "business_id", "weekday_id", "open_time", "close_time"
         ).select("id", "business_id", "weekday_id", "open_time", "close_time")
 
-    # The five child tables each pay an EAGER per-cell count job at
-    # plan-construction time (dense_ids_grid_long — operators/ids.py;
-    # the rank window itself runs lazily in the caller's action). They
-    # are mutually independent once ``keyed`` exists, so their
-    # construction overlaps in a small pool (optimization guide §2.6);
-    # the shared ``keyed`` cache is filled once under Spark's block
-    # locks. Results are byte-identical to the sequential build
-    # (goldens pin them).
+    # The five child tables plan lazily: dense_ids_grid_long
+    # (operators/ids.py) runs no job at plan-construction time — its
+    # per-cell offsets are a broadcast running-sum window the caller's
+    # action evaluates, so each child action reads its input subtree
+    # twice (counts build + probe side), both off the shared ``keyed``
+    # cache. The plans are mutually independent once ``keyed`` exists,
+    # so the pool below only overlaps their driver-side construction
+    # (py4j analysis), not Spark jobs. Results are byte-identical to
+    # the sequential build (goldens pin them).
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=5) as pool:
