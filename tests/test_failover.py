@@ -35,9 +35,9 @@ from yelp_data_engineering_pipeline_spark.streaming.ingest import (
 SCHEMA = "id long, p string, v long"
 
 
-def _mk(spark, root, storage="posix"):
+def _mk(spark, root):
     t = ParquetMergeTable(spark, str(root), key="id",
-                          partition_by="p", storage=storage)
+                          partition_by="p")
     t.merge(spark.createDataFrame(
         [(1, "a", 10), (2, "a", 20), (3, "b", 30)], SCHEMA))   # v1
     t.merge(spark.createDataFrame(
@@ -72,13 +72,13 @@ def test_fence_seals_table_reads_survive(spark, tmp_path):
 
 
 def test_fence_object_mode_late_writer(spark, tmp_path):
-    """Object-mode shape of the race: writer A holds a handle opened
+    """The late-writer race: writer A holds a handle opened
     before the fence; the fence lands through handle B; A's commit
     resolves its parent from the head inside the transaction and is
     refused."""
-    a = _mk(spark, tmp_path / "t", storage="object")
+    a = _mk(spark, tmp_path / "t")
     b = ParquetMergeTable(spark, str(tmp_path / "t"), key="id",
-                          partition_by="p", storage="object")
+                          partition_by="p")
     b.fence()
     with pytest.raises(TableFencedError):
         a.merge(spark.createDataFrame([(9, "a", 90)], SCHEMA),

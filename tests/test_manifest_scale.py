@@ -59,7 +59,7 @@ def _publish_delta(t: ParquetMergeTable, v: int, parent: int,
 
 def _fresh(spark, root) -> ParquetMergeTable:
     """A cold handle: empty _mcache/_fcache, nothing resolved."""
-    return ParquetMergeTable(spark, str(root), key="id", storage="object")
+    return ParquetMergeTable(spark, str(root), key="id")
 
 
 def test_checkpoint_externalizes_and_resolves_exactly(spark, tmp_path):
@@ -186,7 +186,7 @@ def test_real_table_through_externalized_checkpoints(spark, tmp_path):
     ParquetMergeTable._DV_INLINE_TOTAL_MAX = 0
     try:
         t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                              partition_by="p", storage="object")
+                              partition_by="p")
         t.merge(spark.createDataFrame(
             [(i, chr(97 + i % 4), i) for i in range(40)],
             "id long, p string, v long"))
@@ -227,7 +227,7 @@ def test_dv_sidecar_externalization_and_zero_rewrite_carry(spark, tmp_path):
     import json as _json
 
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          partition_by="p", storage="object")
+                          partition_by="p")
     rows = spark.range(0, 10_000).selectExpr(
         "id", "case when id < 8000 then 'a' else 'b' end as p",
         "id * 2 as v",
@@ -282,7 +282,7 @@ def test_dv_sidecar_survives_while_referenced_and_clone_rekeys(
     so a source vacuum can't break the clone (deep-clone contract);
     restore revives the DV state through the refs."""
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          partition_by="p", storage="object")
+                          partition_by="p")
     t.merge(spark.range(0, 10_000).selectExpr(
         "id", "case when id < 8000 then 'a' else 'b' end as p",
         "id * 2 as v").repartitionByRange(4, "id")

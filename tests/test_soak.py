@@ -1,6 +1,6 @@
 """Lakehouse aging soak (VERDICT r9 next-4): the table lifecycle the
 suite never had end-to-end — ~50 STREAMED CDC micro-batches into one
-object-mode table with DV-writing keyed deletes (auto_compact_dv),
+table with DV-writing keyed deletes (auto_compact_dv),
 periodic ``compact(target_mb=)`` and ``vacuum`` interleaved — then
 assert the invariants that keep a continuously-ingesting 100 TB table
 healthy: bounded live metadata (manifests + sidecars), DV density
@@ -89,7 +89,7 @@ def run_soak(spark, base: str, n_chunks: int = 5,
     stream_schema = CDC_SCHEMA
     batch_no = 0
     maint = ParquetMergeTable(spark, root, key="id", partition_by="p",
-                              storage="object", auto_compact_dv=0.05)
+                              auto_compact_dv=0.05)
     # time BOTH commit shapes: the first micro-batch seeds via merge,
     # the rest apply via the conditional merge_into
     ParquetMergeTable.merge_into = _timed(orig_mi)
@@ -105,8 +105,7 @@ def run_soak(spark, base: str, n_chunks: int = 5,
                       .option("maxFilesPerTrigger", "1").json(in_dir))
             run_cdc_upsert_stream(
                 spark, stream, root, ckpt, key="id", ts_col="ts",
-                partition_by="p", delete_col="deleted",
-                storage="object")
+                partition_by="p", delete_col="deleted")
             # aging between chunks: a GDPR-ish DV delete (auto-compact
             # fires past the density threshold), size-targeted compact,
             # retention vacuum
@@ -155,7 +154,7 @@ def run_ann_soak(spark, base: str, n_batches: int = 50,
                  rows_per_batch: int = 40, eval_every: int = 5,
                  n_centroids: int = 8, nprobe: int = 4,
                  k: int = 5, optimize_every: int = 10,
-                 keep_last_n: int = 3, storage: str = "posix") -> dict:
+                 keep_last_n: int = 3) -> dict:
     """ANN-index aging loop (VERDICT r10 next-4, long-horizon form
     r11 next-6): a clustered embeddings table absorbs ``n_batches``
     CDC churn batches (inserts + in-cluster updates + deletes); after
@@ -193,16 +192,14 @@ def run_ann_soak(spark, base: str, n_batches: int = 50,
                 + rng.uniform(-noise, noise) for i in range(D)]
 
     rng = random.Random(42)
-    # ``storage="object"`` (VERDICT r12 next-6): both the corpus and
-    # the index's assignment table + meta sidecar age under the
-    # no-POSIX object-store commit protocol (conditional-PUT commits,
-    # staged-object vacuum grace) — the deployment a 100 TB index
-    # actually runs on
+    # both the corpus and the index's assignment table + meta sidecar
+    # age under the conditional-PUT commit protocol (staged-object
+    # vacuum grace) — the deployment a 100 TB index actually runs on
     corpus = ParquetMergeTable(spark, os.path.join(base, "corp"),
-                               key="vec_id", storage=storage)
+                               key="vec_id")
     corpus.merge(spark.createDataFrame(
         [(i, vec(rng, i % D)) for i in range(64)], schema))
-    ix = IvfIndex(spark, os.path.join(base, "ix"), storage=storage)
+    ix = IvfIndex(spark, os.path.join(base, "ix"))
     ix.build(corpus, n_centroids=n_centroids)
     ix.optimize(target_files=n_centroids)
 
@@ -313,7 +310,7 @@ def test_cdc_soak_bounded_metadata_and_flat_latency(spark, tmp_path):
     # correctness spine: the final state equals the CDC event algebra
     # (last-ts wins; deletes drop): spot-check one partition's rows
     maint = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                              partition_by="p", storage="object")
+                              partition_by="p")
     got = {r.id: r.v for r in maint.read().filter("p = 0").collect()}
     assert got, "partition 0 must have rows"
     assert all(v in (-1.0, 0.0) or v >= 0.0 for v in got.values())
@@ -345,22 +342,3 @@ def test_cdc_soak_bounded_metadata_and_flat_latency(spark, tmp_path):
     assert plan2["clustering"]["id"]["avg_overlap"] < 0.5, plan2
     assert not any(a.startswith("rezorder") for a in plan2["actions"]), plan2
     assert maint.read().count() == rows_before
-
-
-def test_ann_index_soak_object_store(spark, tmp_path):
-    """VERDICT r12 next-6: the ANN index aging loop under
-    storage="object" — the assignment table, its meta sidecar and the
-    maintenance cadence all live on the no-POSIX commit protocol
-    (conditional-PUT log objects, staged vacuum grace), like the CDC
-    soak does. Same invariants as the posix run, plus the log-object
-    bound that matters on an object store (every commit is a PUT;
-    retention must reference-count them down)."""
-    rep = run_ann_soak(spark, str(tmp_path), storage="object")
-    assert rep["batches"] >= 50
-    assert rep["min_recall"] >= 0.9, rep
-    assert rep["full_builds"] == 1 and rep["full_reassigns"] == 0, rep
-    assert rep["index_rows"] == rep["corpus_rows"], rep
-    assert rep["assign_versions_live"] <= 4, rep
-    assert rep["assign_files"] <= 64, rep
-    assert rep["assign_log_objects"] <= 24, rep
-    assert rep["refresh_ratio"] <= 2.0, rep["refresh_s"]

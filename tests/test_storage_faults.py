@@ -70,14 +70,13 @@ class RecordingBackend(PosixBackend):
 
 
 def _t(spark, root, **kw):
-    return ParquetMergeTable(spark, str(root), key="id", storage="object",
-                             **kw)
+    return ParquetMergeTable(spark, str(root), key="id", **kw)
 
 
 def test_metadata_io_flows_through_the_seam(spark, tmp_path):
     """A full lifecycle — merge, DV delete, bloom build, constraint,
     vacuum, clone — drives every backend primitive; nothing bypasses
-    the seam for _log/constraints metadata."""
+    the seam for _log metadata."""
     b = RecordingBackend()
     t = _t(spark, tmp_path / "tbl", backend=b)
     t.merge(spark.range(0, 200).selectExpr("id", "id as v",
@@ -96,6 +95,73 @@ def test_metadata_io_flows_through_the_seam(spark, tmp_path):
         assert b.calls.get(prim, 0) > 0, (prim, b.calls)
     # clone's data bytes moved via the server-side-copy primitive
     assert b.calls.get("copy", 0) > 0
+
+
+class PausingPutBackend(PosixBackend):
+    """Holds the first manifest PUT issued while armed until the test
+    releases it: the window between a commit's write job and its
+    conditional PUT, opened on demand."""
+
+    def __init__(self):
+        import threading
+
+        self.armed = False
+        self.reached = threading.Event()
+        self.release = threading.Event()
+
+    def put_if_absent(self, path, data):
+        import re
+
+        if self.armed and re.search(r"/_log/\d+\.json$", path):
+            self.armed = False
+            self.reached.set()
+            self.release.wait(timeout=300)
+        return super().put_if_absent(path, data)
+
+
+def test_constraint_added_during_inflight_merge_is_enforced(spark,
+                                                            tmp_path):
+    """A CHECK constraint is added while a violating merge(wait=True)
+    sits between its write job and its conditional PUT. The constraint
+    is a commit, so it claims the version the merge wanted; the merge
+    loses the PUT, re-derives against the new head, is checked against
+    the new set and refused. The head never holds a violating row."""
+    import threading
+
+    from yelp_data_engineering_pipeline_spark.operators.upsert import (
+        ConstraintViolationError,
+    )
+
+    b = PausingPutBackend()
+    t = _t(spark, tmp_path / "tbl", backend=b)
+    t.merge(spark.createDataFrame([(1, 10), (2, 20)], "id long, v long"))
+    errors: list[Exception] = []
+
+    def violating_merge():
+        try:
+            t.merge(spark.createDataFrame([(3, -5)], "id long, v long"),
+                    wait=True)
+        except Exception as e:  # noqa: BLE001 — asserted below
+            errors.append(e)
+
+    b.armed = True
+    writer = threading.Thread(target=violating_merge)
+    writer.start()
+    try:
+        assert b.reached.wait(timeout=300)
+        admin = _t(spark, tmp_path / "tbl", backend=b)
+        admin.add_constraint("v_nonneg", "v >= 0")
+    finally:
+        b.release.set()
+        writer.join(timeout=300)
+    assert not writer.is_alive()
+    assert len(errors) == 1 and \
+        isinstance(errors[0], ConstraintViolationError), errors
+    assert t.constraints() == {"v_nonneg": "v >= 0"}
+    assert t.current_version() == 2
+    assert t.history()[0]["operation"] == "add_constraint"
+    assert sorted((r.id, r.v) for r in t.read().collect()) == \
+        [(1, 10), (2, 20)]
 
 
 class PhantomPutBackend(PosixBackend):
@@ -272,7 +338,7 @@ def test_memory_meta_backend_proves_seam_completeness(spark, tmp_path):
     """The strongest seam proof: run the full lifecycle with the
     metadata plane held ONLY in memory (MemoryMetaBackend). Any table
     code path that bypassed the backend — a stray open()/os.listdir on
-    _log or the constraints file — would fail loudly, because nothing
+    _log — would fail loudly, because nothing
     metadata ever touches the disk: the on-disk _log directory stays
     EMPTY while the table commits, reads, time-travels, vacuums and
     serves spark.sql."""
@@ -303,11 +369,10 @@ def test_memory_meta_backend_proves_seam_completeness(spark, tmp_path):
 
     # THE completeness assertion: disk metadata plane is empty
     assert os.listdir(os.path.join(t.root, "_log")) == []
-    assert not os.path.exists(os.path.join(t.root, "_CONSTRAINTS.json"))
 
     # a second handle sharing the backend (the "same bucket") sees it
     t2 = _t(spark, tmp_path / "tbl", backend=b)
-    assert t2.current_version() == 3
+    assert t2.current_version() == 4  # add_constraint is a commit too
     assert t2.read().count() == 291
     # and a handle WITHOUT the shared backend sees no table at all —
     # the metadata truly lives in the backend, not the filesystem
@@ -327,15 +392,14 @@ def test_memory_meta_backend_real_thread_race(spark, tmp_path):
 
     b = MemoryMetaBackend()
     root = str(tmp_path / "tbl")
-    seed = ParquetMergeTable(spark, root, key="id", storage="object",
+    seed = ParquetMergeTable(spark, root, key="id",
                              backend=b)
     seed.merge(spark.createDataFrame([(0, 0)], "id long, v long"))
     errs = []
 
     def writer(k):
         try:
-            tw = ParquetMergeTable(spark, root, key="id",
-                                   storage="object", backend=b)
+            tw = ParquetMergeTable(spark, root, key="id", backend=b)
             tw.merge(spark.createDataFrame([(k, k * 10)],
                                            "id long, v long"), wait=True)
         except Exception as e:  # noqa: BLE001
@@ -347,7 +411,7 @@ def test_memory_meta_backend_real_thread_race(spark, tmp_path):
     for th in threads:
         th.join(timeout=180)
     assert not errs
-    t = ParquetMergeTable(spark, root, key="id", storage="object",
+    t = ParquetMergeTable(spark, root, key="id",
                           backend=b)
     assert {r.id: r.v for r in t.read().collect()} == {0: 0, 1: 10, 2: 20}
     assert t.current_version() == 3
@@ -417,13 +481,13 @@ def _race_fixture(spark, tmp_path):
     )
 
     root = str(tmp_path / "tbl")
-    seed = PMT(spark, root, key="id", storage="object")
+    seed = PMT(spark, root, key="id")
     seed.merge(spark.range(0, 4000).selectExpr("id", "id * 2 as v")
                .repartitionByRange(4, "id").sortWithinPartitions("id"))
     wrapper = InterleaveOnce(os.path.join("_log", "2.json"))
-    victim = PMT(spark, root, key="id", storage="object",
+    victim = PMT(spark, root, key="id",
                  backend=wrapper)
-    racer = PMT(spark, root, key="id", storage="object")
+    racer = PMT(spark, root, key="id")
 
     counts = {id(victim): 0, id(racer): 0}
     orig = PMT._write_new_files

@@ -300,14 +300,14 @@ def test_parquet_merge_table_idempotent_reapply(spark, tmp_path):
 
 
 def test_parquet_merge_table_reader_never_sees_partial(spark, tmp_path):
-    """The version pointer only flips after the snapshot directory is
-    complete: a concurrent reader holding the OLD version keeps reading
-    the old snapshot untouched (copy-on-write, no in-place edits)."""
+    """A version only becomes visible once its manifest is created: a
+    concurrent reader holding the OLD version keeps reading the old
+    snapshot untouched (copy-on-write, no in-place edits)."""
     from yelp_data_engineering_pipeline_spark.operators.upsert import ParquetMergeTable
 
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="k")
     t.merge(spark.createDataFrame([(1, "a")], "k long, v string"))
-    old_snapshot = t.read()  # plan pinned to v=1 path
+    old_snapshot = t.read()  # plan pinned to v1's files
     t.merge(spark.createDataFrame([(1, "A2")], "k long, v string"))
     # old reader: unchanged; new reader: updated
     assert [(r.k, r.v) for r in old_snapshot.collect()] == [(1, "a")]
@@ -316,10 +316,9 @@ def test_parquet_merge_table_reader_never_sees_partial(spark, tmp_path):
 
 def test_parquet_merge_table_partition_pruned_cow(spark, tmp_path):
     """Partitioned MERGE rewrites ONLY touched partitions; untouched
-    partition files are hardlinked from the previous snapshot (same
-    inode — zero copy), and read-back is correct for both snapshots."""
-    import os
-
+    partition files are carried from the previous snapshot by manifest
+    reference (same key, same inode — zero copy), and read-back is
+    correct for both snapshots."""
     from yelp_data_engineering_pipeline_spark.operators.upsert import ParquetMergeTable
 
     root = str(tmp_path / "tbl")
@@ -331,7 +330,8 @@ def test_parquet_merge_table_partition_pruned_cow(spark, tmp_path):
         )
     )
     # batch touches ONLY partition a (update + insert) — b and c must
-    # be hardlinked, not rewritten
+    # be carried, not rewritten
+    before = _snap_inodes(t, 1)
     t.merge(
         spark.createDataFrame([(2, "a", "X2"), (3, "a", "x3")], "k long, p string, v string")
     )
@@ -343,15 +343,10 @@ def test_parquet_merge_table_partition_pruned_cow(spark, tmp_path):
         (10, "b", "y1"),
         (20, "c", "z1"),
     }
-    for part in ("p=b", "p=c"):
-        old_files = {
-            f: os.stat(os.path.join(root, "v=1", part, f)).st_ino
-            for f in os.listdir(os.path.join(root, "v=1", part))
-            if f.endswith(".parquet")
-        }
-        new_dir = os.path.join(root, "v=2", part)
-        for f, ino in old_files.items():
-            assert os.stat(os.path.join(new_dir, f)).st_ino == ino  # hardlink
+    after = _snap_inodes(t, 2)
+    untouched = {r: i for r, i in before.items() if "/p=a/" not in r}
+    assert {"p=b", "p=c"} == {t._rel_partition_dir(r) for r in untouched}
+    assert all(after[r] == i for r, i in untouched.items())  # carried
 
 
 def test_parquet_merge_table_partition_delete_and_idempotence(spark, tmp_path):
@@ -424,8 +419,9 @@ def test_merge_pruned_read_pushes_partition_filter(spark, tmp_path):
     assert m and "p" in m.group(1) and "= a" in m.group(1), plan[:500]
 
 
-@pytest.mark.parametrize("storage", ["posix", "object",
-                                     "object-sidecar"])
+# "object": the commit protocol with inline manifest metadata;
+# "object-sidecar": the same with externalized metadata (see below)
+@pytest.mark.parametrize("flavor", ["object", "object-sidecar"])
 @settings(max_examples=5, deadline=None)
 @given(
     st.lists(
@@ -449,7 +445,7 @@ def test_merge_pruned_read_pushes_partition_filter(spark, tmp_path):
     )
 )
 def test_merge_table_matches_dict_replay_model(spark, tmp_path_factory,
-                                               storage, batches):
+                                               flavor, batches):
     """Model-based MERGE check: any sequence of upsert/delete batches
     must leave the table equal to a plain dict replay (last write per
     key wins within the sequence; within a batch the dedup rule is
@@ -464,18 +460,16 @@ def test_merge_table_matches_dict_replay_model(spark, tmp_path_factory,
     from yelp_data_engineering_pipeline_spark.operators.upsert import ParquetMergeTable
 
     root = str(tmp_path_factory.mktemp("mbt") / "tbl")
-    # the third flavor fuzzes the EXTERNALIZED metadata paths (r9):
+    # the sidecar flavor fuzzes the EXTERNALIZED metadata paths (r9):
     # every full record goes to a parquet checkpoint sidecar, every
     # DV to a binary sidecar — same model, same invariants
-    forced = storage == "object-sidecar"
+    forced = flavor == "object-sidecar"
     orig_ckpt = ParquetMergeTable._CKPT_INLINE_MAX
     orig_dv = ParquetMergeTable._DV_INLINE_TOTAL_MAX
     if forced:
-        storage = "object"
         ParquetMergeTable._CKPT_INLINE_MAX = 0
         ParquetMergeTable._DV_INLINE_TOTAL_MAX = 0
-    t = ParquetMergeTable(spark, root, key="k", partition_by="p",
-                          storage=storage)
+    t = ParquetMergeTable(spark, root, key="k", partition_by="p")
     model: dict[int, tuple[str, str]] = {}
     for batch, maint in batches:
         # one candidate per key per batch: deterministic max by
@@ -562,47 +556,11 @@ def test_merge_table_matches_dict_replay_model(spark, tmp_path_factory,
 # ---------------------------------------------------------------------------
 
 
-def test_merge_table_recovers_from_orphan_snapshot(spark, tmp_path):
-    """Crash between snapshot write and pointer flip (ADVICE r6): an
-    orphan v=n+1 directory above the committed pointer must not brick
-    the table — the next merge clears it and commits normally, and a
-    replayed batch after the 'crash' is the documented no-op."""
-    import os
-
-    from yelp_data_engineering_pipeline_spark.operators.upsert import ParquetMergeTable
-
-    root = str(tmp_path / "tbl")
-    t = ParquetMergeTable(spark, root, key="k")
-    batch1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    t.merge(batch1)
-    # simulate a merge that died after writing v=2 but before the flip
-    orphan = os.path.join(root, "v=2")
-    os.makedirs(orphan)
-    with open(os.path.join(orphan, "part-00000.parquet"), "w") as f:
-        f.write("half-written garbage")
-    assert t.current_version() == 1  # pointer untouched by the 'crash'
-
-    batch2 = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
-    v = t.merge(batch2)  # replay: must NOT raise on the orphan dir
-    assert v == 2
-    assert {(r.k, r.v) for r in t.read().collect()} == {(1, "a"), (2, "B"), (3, "c")}
-    # same for the partitioned path
-    rootp = str(tmp_path / "tblp")
-    tp = ParquetMergeTable(spark, rootp, key="k", partition_by="p")
-    tp.merge(spark.createDataFrame([(1, "x", "a")], "k long, p string, v string"))
-    os.makedirs(os.path.join(rootp, "v=2", "p=x"))
-    tp.merge(spark.createDataFrame([(2, "x", "b")], "k long, p string, v string"))
-    assert {(r.k, r.p, r.v) for r in tp.read().collect()} == {
-        (1, "x", "a"),
-        (2, "x", "b"),
-    }
-
-
 def test_merge_table_partition_values_needing_escaping(spark, tmp_path):
     """Touched-partition detection must use Spark's own path encoding
     (ADVICE r6): values with spaces/colons/percents land in escaped
     directories, and NULL lands in __HIVE_DEFAULT_PARTITION__ — a
-    str()-based comparison would hardlink stale files into rewritten
+    str()-based comparison would carry stale files into rewritten
     partitions (silent duplicates) or drop NULL-partition rows."""
     from yelp_data_engineering_pipeline_spark.operators.upsert import ParquetMergeTable
 
@@ -621,7 +579,7 @@ def test_merge_table_partition_values_needing_escaping(spark, tmp_path):
         )
     )
     # touch every tricky partition: update in 'a b', 'x:y', 'p%q', and
-    # the NULL partition; leave 'plain' untouched (hardlink path)
+    # the NULL partition; leave 'plain' untouched (carry path)
     t.merge(
         spark.createDataFrame(
             [(1, "a b", "V1"), (2, "x:y", "V2"), (3, "p%q", "V3"), (4, None, "V4")],
@@ -636,7 +594,7 @@ def test_merge_table_partition_values_needing_escaping(spark, tmp_path):
         (4, None, "V4"),
         (5, "plain", "V5".lower()),
     ]
-    # no duplicates: exactly one row per key (stale hardlinks would double)
+    # no duplicates: one row per key (stale carried files would double)
     assert t.read().count() == 5
 
 
@@ -664,14 +622,14 @@ def test_merge_table_null_partition_delete_and_survivors(spark, tmp_path):
 
 
 def test_merge_table_concurrent_writers(spark, tmp_path):
-    """VERDICT r6 next-5: two racing merges. wait=False — exactly one
-    wins, the loser raises ConcurrentMergeError cleanly and the table
-    is untouched by it; wait=True — both commit and the result equals
-    a serial replay (upserts on disjoint keys commute)."""
+    """VERDICT r6 next-5: two racing merges with wait=True from real
+    threads both commit and the result equals a serial replay (upserts
+    on disjoint keys commute). The wait=False loser path is pinned
+    deterministically by tests/test_upsert_object.py::
+    test_object_mode_concurrent_writers_conditional_put."""
     import threading
 
     from yelp_data_engineering_pipeline_spark.operators.upsert import (
-        ConcurrentMergeError,
         ParquetMergeTable,
     )
 
@@ -681,32 +639,6 @@ def test_merge_table_concurrent_writers(spark, tmp_path):
 
     b1 = spark.createDataFrame([(1, "one")], "k long, v string")
     b2 = spark.createDataFrame([(2, "two")], "k long, v string")
-    # deterministic interleave: writer A grabs the lock and holds it
-    # until B has observed the conflict
-    release = threading.Event()
-    a_holds = threading.Event()
-    errors: list[Exception] = []
-
-    def writer_a():
-        lock = t._writer_lock(wait=True)
-        try:
-            a_holds.set()
-            release.wait(timeout=30)
-        finally:
-            lock.close()
-
-    ta = threading.Thread(target=writer_a)
-    ta.start()
-    assert a_holds.wait(timeout=30)
-    try:
-        t.merge(b1, wait=False)
-    except ConcurrentMergeError as e:
-        errors.append(e)
-    release.set()
-    ta.join(timeout=30)
-    assert len(errors) == 1  # loser raised cleanly...
-    assert t.current_version() == 1  # ...and never touched the table
-
     # wait=True from two real threads: both commit, serial-replay result
     def do_merge(batch):
         t.merge(batch, wait=True)
@@ -723,10 +655,10 @@ def test_merge_table_concurrent_writers(spark, tmp_path):
 
 
 def test_merge_table_vacuum_retention(spark, tmp_path):
-    """vacuum(keep_last_n) removes old snapshot directories, is
-    idempotent, and — because untouched partitions are HARDLINKED
-    forward — deleting an old version never damages files the kept
-    snapshot still references."""
+    """vacuum(keep_last_n) removes old versions, is idempotent, and —
+    because untouched partitions are CARRIED forward by reference —
+    deleting an old version never damages files the kept snapshot
+    still references."""
     import os
 
     from yelp_data_engineering_pipeline_spark.operators.upsert import ParquetMergeTable
@@ -743,14 +675,11 @@ def test_merge_table_vacuum_retention(spark, tmp_path):
     assert t.current_version() == 3
     before = sorted((r.k, r.p, r.v) for r in t.read().collect())
 
-    import os as _os
-
-    _os.makedirs(_os.path.join(root, "v=9"))  # crash orphan above pointer
     removed = t.vacuum(keep_last_n=1)
-    assert removed == [1, 2, 9]  # retention + orphan cleanup
-    assert not os.path.exists(os.path.join(root, "v=1"))
-    assert not os.path.exists(os.path.join(root, "v=2"))
-    # partition b was only ever written in v=1 and hardlinked since:
+    assert removed == [1, 2]
+    assert not os.path.exists(t._manifest_path(1))
+    assert not os.path.exists(t._manifest_path(2))
+    # partition b was only ever written in v=1 and carried since:
     # its data must still be readable from the kept snapshot
     assert sorted((r.k, r.p, r.v) for r in t.read().collect()) == before
     assert t.vacuum(keep_last_n=1) == []  # idempotent
@@ -759,9 +688,7 @@ def test_merge_table_vacuum_retention(spark, tmp_path):
 def test_merge_table_compact_small_files(spark, tmp_path):
     """compact() rewrites a partition's accumulated small files into
     one, with a byte-identical row set; untouched partitions ride
-    along by hardlink; a second compact changes nothing."""
-    import os
-
+    along by reference; a second compact changes nothing."""
     from yelp_data_engineering_pipeline_spark.operators.upsert import ParquetMergeTable
 
     root = str(tmp_path / "tbl")
@@ -779,14 +706,16 @@ def test_merge_table_compact_small_files(spark, tmp_path):
         ).repartition(4)
     )
     before = sorted((r.k, r.p, r.v) for r in t.read().collect())
-    pa = os.path.join(root, f"v={t.current_version()}", "p=a")
-    n_files_before = len([f for f in os.listdir(pa) if f.endswith(".parquet")])
-    assert n_files_before > 1
+
+    def files_in_a(v):
+        return [r for r in t._file_keys(v)
+                if t._rel_partition_dir(r) == "p=a"]
+
+    assert len(files_in_a(t.current_version())) > 1
 
     v = t.compact(partition_value="a")
     assert v == t.current_version()
-    pa2 = os.path.join(root, f"v={v}", "p=a")
-    assert len([f for f in os.listdir(pa2) if f.endswith(".parquet")]) == 1
+    assert len(files_in_a(v)) == 1
     assert sorted((r.k, r.p, r.v) for r in t.read().collect()) == before
 
     v2 = t.compact(partition_value="a")  # idempotent on the row set
@@ -795,8 +724,7 @@ def test_merge_table_compact_small_files(spark, tmp_path):
     u = ParquetMergeTable(spark, str(tmp_path / "flat"), key="k")
     u.merge(spark.createDataFrame([(i, "x") for i in range(10)], "k long, v string").repartition(6))
     u.compact()
-    flat_dir = os.path.join(str(tmp_path / "flat"), f"v={u.current_version()}")
-    assert len([f for f in os.listdir(flat_dir) if f.endswith(".parquet")]) == 1
+    assert len(u._file_keys(u.current_version())) == 1
     assert u.read().count() == 10
 
 
@@ -861,7 +789,7 @@ def test_merge_table_schema_evolution(spark, tmp_path):
     assert got == {
         1: ("a", "x", None),
         2: ("a", "x2", 9.5),
-        10: ("b", "y", None),  # hardlinked partition, column from schema
+        10: ("b", "y", None),  # carried partition, column from schema
     }
     # the widened column persists through a later narrow batch
     t.merge(
@@ -1065,9 +993,9 @@ def test_merge_table_zone_map_skipping_unpartitioned(spark, tmp_path):
 def test_merge_table_zone_map_partition_dirs_and_inheritance(spark, tmp_path, monkeypatch):
     """Partition values (living in dir names, not footers) join the
     same zone-map plane — including the NULL partition, skippable by
-    any range probe — and a pruned merge's hardlinked files INHERIT
-    their stats by inode: footers are re-read only for the touched
-    partition's new files."""
+    any range probe — and a pruned merge's carried files INHERIT
+    their stats from the manifest: footers are re-read only for the
+    touched partition's new files."""
     from yelp_data_engineering_pipeline_spark.operators.upsert import ParquetMergeTable
 
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id", partition_by="p")
@@ -1245,23 +1173,19 @@ def _clustered_table(spark, path, n=1000, files=4):
     return t
 
 
-def _snap_inodes(root, version):
+def _snap_inodes(t, version):
+    """Manifest key -> inode of the referenced file: a carried file
+    keeps both across versions; a rewritten one gets a new key."""
     import os
 
-    snap = os.path.join(str(root), f"v={version}")
-    out = {}
-    for dirpath, _, files in os.walk(snap):
-        for f in files:
-            if f.endswith(".parquet"):
-                full = os.path.join(dirpath, f)
-                out[os.path.relpath(full, snap)] = os.stat(full).st_ino
-    return out
+    return {rel: os.stat(os.path.join(t.root, rel)).st_ino
+            for rel in t._file_keys(version)}
 
 
 def test_merge_table_delete_where_metadata_only(spark, tmp_path):
     """A DELETE whose range exactly covers one clustered file is pure
     metadata: the file vanishes from the manifest, every surviving file
-    is the SAME inode hardlinked forward (no Spark write happened), and
+    is the SAME file carried forward (no Spark write happened), and
     the row set equals the SQL DELETE semantics."""
     t = _clustered_table(spark, tmp_path / "tbl")
     stats = t.stats()
@@ -1269,14 +1193,14 @@ def test_merge_table_delete_where_metadata_only(spark, tmp_path):
     # pick a middle file's exact [min, max] id range
     rel, zm = sorted(stats.items(), key=lambda kv: kv[1]["cols"]["id"]["min"])[1]
     lo, hi = zm["cols"]["id"]["min"], zm["cols"]["id"]["max"]
-    before = _snap_inodes(t.root, t.current_version())
+    before = _snap_inodes(t, t.current_version())
     expected = sorted(
         r.id for r in t.read().filter(~F.col("id").between(lo, hi)).collect()
     )
     v = t.delete_where({"id": (lo, hi)})
-    after = _snap_inodes(t.root, v)
+    after = _snap_inodes(t, v)
     assert rel not in after
-    assert after == {r: i for r, i in before.items() if r != rel}  # hardlinks
+    assert after == {r: i for r, i in before.items() if r != rel}  # carried
     assert sorted(r.id for r in t.read().collect()) == expected
     assert t.history()[0]["operation"] == "delete_where"
     # time travel: the pre-delete snapshot is intact
@@ -1288,13 +1212,13 @@ def test_merge_table_delete_where_boundary_and_nulls(spark, tmp_path):
     files; rows whose predicate column is NULL never match (SQL
     BETWEEN), so they survive any delete on that column."""
     t = _clustered_table(spark, tmp_path / "tbl")
-    before = _snap_inodes(t.root, t.current_version())
+    before = _snap_inodes(t, t.current_version())
     expected = sorted(
         r.id for r in t.read().filter(~F.col("id").between(100, 180)).collect()
     )
     v = t.delete_where({"id": (100, 180)})
-    after = _snap_inodes(t.root, v)
-    # exactly one boundary file rewritten; the other three hardlinked
+    after = _snap_inodes(t, v)
+    # exactly one boundary file rewritten; the other three carried
     kept_same = [r for r in after if r in before and after[r] == before[r]]
     assert len(kept_same) == 3
     assert sorted(r.id for r in t.read().collect()) == expected
@@ -1314,10 +1238,10 @@ def test_merge_table_update_where_semantics(spark, tmp_path):
     pass through, and the schema (dtypes included) is unchanged."""
     t = _clustered_table(spark, tmp_path / "tbl")
     schema_before = t.read().schema
-    before = _snap_inodes(t.root, t.current_version())
+    before = _snap_inodes(t, t.current_version())
     v = t.update_where({"id": (0, 99)}, {"val": F.col("val") + 1})
-    after = _snap_inodes(t.root, v)
-    # three untouched files hardlinked, one rewritten
+    after = _snap_inodes(t, v)
+    # three untouched files carried, one rewritten
     assert len([r for r in after if after.get(r) == before.get(r)]) == 3
     rows = {r.id: r.val for r in t.read().collect()}
     for i in range(1000):
@@ -1336,7 +1260,7 @@ def test_merge_table_update_where_semantics(spark, tmp_path):
 
 
 def test_merge_table_update_where_partitioned(spark, tmp_path):
-    """On a partitioned table, UPDATE hardlinks partitions the zone
+    """On a partitioned table, UPDATE carries partitions the zone
     maps prove untouched (partition dirs contribute zones) and refuses
     to assign the partition column."""
     import os
@@ -1347,9 +1271,9 @@ def test_merge_table_update_where_partitioned(spark, tmp_path):
                           partition_by="p")
     rows = [(i, i % 4, float(i)) for i in range(400)]
     t.merge(spark.createDataFrame(rows, "id long, p int, x double"))
-    before = _snap_inodes(t.root, t.current_version())
+    before = _snap_inodes(t, t.current_version())
     v = t.update_where({"p": (2, 2)}, {"x": F.col("x") * 10.0})
-    after = _snap_inodes(t.root, v)
+    after = _snap_inodes(t, v)
     untouched = [r for r in after if "p=2" not in r]
     assert untouched and all(after[r] == before.get(r) for r in untouched)
     got = {r.id: r.x for r in t.read().collect()}
@@ -1403,20 +1327,20 @@ def test_merge_table_merge_into_clause_matrix(spark, tmp_path):
 
 def test_merge_table_merge_into_partition_pruned(spark, tmp_path):
     """merge_into on a partitioned table rewrites only partitions the
-    SOURCE touches; the rest come forward as hardlinks."""
+    SOURCE touches; the rest come forward by reference."""
     from yelp_data_engineering_pipeline_spark.operators.upsert import ParquetMergeTable
 
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
                           partition_by="p")
     t.merge(spark.createDataFrame(
         [(i, i % 3, i * 1.0) for i in range(90)], "id long, p int, x double"))
-    before = _snap_inodes(t.root, t.current_version())
+    before = _snap_inodes(t, t.current_version())
     src = spark.createDataFrame(
         [(0, 0, 100.0), (3, 0, -1.0), (900, 0, 7.0)],
         "id long, p int, x double")
     v = t.merge_into(src, when_matched_update="s.x > t.x",
                      when_not_matched_insert=True)
-    after = _snap_inodes(t.root, v)
+    after = _snap_inodes(t, v)
     untouched = [r for r in after if "p=0" not in r]
     assert untouched and all(after[r] == before.get(r) for r in untouched)
     got = {r.id: r.x for r in t.read().filter(F.col("p") == 0).collect()}
@@ -1424,19 +1348,21 @@ def test_merge_table_merge_into_partition_pruned(spark, tmp_path):
 
 
 def test_merge_table_clone_zero_copy_and_divergence(spark, tmp_path):
-    """clone() forks a snapshot as a NEW table by hardlink (zero data
-    copy — inode-asserted), carries stats/schema so skipping works
-    immediately, and the two tables diverge independently; vacuuming
-    the source never breaks the clone (hardlinked data survives)."""
+    """clone() forks a snapshot as a NEW table (a deep copy under the
+    same manifest keys — no recompute, no re-encode), carries
+    stats/schema so skipping works immediately, and the two tables
+    diverge independently; vacuuming the source never breaks the clone
+    (it owns its copies)."""
     from yelp_data_engineering_pipeline_spark.operators.upsert import ParquetMergeTable
 
     t = _clustered_table(spark, tmp_path / "src")
     c = t.clone(str(tmp_path / "dev"))
     assert c.current_version() == 1
-    # zero-copy: every cloned parquet file is the same inode
-    src_ino = set(_snap_inodes(t.root, t.current_version()).values())
-    dev_ino = set(_snap_inodes(c.root, 1).values())
-    assert dev_ino == src_ino
+    # same keys, distinct physical files
+    src = _snap_inodes(t, t.current_version())
+    dev = _snap_inodes(c, 1)
+    assert dev.keys() == src.keys()
+    assert not set(dev.values()) & set(src.values())
     # stats came along: skipping works on the clone with no recompute
     assert c.stats() is not None
     pruned = c.read_where({"id": (0, 10)})
@@ -1464,7 +1390,7 @@ def test_merge_table_clone_zero_copy_and_divergence(spark, tmp_path):
 
 def test_merge_table_multi_column_partitioning(spark, tmp_path):
     """partition_by=("p","q") — nested hive layout: pruned merges
-    rewrite only touched LEAF partitions (others hardlinked), partition
+    rewrite only touched LEAF partitions (others carried), partition
     zone maps exist per level so read_where prunes on either, NULL and
     escaping-needing values work at any level, compact targets one
     leaf tuple, and DML prunes through the nested dirs."""
@@ -1487,8 +1413,7 @@ def test_merge_table_multi_column_partitioning(spark, tmp_path):
     assert t.read().count() == 300
 
     # nested dirs exist with hive escaping at level 2
-    v1 = os.path.join(str(tmp_path / "tbl"), "v=1")
-    leafs = t._leaf_partition_dirs(v1)
+    leafs = {t._rel_partition_dir(r) for r in t._file_keys(1)}
     assert any("__HIVE_DEFAULT_PARTITION__" in r for r in leafs)
     assert any("q=x y" in r for r in leafs)          # space NOT escaped
     assert any("q=b%3Ac" in r for r in leafs)        # ':' escaped
@@ -1503,13 +1428,13 @@ def test_merge_table_multi_column_partitioning(spark, tmp_path):
     assert 0 < len(qr.inputFiles()) < len(t.read().inputFiles())
 
     # pruned merge touching ONE leaf (p=1, q='a'): every other leaf
-    # hardlinked forward
-    before = _snap_inodes(t.root, t.current_version())
+    # carried forward
+    before = _snap_inodes(t, t.current_version())
     t.merge(spark.createDataFrame([(1, 1, "a", -1.0), (9001, 1, "a", -2.0)],
                                   "id long, p int, q string, x double"))
-    after = _snap_inodes(t.root, t.current_version())
+    after = _snap_inodes(t, t.current_version())
     changed = {r for r in after if after[r] != before.get(r)}
-    assert changed and all(r.startswith(os.path.join("p=1", "q=a"))
+    assert changed and all(t._rel_partition_dir(r) == "p=1/q=a"
                            for r in changed)
     got = {r.id: r.x for r in t.read().filter(
         (F.col("p") == 1) & (F.col("q") == "a")).collect()}
@@ -1539,12 +1464,15 @@ def test_merge_table_multi_column_partitioning(spark, tmp_path):
     assert t.read().count() == total - n_xy
     assert t.read().filter(F.col("q") == "x y").count() == 0
 
-    # merge_into pruned on the tuple level
-    src = spark.createDataFrame([(2, 2, "b:c", 999.0)],
+    # merge_into pruned on the tuple level; the source row carries its
+    # key's true leaf (id 2 lives in p=2/q=a — a key's partition is
+    # immutable, so a row naming another leaf would insert a duplicate)
+    src = spark.createDataFrame([(2, 2, "a", 999.0)],
                                 "id long, p int, q string, x double")
     t.merge_into(src, when_matched_update="s.x > t.x",
                  when_not_matched_insert=True)
-    assert t.read().filter(F.col("id") == 2).first().x == 999.0
+    assert [r.x for r in t.read().filter(F.col("id") == 2).collect()] == \
+        [999.0]
 
 
 def test_merge_table_check_constraints(spark, tmp_path):
@@ -1577,7 +1505,9 @@ def test_merge_table_check_constraints(spark, tmp_path):
     assert t.current_version() == v_before
     assert sorted((r.k, r.v) for r in t.read().collect()) == rows_before
     import os
-    assert not os.path.exists(t._snap_dir(v_before + 1))  # no orphan
+    # no orphan: the aborted commit's stage was discarded
+    assert sorted(os.listdir(os.path.join(t.root, "_data"))) == sorted(
+        {r.split("/")[1] for r in t._file_keys(v_before)})
 
     # a valid merge (including NULL) still commits
     t.merge(spark.createDataFrame([(4, None), (5, 7)], "k long, v long"))
@@ -1587,6 +1517,10 @@ def test_merge_table_check_constraints(spark, tmp_path):
     with pytest.raises(ConstraintViolationError):
         t.update_where({"k": (5, 5)}, {"v": F.lit(-1)})
     assert t.read().filter(F.col("k") == 5).first().v == 7
+
+    # the constraint set is manifest metadata: vacuum keeps it live
+    t.vacuum(keep_last_n=1, stage_grace_seconds=0)
+    assert t.constraints() == {"v_nonneg": "v >= 0"}
 
     # drop re-opens the gate
     t.drop_constraint("v_nonneg")
@@ -1624,15 +1558,15 @@ def test_merge_table_constraints_partitioned_pruned_commit(spark, tmp_path):
 
 
 def test_merge_table_deletion_vectors(spark, tmp_path):
-    """Merge-on-read DELETE: use_deletion_vectors hardlinks EVERY file
+    """Merge-on-read DELETE: use_deletion_vectors carries EVERY file
     (inode-asserted — nothing rewritten) and records matching row
     POSITIONS; reads anti-join the DV so results equal the CoW
     semantics; DVs merge across deletes, survive unrelated commits,
     purge when their file is rewritten, and never resurrect rows."""
     t = _clustered_table(spark, tmp_path / "tbl")  # 1000 rows, 4 files
-    before = _snap_inodes(t.root, t.current_version())
+    before = _snap_inodes(t, t.current_version())
     v = t.delete_where({"id": (100, 180)}, use_deletion_vectors=True)
-    after = _snap_inodes(t.root, v)
+    after = _snap_inodes(t, v)
     assert after == before                      # zero rewrite
     assert t.read().count() == 919
     assert t.read().filter(F.col("id").between(100, 180)).count() == 0
@@ -1670,11 +1604,11 @@ def test_merge_table_deletion_vectors_partitioned_escaped(spark, tmp_path):
                           partition_by="q")
     rows = [(i, ["plain", "x y", "b:c"][i % 3], i * 1.0) for i in range(90)]
     t.merge(spark.createDataFrame(rows, "id long, q string, x double"))
-    before = _snap_inodes(t.root, t.current_version())
+    before = _snap_inodes(t, t.current_version())
     v = t.delete_where({"id": (10, 40)}, use_deletion_vectors=True)
-    after = _snap_inodes(t.root, v)
+    after = _snap_inodes(t, v)
     # fully-contained files are still metadata-DROPPED; every survivor
-    # is a hardlink (DV mode never rewrites)
+    # is carried (DV mode never rewrites)
     assert set(after.items()) <= set(before.items())
     assert t.read().count() == 90 - 31
     assert t.read().filter(F.col("id").between(10, 40)).count() == 0
@@ -1706,17 +1640,17 @@ def test_merge_table_dv_free_read_has_no_join(spark, tmp_path):
 
 
 def test_merge_table_update_where_deletion_vectors(spark, tmp_path):
-    """Merge-on-read UPDATE: every pre-existing file hardlinks forward
+    """Merge-on-read UPDATE: every pre-existing file carries forward
     (inode-asserted), old row versions are DV-deleted, updated copies
     append as a new file; values and row count equal the CoW UPDATE,
     repeated DV updates chain correctly, and compact purges the DVs
     leaving identical data."""
     t = _clustered_table(spark, tmp_path / "tbl")  # 1000 rows, 4 files
-    before = _snap_inodes(t.root, t.current_version())
+    before = _snap_inodes(t, t.current_version())
     v = t.update_where({"id": (100, 110)}, {"val": F.col("val") + 1},
                        use_deletion_vectors=True)
-    after = _snap_inodes(t.root, v)
-    assert set(before.items()) <= set(after.items())   # all hardlinked
+    after = _snap_inodes(t, v)
+    assert set(before.items()) <= set(after.items())   # all carried
     assert len(after) == len(before) + 1               # one appended file
     assert t.read().count() == 1000
     rows = {r.id: r.val for r in t.read().collect()}
@@ -1761,7 +1695,7 @@ def test_bloom_sentinel_for_all_null_files(spark, tmp_path):
                                   "id long, p string, u string"))
     idx = t.file_index()["u"]
     sentinels = {k for k, e in idx.items() if e["m"] == 0}
-    assert any(k.startswith("p=z/") for k in sentinels)
+    assert any("/p=z/" in k for k in sentinels)
     assert t.maintenance_plan()["bloom"]["u"]["coverage"] == 1.0
 
     # pruning: the sentinel file is dropped for any probe, results
@@ -1781,7 +1715,7 @@ def test_bloom_sentinel_for_all_null_files(spark, tmp_path):
                                   "id long, p string, u string"))
     t._bloom_build_entries = orig
     assert seen and all(
-        all(rel.startswith("p=w/") for rel in call) for call in seen
+        all("/p=w/" in rel for rel in call) for call in seen
     ), f"re-scanned carried files: {seen}"
     assert t.maintenance_plan()["bloom"]["u"]["coverage"] == 1.0
 
@@ -1790,7 +1724,7 @@ def test_merge_table_bloom_file_index(spark, tmp_path):
     """Per-file Bloom index: point lookups on an UNCLUSTERED column
     (zone maps span everything) drop bloom-miss files driver-side with
     zero Spark jobs; an absent probe reads zero files; the index
-    carries across hardlink commits, is dropped for rewritten files
+    carries across carry commits, is dropped for rewritten files
     (results stay exact, just unpruned), and new unindexed files are
     kept conservatively."""
     import os
@@ -1820,7 +1754,7 @@ def test_merge_table_bloom_file_index(spark, tmp_path):
     gone = t.read_point("u", [99_999_999])
     assert gone.count() == 0 and len(gone.inputFiles()) == 0
 
-    # survives a DV (hardlink) commit; exactness preserved vs re-filter
+    # survives a DV (carry-only) commit; exactness preserved vs re-filter
     t.delete_where({"k": (0, 50)}, use_deletion_vectors=True)
     assert t.file_index()
     p = t.read_point("u", vals)
@@ -1848,7 +1782,7 @@ def test_merge_table_bloom_file_index(spark, tmp_path):
 def test_merge_table_bloom_index_partitioned_escaped(spark, tmp_path):
     """Bloom index over a partitioned table: file keys carry the
     URI-escaped partition dirs; probes prune across partitions, the
-    index survives a pruned merge's hardlinks (dropped only for the
+    index survives a pruned merge's carries (dropped only for the
     rewritten partition), and results stay exact throughout."""
     from yelp_data_engineering_pipeline_spark.operators.upsert import (
         ParquetMergeTable,
@@ -1872,7 +1806,7 @@ def test_merge_table_bloom_index_partitioned_escaped(spark, tmp_path):
 
     # pruned merge rewrites ONE partition: its stale bloom entries
     # drop and (r10, VERDICT r9 next-2) the rewritten partition's NEW
-    # files are re-indexed incrementally — the hardlinked partitions
+    # files are re-indexed incrementally — the carried partitions
     # keep their original bits; lookups stay exact and fully pruned
     old_idx = t.file_index()["u"]
     t.merge(spark.createDataFrame([(0, "plain", 55555)],
@@ -1895,7 +1829,8 @@ def test_merge_table_bloom_index_partitioned_escaped(spark, tmp_path):
 def test_merge_table_restore(spark, tmp_path):
     """restore(v) commits a retained snapshot's exact content as a NEW
     head: data, deletion vectors and bloom index all roll back; the
-    restore is hardlink-only (inode-asserted), history is preserved
+    restore is pure metadata (the same files, inode-asserted), history
+    is preserved
     (the restore is itself a version), and a vacuumed or future
     version refuses."""
     t = _clustered_table(spark, tmp_path / "tbl")          # v1: 1000
@@ -1904,14 +1839,14 @@ def test_merge_table_restore(spark, tmp_path):
     t.update_where({"id": (0, 49)}, {"val": F.lit(-1)})     # v3
     assert t.read().filter(F.col("val") == -1).count() == 50
 
-    src_ino = set(_snap_inodes(t.root, 2).values())
+    src = _snap_inodes(t, 2)
     v = t.restore(2)
     assert v == 4
     # content ≡ v2: the DV is back in force, the update is gone
     assert t.read().count() == 919
     assert t.read().filter(F.col("id").between(100, 180)).count() == 0
     assert t.read().filter(F.col("val") == -1).count() == 0
-    assert set(_snap_inodes(t.root, v).values()) == src_ino  # hardlinks
+    assert _snap_inodes(t, v) == src  # same files
     assert t.history()[0]["operation"] == "restore(v=2)"
     # the abandoned head is still readable (history preserved)
     assert t.read(version=3).filter(F.col("val") == -1).count() == 50
@@ -2015,7 +1950,9 @@ def test_vacuum_live_reader_fails_loudly(spark, tmp_path):
     # two full rewrites push v1 outside keep_last_n=2
     t.merge(spark.range(0, 500).selectExpr("id", "id * 3 as v"))
     t.merge(spark.range(0, 500).selectExpr("id", "id * 4 as v"))
-    assert t.vacuum(keep_last_n=2) == [1]
+    # grace 0: v1's files are younger than the default grace window,
+    # which would (correctly) keep them as possibly in-flight stages
+    assert t.vacuum(keep_last_n=2, stage_grace_seconds=0) == [1]
     with pytest.raises(Exception) as ei:
         held.count()
     msg = str(ei.value)
@@ -2221,40 +2158,39 @@ def test_to_view_sql_addressing_and_snapshot_pin(spark, tmp_path):
     the registered version, a version= view is the VERSION AS OF
     read, and BOTH are snapshot pins — commits after registration
     don't leak in until re-registration. snapshots() is the DESCRIBE
-    HISTORY surface. Works in both storage modes."""
-    for mode, sub in (("posix", "p"), ("object", "o")):
-        t = ParquetMergeTable(spark, str(tmp_path / sub), key="id",
-                              storage=mode)
-        with pytest.raises(ValueError, match="no committed version"):
-            t.to_view(f"mt_{sub}_early")
-        t.merge(spark.createDataFrame([(1, 10), (2, 20)],
-                                      "id long, v long"))
-        t.merge(spark.createDataFrame([(2, 99), (3, 30)],
-                                      "id long, v long"))
-        t.to_view(f"mt_{sub}_v1", version=1)
-        t.to_view(f"mt_{sub}_head")
-        got_v1 = {r.id: r.v for r in spark.sql(
-            f"SELECT id, v FROM mt_{sub}_v1").collect()}
-        got_head = {r.id: r.v for r in spark.sql(
-            f"SELECT id, v FROM mt_{sub}_head").collect()}
-        assert got_v1 == {1: 10, 2: 20}
-        assert got_head == {1: 10, 2: 99, 3: 30}
-        # a later commit does NOT leak into the registered views
-        t.merge(spark.createDataFrame([(4, 40)], "id long, v long"))
-        assert spark.sql(f"SELECT COUNT(*) n FROM mt_{sub}_head"
-                         ).collect()[0].n == 3
-        t.to_view(f"mt_{sub}_head")             # re-register follows
-        assert spark.sql(f"SELECT COUNT(*) n FROM mt_{sub}_head"
-                         ).collect()[0].n == 4
-        # DESCRIBE HISTORY surface, SQL-addressable too
-        t.snapshots().createOrReplaceTempView(f"mt_{sub}_hist")
-        hist = spark.sql(
-            f"SELECT version, operation FROM mt_{sub}_hist "
-            "ORDER BY version").collect()
-        assert [(h.version, h.operation) for h in hist] == [
-            (1, "merge"), (2, "merge"), (3, "merge")]
-        with pytest.raises(ValueError, match="not committed"):
-            t.to_view("nope", version=9)
+    HISTORY surface."""
+    sub = "o"
+    t = ParquetMergeTable(spark, str(tmp_path / sub), key="id")
+    with pytest.raises(ValueError, match="no committed version"):
+        t.to_view(f"mt_{sub}_early")
+    t.merge(spark.createDataFrame([(1, 10), (2, 20)],
+                                  "id long, v long"))
+    t.merge(spark.createDataFrame([(2, 99), (3, 30)],
+                                  "id long, v long"))
+    t.to_view(f"mt_{sub}_v1", version=1)
+    t.to_view(f"mt_{sub}_head")
+    got_v1 = {r.id: r.v for r in spark.sql(
+        f"SELECT id, v FROM mt_{sub}_v1").collect()}
+    got_head = {r.id: r.v for r in spark.sql(
+        f"SELECT id, v FROM mt_{sub}_head").collect()}
+    assert got_v1 == {1: 10, 2: 20}
+    assert got_head == {1: 10, 2: 99, 3: 30}
+    # a later commit does NOT leak into the registered views
+    t.merge(spark.createDataFrame([(4, 40)], "id long, v long"))
+    assert spark.sql(f"SELECT COUNT(*) n FROM mt_{sub}_head"
+                     ).collect()[0].n == 3
+    t.to_view(f"mt_{sub}_head")             # re-register follows
+    assert spark.sql(f"SELECT COUNT(*) n FROM mt_{sub}_head"
+                     ).collect()[0].n == 4
+    # DESCRIBE HISTORY surface, SQL-addressable too
+    t.snapshots().createOrReplaceTempView(f"mt_{sub}_hist")
+    hist = spark.sql(
+        f"SELECT version, operation FROM mt_{sub}_hist "
+        "ORDER BY version").collect()
+    assert [(h.version, h.operation) for h in hist] == [
+        (1, "merge"), (2, "merge"), (3, "merge")]
+    with pytest.raises(ValueError, match="not committed"):
+        t.to_view("nope", version=9)
 
 
 def test_timestamp_as_of_resolution_and_read(spark, tmp_path):
@@ -2468,10 +2404,8 @@ def test_delete_keys_bloom_pruned_gdpr_shape(spark, tmp_path):
     assert len(carried) == 8 - len(kept)
     assert t.read(version=1).count() == 4000     # time travel
 
-    # DV flavor on a fresh OBJECT-mode table (no hardlink carry):
-    # zero data files written
-    t2 = ParquetMergeTable(spark, str(tmp_path / "tbl2"), key="id",
-                           storage="object")
+    # DV flavor on a fresh table: zero data files written
+    t2 = ParquetMergeTable(spark, str(tmp_path / "tbl2"), key="id")
     t2.merge(rows)
     files_before = {
         os.path.join(dp, f)
@@ -2499,8 +2433,7 @@ def test_update_keys_rectification_shape(spark, tmp_path):
     """update_keys: keyed UPDATE pruned by the read_point stack — CoW
     and DV flavors both equal the conditional-projection ground truth;
     untouched files carry; the DV flavor appends only matched rows."""
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          storage="object")
+    t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id")
     t.merge(spark.range(0, 4000).selectExpr(
         "id", "concat('u', cast(id as string)) as u", "id * 2 as v")
         .repartitionByRange(8, "id").sortWithinPartitions("id"))
@@ -2519,8 +2452,7 @@ def test_update_keys_rectification_shape(spark, tmp_path):
 
     # DV flavor: every v1 file still referenced + one appended file
     # holding ONLY the rewritten rows
-    t2 = ParquetMergeTable(spark, str(tmp_path / "tbl2"), key="id",
-                           storage="object")
+    t2 = ParquetMergeTable(spark, str(tmp_path / "tbl2"), key="id")
     t2.merge(spark.range(0, 4000).selectExpr(
         "id", "concat('u', cast(id as string)) as u", "id * 2 as v")
         .repartitionByRange(8, "id").sortWithinPartitions("id"))
@@ -2545,7 +2477,7 @@ def test_keyed_dml_on_partitioned_table(spark, tmp_path):
     keyed op on it touches only the named partitions' files; results
     match the predicate algebra and untouched partitions carry."""
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          partition_by="p", storage="object")
+                          partition_by="p")
     t.merge(spark.createDataFrame(
         [(i, chr(97 + i % 4), i) for i in range(400)],
         "id long, p string, v long"))
@@ -2609,32 +2541,6 @@ def test_keyed_dml_fully_pruned_probe_is_noop(spark, tmp_path):
     # ... while a touching probe still commits normally
     assert t.delete_keys("id", [5]) == v + 1
     assert t.read().count() == 99
-
-
-def test_vacuum_sweeps_root_constraint_temps(spark, tmp_path):
-    """ADVICE r9: a crash mid _write_constraints leaves a
-    '__CONSTRAINTS.json.<rand>' temp at the TABLE ROOT (outside _log);
-    vacuum must sweep it past the grace window like any staged temp."""
-    import os
-
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id")
-    t.merge(spark.createDataFrame([(1, 1)], "id long, v long"))
-    orphan = os.path.join(t.root, "__CONSTRAINTS.json.deadbeef")
-    with open(orphan, "w") as f:
-        f.write("{torn")
-    young = os.path.join(t.root, "__CONSTRAINTS.json.young1234")
-    with open(young, "w") as f:
-        f.write("{torn")
-    os.utime(orphan, (0, 0))                 # aged past any grace
-    t.vacuum(keep_last_n=2, stage_grace_seconds=3600)
-    assert not os.path.exists(orphan)        # aged temp swept
-    assert os.path.exists(young)             # grace-guarded temp kept
-    t.vacuum(keep_last_n=2, stage_grace_seconds=0)
-    assert not os.path.exists(young)
-    # the real constraints file itself is never touched
-    t.add_constraint("v_nonneg", "v >= 0")
-    t.vacuum(keep_last_n=2, stage_grace_seconds=0)
-    assert t.constraints() == {"v_nonneg": "v >= 0"}
 
 
 def test_bloom_index_survives_churn_without_rebuild(spark, tmp_path):

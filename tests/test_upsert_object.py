@@ -1,11 +1,9 @@
-"""Object-store mode of ParquetMergeTable (VERDICT r7 next-1): the
-same lakehouse semantics with every POSIX primitive disabled — no
-hardlinks (carry-forward = manifest references), no flock (optimistic
-conditional-PUT commits), no rename-based pointer (version identity =
-the atomic creation of ``_log/<n>.json``). Each test pins a property
-the S3/GCS deployment story depends on; LAKEHOUSE.md maps the
-primitives. The replay-model property test runs in this mode too
-(tests/test_upsert.py, parametrized)."""
+"""The object-store commit protocol of ParquetMergeTable (VERDICT r7
+next-1): no hardlinks (carry-forward = manifest references), no lock
+(optimistic conditional-PUT commits), no rename-based pointer (version
+identity = the atomic creation of ``_log/<n>.json``). Each test pins a
+property the S3/GCS deployment story depends on; LAKEHOUSE.md maps the
+primitives."""
 
 from __future__ import annotations
 
@@ -32,17 +30,16 @@ def _all_parquet(root):
 
 
 def _table(spark, root, **kw):
-    return ParquetMergeTable(spark, str(root), key="id", storage="object",
-                             **kw)
+    return ParquetMergeTable(spark, str(root), key="id", **kw)
 
 
 def test_object_mode_never_hardlinks_or_copies_on_carry(spark, tmp_path):
-    """Partition-pruned merge in object mode: untouched files are
+    """Partition-pruned merge: untouched files are
     carried by MANIFEST REFERENCE — the new version lists the same
     physical paths, no second directory entry (st_nlink == 1
     everywhere), no byte copy, and no ``v=<n>`` snapshot dirs at all."""
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          partition_by="p", storage="object")
+                          partition_by="p")
     t.merge(spark.createDataFrame(
         [(i, "a" if i % 2 else "b", i * 10) for i in range(40)],
         "id long, p string, v long"))
@@ -89,7 +86,7 @@ def test_object_mode_metadata_only_delete_runs_no_job(spark, tmp_path):
 
 
 def test_object_mode_dv_delete_update_and_density(spark, tmp_path):
-    """Merge-on-read DML in object mode: DV delete touches no data
+    """Merge-on-read DML: DV delete touches no data
     file; DV update appends only the rewritten rows; dv_density /
     needs_compaction read the manifest (no jobs); compact() purges
     the DVs and the read plan loses the anti-join."""
@@ -135,7 +132,7 @@ def test_object_mode_auto_compact_dv(spark, tmp_path):
 
 
 def test_object_mode_concurrent_writers_conditional_put(spark, tmp_path):
-    """No flock: two writers racing the same version — the loser's
+    """No lock: two writers racing the same version — the loser's
     conditional PUT fails. wait=False surfaces ConcurrentMergeError
     with the table untouched; wait=True re-derives against the new
     head and retries, so both batches land (serial-replay
@@ -179,7 +176,7 @@ def test_object_mode_concurrent_writers_conditional_put(spark, tmp_path):
 
 
 def test_object_mode_restore_is_pure_metadata(spark, tmp_path):
-    """restore() in object mode writes NO data files — the new
+    """restore() writes NO data files — the new
     manifest references the restored version's files where they
     live."""
     t = _table(spark, tmp_path / "tbl")
@@ -194,7 +191,7 @@ def test_object_mode_restore_is_pure_metadata(spark, tmp_path):
 
 
 def test_object_mode_clone_copies_and_diverges(spark, tmp_path):
-    """clone() in object mode deep-copies (the server-side-copy
+    """clone() deep-copies (the server-side-copy
     analog; shallow references would break under source vacuum —
     Delta's documented hazard): clone reads equal the source snapshot,
     constraints carry, DVs carry, and the two tables then diverge
@@ -206,7 +203,6 @@ def test_object_mode_clone_copies_and_diverges(spark, tmp_path):
     t.delete_where({"id": (10, 19)}, use_deletion_vectors=True)
     t.add_constraint("v_nonneg", "v >= 0")
     c = t.clone(str(tmp_path / "dst"))
-    assert c.storage == "object"
     assert c.read().count() == 390           # DV came along
     assert c.constraints() == {"v_nonneg": "v >= 0"}
     with pytest.raises(ConstraintViolationError):
@@ -226,7 +222,7 @@ def test_object_mode_vacuum_reference_counted(spark, tmp_path):
     read, and a crash-orphan stage dir (staged files, no manifest) is
     swept once past the grace window."""
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          partition_by="p", storage="object")
+                          partition_by="p")
     rows = [(i, "a" if i % 2 else "b", i) for i in range(40)]
     t.merge(spark.createDataFrame(rows, "id long, p string, v long"))
     t.merge(spark.createDataFrame([(1, "a", -1)], "id long, p string, v long"))
@@ -268,7 +264,7 @@ def test_object_mode_grace_protects_inflight_stage(spark, tmp_path):
 def test_object_mode_compact_collapses_read_groups(spark, tmp_path):
     """Every commit adds a tx-dir read group; maintenance_plan reports
     the growth and compact() collapses it back to one — the object-
-    mode analog of small-file management."""
+    store analog of small-file management."""
     t = _table(spark, tmp_path / "tbl")
     for i in range(4):
         t.merge(spark.createDataFrame([(i, i)], "id long, v long"))
@@ -285,27 +281,35 @@ def test_object_mode_compact_collapses_read_groups(spark, tmp_path):
     assert got == {0: 100, 1: 101, 2: 2, 3: 3}
 
 
-def test_object_mode_guard_rejects_cross_mode_writes(spark, tmp_path):
-    """A table's commits must stay in one mode (posix carry needs the
-    self-contained snapshot dir; object carry needs root-relative
-    references) — writing in the other mode raises, while READS work
-    from either (the manifest records its base)."""
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id")
+def test_snapshot_layout_manifest_refused_on_read_and_write(spark,
+                                                           tmp_path):
+    """A manifest in the retired per-version snapshot layout
+    (``base: "snapshot"``, files under ``v=<n>/``) is refused with a
+    clear ValueError by reads and by writes — never misread as
+    root-relative references."""
+    import json
+    from pathlib import Path
+
+    t = _table(spark, tmp_path / "tbl")
     t.merge(spark.range(0, 5).withColumn("v", F.col("id")))
-    o = _table(spark, tmp_path / "tbl")
-    assert o.read().count() == 5              # cross-mode read OK
-    with pytest.raises(ValueError, match="storage"):
-        o.merge(spark.createDataFrame([(9, 9)], "id long, v long"))
-    t2 = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id")
-    t2.merge(spark.createDataFrame([(9, 9)], "id long, v long"))
-    assert t2.read().count() == 6
+    p = Path(t._manifest_path(1))
+    man = json.loads(p.read_text())
+    man["base"] = "snapshot"
+    p.write_text(json.dumps(man))
+    fresh = _table(spark, tmp_path / "tbl")
+    with pytest.raises(ValueError, match="snapshot"):
+        fresh.read()
+    fresh = _table(spark, tmp_path / "tbl")
+    with pytest.raises(ValueError, match="snapshot"):
+        fresh.merge(spark.createDataFrame([(9, 9)], "id long, v long"))
+    assert fresh.current_version() == 1          # nothing committed
 
 
 def test_object_mode_time_travel_and_cdf(spark, tmp_path):
     """Time travel and the change feed work across reference-carried
     versions (files shared between manifests)."""
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          partition_by="p", storage="object")
+                          partition_by="p")
     t.merge(spark.createDataFrame(
         [(1, "a", 1), (2, "b", 2)], "id long, p string, v long"))
     t.merge(spark.createDataFrame(
@@ -319,7 +323,7 @@ def test_object_mode_bloom_point_lookup(spark, tmp_path):
     """The per-file Bloom index builds and probes on root-relative
     keys; pruning-exactness holds across a reference carry."""
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          partition_by="p", storage="object")
+                          partition_by="p")
     rows = [(i, "a" if i % 2 else "b", f"u{i * 37 % 1000}")
             for i in range(400)]
     t.merge(spark.createDataFrame(rows, "id long, p string, u string"))
@@ -345,7 +349,7 @@ def test_object_mode_partition_filter_pushdown(spark, tmp_path):
     import re
 
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          partition_by="p", storage="object")
+                          partition_by="p")
     t.merge(spark.createDataFrame(
         [(i, chr(97 + i % 4), i) for i in range(40)],
         "id long, p string, v long"))
@@ -390,7 +394,7 @@ def test_dv_rendering_mismatch_fails_loudly(spark, tmp_path):
 
 
 def test_object_mode_real_thread_writers(spark, tmp_path):
-    """Two REAL threads committing with wait=True in object mode:
+    """Two REAL threads committing with wait=True:
     without any lock, both land (the loser's conditional PUT fails
     and it re-derives against the new head) and the result equals a
     serial replay."""
@@ -403,8 +407,7 @@ def test_object_mode_real_thread_writers(spark, tmp_path):
 
     def writer(k):
         try:
-            tw = ParquetMergeTable(spark, t_root, key="id",
-                                   storage="object")
+            tw = ParquetMergeTable(spark, t_root, key="id")
             tw.merge(spark.createDataFrame([(k, k * 10)],
                                            "id long, v long"), wait=True)
         except Exception as e:  # noqa: BLE001
@@ -423,9 +426,9 @@ def test_object_mode_real_thread_writers(spark, tmp_path):
 
 
 def test_object_mode_cdc_stream(spark, tmp_path):
-    """run_cdc_upsert_stream(storage='object'): the streaming CDC
-    path composes with the no-POSIX table — conditional-PUT commits
-    under foreachBatch, out-of-order safety intact."""
+    """run_cdc_upsert_stream: the streaming CDC path composes with
+    the table's conditional-PUT commits under foreachBatch, out-of-order
+    safety intact."""
     import json as _json
 
     from yelp_data_engineering_pipeline_spark.streaming.ingest import (
@@ -443,13 +446,12 @@ def test_object_mode_cdc_stream(spark, tmp_path):
         stream = spark.readStream.schema(schema).json(str(in_dir))
         return run_cdc_upsert_stream(
             spark, stream, str(tmp_path / "tbl"), str(tmp_path / "ckpt"),
-            key="k", ts_col="ts", storage="object",
+            key="k", ts_col="ts",
         )
 
     feed("b1.ndjson", [(1, 10, "a"), (2, 10, "b")])
     feed("b2.ndjson", [(1, 5, "STALE"), (2, 20, "b2"), (3, 1, "c")])
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="k",
-                          storage="object")
+    t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="k")
     got = {r.k: (r.ts, r.v) for r in t.read().collect()}
     assert got == {1: (10, "a"), 2: (20, "b2"), 3: (1, "c")}
     assert not any(e.startswith("v=") for e in
@@ -463,7 +465,7 @@ def test_object_mode_schema_evolution_across_references(spark, tmp_path):
     read back with the new column NULL-filled; time travel to the
     pre-evolution version keeps the old schema."""
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          partition_by="p", storage="object")
+                          partition_by="p")
     t.merge(spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20)], "id long, p string, v long"))
     t.merge(spark.createDataFrame(
@@ -495,59 +497,6 @@ def test_vacuum_sweeps_crashed_writer_log_temps(spark, tmp_path):
             if e.startswith(("_tx", "_bloom", "_ckpt"))]
     assert left == []
     assert t.read().count() == 10
-
-
-@pytest.mark.parametrize("direction", ["posix_to_object", "object_to_posix"])
-def test_clone_migrates_between_storage_modes(spark, tmp_path, direction):
-    """clone(storage=...) is the migration path between layouts (lift
-    a posix table into the object-store layout, or bring one back):
-    content, deletion vectors, bloom index, and CHECK constraints all
-    survive the re-keying, and the migrated table ACCEPTS WRITES in
-    its new mode."""
-    src_mode, dst_mode = (("posix", "object")
-                          if direction == "posix_to_object"
-                          else ("object", "posix"))
-    t = ParquetMergeTable(spark, str(tmp_path / "src"), key="id",
-                          partition_by="p", storage=src_mode)
-    rows = [(i, "a" if i % 2 else "b", f"u{i * 37 % 997}", i)
-            for i in range(400)]
-    t.merge(spark.createDataFrame(rows, "id long, p string, u string, v long"))
-    t.merge(spark.createDataFrame([(401, "a", "zz", -1)],
-                                  "id long, p string, u string, v long"))
-    t.delete_where({"id": (10, 19)}, use_deletion_vectors=True)
-    t.build_file_index("u")
-    t.add_constraint("v_floor", "v >= -5")
-    want = sorted((r.id, r.v) for r in t.read().collect())
-
-    c = t.clone(str(tmp_path / "dst"), storage=dst_mode)
-    assert c.storage == dst_mode
-    assert sorted((r.id, r.v) for r in c.read().collect()) == want
-    assert sum(len(p) for p in c.deletion_vectors().values()) == \
-        sum(len(p) for p in t.deletion_vectors().values()) > 0
-    assert c.constraints() == {"v_floor": "v >= -5"}
-    # bloom re-keyed onto the clone's layout and still exact
-    idx = c.file_index()
-    assert idx and all(
-        (k.startswith("_data/") if dst_mode == "object"
-         else not k.startswith("_data/"))
-        for files in idx.values() for k in files
-    )
-    probe = ["u37", "u74"]
-    assert c.read_point("u", probe).count() == \
-        c.read().filter(F.col("u").isin(probe)).count()
-    # the migrated table accepts writes in ITS mode; the source is
-    # untouched
-    c.merge(spark.createDataFrame([(900, "a", "nn", 5)],
-                                  "id long, p string, u string, v long"))
-    assert c.read().count() == len(want) + 1
-    with pytest.raises(ConstraintViolationError):
-        c.merge(spark.createDataFrame([(901, "a", "x", -99)],
-                                      "id long, p string, u string, v long"))
-    assert t.read().count() == len(want)
-    if dst_mode == "posix":
-        assert os.path.isdir(os.path.join(c.root, "v=1"))
-    else:
-        assert not any(e.startswith("v=") for e in os.listdir(c.root))
 
 
 def test_object_vacuum_never_deletes_above_head_manifests(spark, tmp_path):
@@ -589,7 +538,7 @@ def test_object_vacuum_races_real_concurrent_merges(spark, tmp_path):
     import threading
 
     t_root = str(tmp_path / "tbl")
-    seed = ParquetMergeTable(spark, t_root, key="id", storage="object",
+    seed = ParquetMergeTable(spark, t_root, key="id",
                              partition_by="p")
     seed.merge(spark.createDataFrame(
         [(i, "a" if i % 2 else "b", i) for i in range(20)],
@@ -598,8 +547,7 @@ def test_object_vacuum_races_real_concurrent_merges(spark, tmp_path):
     committed: list[int] = []
 
     def writer():
-        tw = ParquetMergeTable(spark, t_root, key="id",
-                               storage="object", partition_by="p")
+        tw = ParquetMergeTable(spark, t_root, key="id", partition_by="p")
         try:
             for k in range(100, 108):
                 # touches only p=a -> p=b files carry forward by
@@ -618,15 +566,14 @@ def test_object_vacuum_races_real_concurrent_merges(spark, tmp_path):
         while th.is_alive():
             # default-style grace guards young files; the manifest
             # sweep is what the r9 fix constrains
-            t = ParquetMergeTable(spark, t_root, key="id",
-                                  storage="object", partition_by="p")
+            t = ParquetMergeTable(spark, t_root, key="id", partition_by="p")
             t.vacuum(keep_last_n=2, stage_grace_seconds=3600)
     finally:
         th.join(timeout=300)
     assert not errs
     assert committed and committed[-1] >= 9  # all 8 merges landed
 
-    t = ParquetMergeTable(spark, t_root, key="id", storage="object",
+    t = ParquetMergeTable(spark, t_root, key="id",
                           partition_by="p")
     head = t.current_version()
     assert head == committed[-1]
@@ -638,42 +585,6 @@ def test_object_vacuum_races_real_concurrent_merges(spark, tmp_path):
     got = {r.id: r.v for r in t.read().collect()}
     want = {i: i for i in range(20)} | {k: k for k in range(100, 108)}
     assert got == want
-
-
-def test_cross_mode_guard_covers_metadata_only_commits(spark, tmp_path):
-    """ADVICE r8 (medium): the wrong-mode write guard must fire on
-    METADATA-ONLY and DV-only commits too (delete_where paths that
-    never stage data files), in both directions — not just on commits
-    that call _stage_dir."""
-    # posix table, range-clustered so an aligned delete is metadata-only
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id")
-    t.merge(spark.range(0, 1000).selectExpr("id", "id * 2 as v")
-            .repartitionByRange(4, "id").sortWithinPartitions("id"))
-    stats = t.stats()
-    rel, zm = sorted(stats.items(),
-                     key=lambda kv: kv[1]["cols"]["id"]["min"])[1]
-    lo, hi = zm["cols"]["id"]["min"], zm["cols"]["id"]["max"]
-
-    o = _table(spark, tmp_path / "tbl")
-    with pytest.raises(ValueError, match="storage"):
-        o.delete_where({"id": (lo, hi)})              # metadata-only drop
-    with pytest.raises(ValueError, match="storage"):
-        o.delete_where({"id": (lo, lo + 1)}, use_deletion_vectors=True)
-    with pytest.raises(ValueError, match="storage"):
-        o.restore(1)
-    assert t.current_version() == 1                   # table untouched
-    assert t.read().count() == 1000
-
-    # and the reverse direction: posix handle on an object table
-    t2 = _table(spark, tmp_path / "tbl2")
-    t2.merge(spark.range(0, 100).selectExpr("id", "id as v")
-             .repartitionByRange(4, "id").sortWithinPartitions("id"))
-    p2 = ParquetMergeTable(spark, str(tmp_path / "tbl2"), key="id")
-    with pytest.raises(ValueError, match="storage"):
-        p2.delete_where({"id": (0, 24)})
-    with pytest.raises(ValueError, match="storage"):
-        p2.restore(1)
-    assert t2.read().count() == 100
 
 
 def test_commit_landing_between_read_and_publish_is_never_lost(
@@ -788,8 +699,7 @@ def test_dv_build_streams_executor_packed_positions(spark, tmp_path):
     positions, a fraction of the sidecar) and never as one
     whole-object put; the result matches SQL delete semantics."""
     be = _ChunkRecorder()
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          storage="object", backend=be)
+    t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id", backend=be)
     n = 5_000_000
     # v is scattered so every file is a BOUNDARY file for the
     # predicate (partial match -> DV path, not metadata-only drop)

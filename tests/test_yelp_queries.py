@@ -240,15 +240,16 @@ def test_keyset_route_plans_no_partitionless_window(star):
 
 
 def test_dim_resolution_cache_semantic_key_and_null_names(spark):
-    """ADVICE r6: the name->id cache must HIT for a fresh-but-
-    semantically-equal dim frame (the served-per-request pattern that
-    an id()-keyed cache missed every time while pinning dead frames),
-    stay bounded, and skip NULL names rather than crash on .lower()."""
+    """The name->id cache is keyed weakly on the dim FRAME: repeated
+    lookups on one frame hit, distinct frames never share a map (two
+    same-schema parquet dims included), an entry dies with its frame,
+    and NULL names are skipped rather than crash on .lower()."""
+    import gc
+
     import pandas as pd
 
     from yelp_data_engineering_pipeline_spark.plans.yelp_queries import (
         _DIM_MAP_CACHE,
-        _DIM_MAP_CACHE_MAX,
         _resolve_dim_id,
     )
 
@@ -260,13 +261,8 @@ def test_dim_resolution_cache_semantic_key_and_null_names(spark):
     assert _resolve_dim_id(d1, "7") == 7  # digit dispatch, no cache touch
     assert _resolve_dim_id(d1, "missing") is None
     assert len(_DIM_MAP_CACHE) == 1
-    # a FRESH frame with the same logical plan hits the same entry
-    d2 = spark.createDataFrame(pdf)
-    assert _resolve_dim_id(d2, "taco") == 3
-    assert len(_DIM_MAP_CACHE) == 1
     # two DIFFERENT parquet-backed dims with IDENTICAL schemas must
-    # NOT share maps: Spark canonicalization erases file paths, so the
-    # key includes inputFiles() (the r7 bench-caught collision)
+    # NOT share maps (the r7 bench-caught collision of a plan-keyed cache)
     import tempfile as _tf
 
     tdir = _tf.mkdtemp()
@@ -281,10 +277,14 @@ def test_dim_resolution_cache_semantic_key_and_null_names(spark):
     assert _resolve_dim_id(cat, "pizza") == 1
     assert _resolve_dim_id(wk, "mon") == 1  # would be None under collision
     assert _resolve_dim_id(cat, "mon") is None
-    # bounded: distinct plans evict oldest, never grow past the cap
-    for i in range(_DIM_MAP_CACHE_MAX + 5):
+    assert len(_DIM_MAP_CACHE) == 3
+    # bounded by the live frames: entries die with their frames
+    for i in range(40):
         di = spark.createDataFrame(
             pd.DataFrame({"id": [i], "name": [f"n{i}"]})
         )
-        _resolve_dim_id(di, f"n{i}")
-    assert len(_DIM_MAP_CACHE) <= _DIM_MAP_CACHE_MAX
+        assert _resolve_dim_id(di, f"n{i}") == i
+    del di, wk, cat
+    gc.collect()
+    assert len(_DIM_MAP_CACHE) == 1
+    assert _resolve_dim_id(d1, "taco") == 3

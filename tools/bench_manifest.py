@@ -50,7 +50,7 @@ def _key(i: int) -> str:
 
 def tier(spark, n: int) -> dict:
     root = tempfile.mkdtemp(prefix=f"manbench{n}_")
-    t = ParquetMergeTable(spark, root, key="id", storage="object")
+    t = ParquetMergeTable(spark, root, key="id")
     files = {_key(i): _entry(i) for i in range(n)}
 
     t0 = time.time()
@@ -82,7 +82,7 @@ def tier(spark, n: int) -> dict:
     from pyspark.sql.types import StructType
     schema = StructType.fromJson(_SCHEMA)
     keep = sorted(set(files) - set(removed) | set(added))
-    carry = ParquetMergeTable(spark, root, key="id", storage="object")
+    carry = ParquetMergeTable(spark, root, key="id")
     orig_every = ParquetMergeTable._CHECKPOINT_EVERY
     ParquetMergeTable._CHECKPOINT_EVERY = 1
     try:
@@ -93,8 +93,7 @@ def tier(spark, n: int) -> dict:
         assert "ckpt" in man3
         carry_dict_s = None
         if n <= 200_000:
-            cold0 = ParquetMergeTable(spark, root, key="id",
-                                      storage="object")
+            cold0 = ParquetMergeTable(spark, root, key="id")
             t0 = time.time()
             pfiles = cold0._files(2)
             fullmap = {r: pfiles[r] for r in keep}
@@ -105,12 +104,12 @@ def tier(spark, n: int) -> dict:
     finally:
         ParquetMergeTable._CHECKPOINT_EVERY = orig_every
 
-    cold = ParquetMergeTable(spark, root, key="id", storage="object")
+    cold = ParquetMergeTable(spark, root, key="id")
     t0 = time.time()
     keys = cold._file_keys(2)
     keys_s = time.time() - t0
     assert len(keys) == n
-    cold2 = ParquetMergeTable(spark, root, key="id", storage="object")
+    cold2 = ParquetMergeTable(spark, root, key="id")
     t0 = time.time()
     full = cold2._files(2)
     full_s = time.time() - t0
@@ -121,14 +120,14 @@ def tier(spark, n: int) -> dict:
     # the delta-chain replay (v2). This is the path a 100 TB WHERE
     # query actually takes; before r10 it materialized every zone map.
     lo, hi = 500 * 125_000, 510 * 125_000 - 1
-    cold3 = ParquetMergeTable(spark, root, key="id", storage="object")
+    cold3 = ParquetMergeTable(spark, root, key="id")
     t0 = time.time()
     ks, _, _, za = cold3._zone_arrays(2, ["id"], with_rows=False)
     keep, _ = cold3._mask_range(za, len(ks), {"id": (lo, hi)}, False)
     kept = cold3._keys_where(ks, keep)
     skip_s = time.time() - t0
     assert kept == sorted(_key(i) for i in range(500, 510))
-    cold4 = ParquetMergeTable(spark, root, key="id", storage="object")
+    cold4 = ParquetMergeTable(spark, root, key="id")
     t0 = time.time()
     kept_pt = cold4._point_prune("id", [500 * 125_000 + 7], 2)
     point_s = time.time() - t0
@@ -158,7 +157,7 @@ def dv_tier(spark, n_positions: int = 600_000, n_files: int = 50) -> dict:
     per-record cost of CARRYING n_positions deleted rows, inline JSON
     vs the sidecar's {ref, off, n} pointers."""
     root = tempfile.mkdtemp(prefix="dvbench_")
-    t = ParquetMergeTable(spark, root, key="id", storage="object")
+    t = ParquetMergeTable(spark, root, key="id")
     step = max(1, n_positions // (n_positions // n_files))
     positions = {
         f"_data/tx-{i:08x}/part-0.parquet":
@@ -219,7 +218,7 @@ def dv_build_tier(spark, n_rows: int = 5_000_000,
             return super().put_stream(path, it())
 
     root = _tf.mkdtemp(prefix="dvbuild_")
-    t = ParquetMergeTable(spark, root, key="id", storage="object",
+    t = ParquetMergeTable(spark, root, key="id",
                           backend=Rec())
     df = (spark.range(n_rows)
           .withColumn("v", (F.col("id") * 2654435761) % 10_000_000)

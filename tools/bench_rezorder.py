@@ -43,8 +43,7 @@ def main() -> None:
 
     spark = get_spark("bench_rezorder")
     root = tempfile.mkdtemp(prefix="rez_")
-    t = ParquetMergeTable(spark, root, key="id", partition_by="p",
-                          storage="object")
+    t = ParquetMergeTable(spark, root, key="id", partition_by="p")
     df = (spark.range(n_rows)
           .withColumn("p", (F.col("id") % 8).cast("int"))
           .withColumn("v", (F.col("id") * 2654435761) % 1_000_000))

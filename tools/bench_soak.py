@@ -1,6 +1,6 @@
 """Lakehouse aging ledger (VERDICT r9 next-4): the CDC soak from
 tests/test_soak.py at 10x the row volume — ~50 streamed micro-batches
-into one object-mode table with DV keyed deletes (auto_compact_dv),
+into one table with DV keyed deletes (auto_compact_dv),
 periodic compact(target_mb=) and vacuum interleaved. Prints one JSON
 line with the bounded-metadata and latency-flatness quantities the
 BASELINE.md ledger records.
@@ -13,11 +13,11 @@ refresh, plan-driven optimize()/split_cell + vacuum cadence — printing
 the recall floor, refresh-latency flatness and bounded-metadata
 quantities for the BASELINE.md ledger.
 
-    python tools/bench_soak.py ann [rows_per_batch] [batches] [storage]
+    python tools/bench_soak.py ann [rows_per_batch] [batches]
 
-``storage`` (r13): "posix" (default) or "object" — the object-store
-variant ages the index's assignment table + meta sidecar under the
-conditional-PUT commit protocol and records the log-object bound.
+The index's assignment table + meta sidecar age under the
+conditional-PUT commit protocol; the ledger records the log-object
+bound.
 """
 
 from __future__ import annotations
@@ -34,7 +34,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def ann_main() -> None:
     rows = int(sys.argv[2]) if len(sys.argv) > 2 else 400
     batches = int(sys.argv[3]) if len(sys.argv) > 3 else 50
-    storage = sys.argv[4] if len(sys.argv) > 4 else "posix"
 
     from tests.test_soak import run_ann_soak
     from yelp_data_engineering_pipeline_spark.session import get_spark
@@ -43,13 +42,12 @@ def ann_main() -> None:
     base = tempfile.mkdtemp(prefix="annsoak_")
     try:
         rep = run_ann_soak(spark, base, n_batches=batches,
-                           rows_per_batch=rows, storage=storage)
+                           rows_per_batch=rows)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     rep.pop("refresh_s", None)
     rep["metric"] = "ann_soak"
     rep["rows_per_batch"] = rows
-    rep["storage"] = storage
     print(json.dumps(rep))
 
 

@@ -199,8 +199,7 @@ class IvfIndex:
 
     def __init__(self, spark: SparkSession, root: str,
                  id_col: str = "vec_id", vec_col: str = "embedding",
-                 partition_by: str | None = None,
-                 storage: str = "posix", backend=None,
+                 partition_by: str | None = None, backend=None,
                  store: str = "float") -> None:
         if store not in ("float", "sq8"):
             raise ValueError(f"unknown store {store!r}")
@@ -226,7 +225,7 @@ class IvfIndex:
         # cells, and a partition value must be immutable per key.
         self.assign = ParquetMergeTable(
             spark, os.path.join(root, "assign"), key=id_col,
-            partition_by=partition_by, storage=storage, backend=backend)
+            partition_by=partition_by, backend=backend)
         self._backend = self.assign._backend
 
     # ---- meta (codebook + sync cursor) ------------------------------
@@ -1003,8 +1002,7 @@ class IvfIndex:
 
 def replicate_index(spark: SparkSession, primary: IvfIndex,
                     replica_root: str, checkpoint_dir: str,
-                    storage: str = "posix", backend=None,
-                    verify: bool = True) -> IvfIndex:
+                    backend=None, verify: bool = True) -> IvfIndex:
     """Cross-region READ replica of a persisted index (r12, the
     serving topology a 100 TB deployment runs: searches go to the
     replica near the users, maintenance stays on the primary):
@@ -1039,10 +1037,9 @@ def replicate_index(spark: SparkSession, primary: IvfIndex,
     primary.assign.export_changes()
     run_replication_stream(
         spark, primary.assign, os.path.join(replica_root, "assign"),
-        checkpoint_dir, storage=storage, verify=verify)
+        checkpoint_dir, verify=verify)
     replica = IvfIndex(spark, replica_root, id_col=primary.id_col,
-                       vec_col=primary.vec_col, storage=storage,
-                       backend=backend)
+                       vec_col=primary.vec_col, backend=backend)
     replica._write_meta(meta_at_sync)
     return replica
 

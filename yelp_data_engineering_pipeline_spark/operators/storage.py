@@ -1,32 +1,35 @@
 """Storage backend seam for the lakehouse metadata plane (VERDICT r8
 next-1).
 
-``ParquetMergeTable``'s commit protocol needs exactly seven primitives,
-and every one has a direct object-store equivalent (LAKEHOUSE.md maps
-them per provider):
+``ParquetMergeTable``'s commit protocol needs exactly these primitives,
+each with a direct object-store equivalent (LAKEHOUSE.md maps them):
 
 =================  =====================  ==============================
-primitive          posix emulation        S3 / GCS / ADLS substitute
+primitive          local-disk emulation   S3 / GCS / ADLS substitute
 =================  =====================  ==============================
 put_if_absent      tmp + os.link          PUT ``If-None-Match: *`` /
                                           ``ifGenerationMatch=0``
 put (replace)      tmp + os.replace       plain PUT (single-object
                                           writes are atomic)
+put_stream         tmp + os.replace       multipart upload
 get                open().read()          GET
 list_names         os.listdir             LIST with ``/`` delimiter
 walk_files         os.walk                LIST on the prefix (flat keys)
+exists / mtime     os.path                HEAD
 delete             os.remove              DELETE
+delete_prefix      shutil.rmtree          batched DELETEs from a LIST
 copy               shutil.copyfile        CopyObject (server-side)
 =================  =====================  ==============================
 
-The table routes its METADATA I/O — the ``_log/`` manifest plane, the
-Bloom index pair, ``_CONSTRAINTS.json``, vacuum's sweep, and object-mode
-clone's file copy — through an injected backend; parquet DATA I/O stays
-on Spark (a real deployment points Spark at ``s3a://`` and the backend
-at the same bucket). posix-only primitives that have NO object analog
-(the advisory flock, snapshot-dir hardlinks) deliberately stay outside
-the seam: they exist only in ``storage="posix"`` mode, which is the
-local-filesystem layout by definition.
+The table routes ALL of its metadata I/O through an injected backend:
+the ``_log/`` manifest plane (commits, including constraint and
+clustering changes, which are manifest fields), checkpoint and DV
+sidecars, the Bloom index pair, the listing of a commit's staged data
+files, vacuum's sweep, and clone's file copy. Parquet DATA I/O stays on
+Spark (a real deployment points Spark at ``s3a://`` and the backend at
+the same bucket). There is no lock, hardlink or rename outside the
+seam: the conditional PUT of ``_log/<n>.json`` is the only
+coordination point.
 
 The seam exists so object-store REALITIES are testable without an
 object store: tests/test_storage_faults.py injects a PUT that reports
@@ -167,10 +170,10 @@ class MemoryMetaBackend(PosixBackend):
     """The METADATA plane held entirely in an in-process dict — the
     pure model of an object store's key space, with conditional-PUT
     semantics under a lock (S3 ``If-None-Match: *``). Objects under
-    the ``_log/`` prefix and the constraints file never touch the
-    filesystem; everything else (Spark-written parquet data, staged
-    files, vacuum's data sweep) delegates to posix, because local-mode
-    Spark reads data through the filesystem.
+    the ``_log/`` prefix never touch the filesystem; everything else
+    (Spark-written parquet data, staged files, vacuum's data sweep)
+    delegates to posix, because local-mode Spark reads data through
+    the filesystem.
 
     Exists for two reasons: (1) it PROVES the seam is complete — any
     table code path that bypassed the backend (a stray ``open()`` /
@@ -195,8 +198,7 @@ class MemoryMetaBackend(PosixBackend):
         import os
 
         norm = path.replace(os.sep, "/")
-        return "/_log/" in norm or norm.endswith("/_CONSTRAINTS.json") \
-            or norm.rstrip("/").endswith("/_log")
+        return "/_log/" in norm or norm.rstrip("/").endswith("/_log")
 
     def get(self, path):
         if not self._is_meta(path):

@@ -195,9 +195,7 @@ def normalize(results: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def write_star_schema(
-    tables: dict[str, DataFrame], out_dir: str, max_concurrent: int = 4
-) -> None:
+def write_star_schema(tables: dict[str, DataFrame], out_dir: str) -> None:
     """Persist the star schema as parquet (the engine's native store;
     the JDBC sink in sources/jdbc.py is the drop-in alternative).
 
@@ -223,7 +221,7 @@ def write_star_schema(
         df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
         sc.setJobDescription(None)
 
-    with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
+    with ThreadPoolExecutor(max_workers=4) as pool:
         list(pool.map(_write, tables.items()))
 
 

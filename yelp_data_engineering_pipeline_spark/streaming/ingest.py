@@ -175,7 +175,6 @@ def run_cdc_upsert_stream(
     ts_col: str,
     partition_by: str | None = None,
     delete_col: str | None = None,
-    storage: str = "posix",
     ann_index=None,
 ) -> int:
     """CDC-shaped streaming upsert: each micro-batch applies a
@@ -223,10 +222,8 @@ def run_cdc_upsert_stream(
 
     from ..operators.upsert import ParquetMergeTable
 
-    # storage="object" streams CDC into the no-POSIX (object-store)
-    # table mode — same exactly-once argument, conditional-PUT commits
     table = ParquetMergeTable(spark, table_root, key=key,
-                              partition_by=partition_by, storage=storage)
+                              partition_by=partition_by)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -352,7 +349,6 @@ def promote_replica(
     replica_root: str,
     checkpoint_dir: str,
     partition_by: str | None = None,
-    storage: str = "posix",
     carry_layout: bool = True,
 ) -> "object":
     """Failover: make the replica the writable primary, with the old
@@ -400,10 +396,10 @@ def promote_replica(
     src_table.export_changes()
     run_replication_stream(
         spark, src_table, replica_root, checkpoint_dir,
-        partition_by=partition_by, storage=storage)
+        partition_by=partition_by)
     replica = ParquetMergeTable(
         spark, replica_root, key=src_table.key,
-        partition_by=partition_by, storage=storage)
+        partition_by=partition_by)
     rep = verify_replica(src_table, replica)
     if not rep["match"]:
         raise ReplicaDivergedError(
@@ -426,7 +422,6 @@ def run_replication_stream(
     replica_root: str,
     checkpoint_dir: str,
     partition_by: str | None = None,
-    storage: str = "posix",
     max_files_per_trigger: int | None = None,
     verify: bool = False,
 ) -> int:
@@ -462,14 +457,13 @@ def run_replication_stream(
         spark, feed, replica_root, checkpoint_dir,
         key=src_table.key, ts_col="_commit_version",
         partition_by=partition_by, delete_col="_is_delete",
-        storage=storage,
     )
     if verify:
         from ..operators.upsert import ParquetMergeTable
 
         replica = ParquetMergeTable(
             spark, replica_root, key=src_table.key,
-            partition_by=partition_by, storage=storage)
+            partition_by=partition_by)
         rep = verify_replica(src_table, replica)
         if not rep["match"]:
             raise ReplicaDivergedError(
