@@ -1247,10 +1247,12 @@ def test_resident_posting_lists_load_once_under_concurrent_searches(
 def test_resident_route_needs_known_sizes_below_its_cap(
         spark, tmp_path, monkeypatch):
     """The resident route loads the whole assignment table into the
-    driver, so the auto route takes it only when every manifest entry
-    records its size and the total is below _RESIDENT_MAX_BYTES. A file
-    with no recorded bytes (it could hold any amount of data) and a
-    table at the cap keep the distributed plan — same rows either way."""
+    driver, so the auto route takes it only while the manifest's
+    recorded sizes total below _RESIDENT_MAX_BYTES; a table at the cap
+    keeps the distributed plan — same rows either way. A manifest
+    entry without its size (the retired pre-r9 layout) is refused."""
+    import json
+
     corpus = _corpus(spark, str(tmp_path / "c"), n=64)
     ix = IvfIndex(spark, str(tmp_path / "ix"))
     ix.build(corpus, n_centroids=8)
@@ -1267,15 +1269,15 @@ def test_resident_route_needs_known_sizes_below_its_cap(
     below = ix.search(q, 4, nprobe=2)
     assert _is_resident(below) and _result_rows(below) == want
 
-    real = ix.assign._zone_arrays
-
-    def one_unsized(version, cols, **kw):
-        keys, rows, byts, za = real(version, cols, **kw)
-        return keys, rows, [None] + list(byts[1:]), za
-
-    monkeypatch.setattr(ix.assign, "_zone_arrays", one_unsized)
-    unsized = ix.search(q, 4, nprobe=2)
-    assert not _is_resident(unsized) and _result_rows(unsized) == want
+    p = ix.assign._manifest_path(ix.assign.current_version())
+    with open(p) as f:
+        man = json.load(f)
+    entries = man.get("files") or man["added"]
+    del entries[sorted(entries)[0]]["bytes"]
+    with open(p, "w") as f:
+        json.dump(man, f)
+    with pytest.raises(ValueError, match="without bytes"):
+        IvfIndex(spark, str(tmp_path / "ix")).search(q, 4, nprobe=2)
 
 
 def test_resident_load_blocks_only_its_own_index(

@@ -32,6 +32,7 @@ def _entry(i: int) -> dict:
                    "nulls": 0},
             "v": {"min": 857.71 + i, "max": 555_285.16 + i, "nulls": 0},
         },
+        "bytes": 134_217_728,
     }
 
 
@@ -429,12 +430,13 @@ def test_checkpoint_carry_equals_dict_build(spark, tmp_path):
     t = _fresh(spark, tmp_path / "tbl")
     n = ParquetMergeTable._CKPT_INLINE_MAX + 200
     files = {_key(i): _entry(i) for i in range(n)}
-    files["weird.parquet"] = {"rows": 7, "cols": {}, "custom": [1]}
+    files["weird.parquet"] = {"rows": 7, "cols": {}, "bytes": 7,
+                              "custom": [1]}
     _publish_full(t, 1, files)
 
     # churn: remove 10; re-add one removed key with a different entry
     # and a NEW zone column "q" absent from the v1 sidecar
-    readd = {_key(3): {"rows": 1,
+    readd = {_key(3): {"rows": 1, "bytes": 1,
                        "cols": {"id": {"min": 0, "max": 0, "nulls": 0},
                                 "q": {"min": "a", "max": "m",
                                       "nulls": 2}}}}
@@ -444,7 +446,7 @@ def test_checkpoint_carry_equals_dict_build(spark, tmp_path):
     expected.update(readd)
 
     schema = StructType.fromJson(_SCHEMA)
-    new_files = {"fresh.parquet": {"rows": 5,
+    new_files = {"fresh.parquet": {"rows": 5, "bytes": 5,
                  "cols": {"q": {"all_null": True}}}}
     keep = sorted(expected)
     orig = ParquetMergeTable._CHECKPOINT_EVERY
@@ -473,67 +475,23 @@ def _seq_index(t, keys, k):
     return t._seq_list(keys).index(k)
 
 
-def test_checkpoint_carry_spark_tier(spark, tmp_path):
-    """Above _CKPT_SPARK_MIN resolved files the carry runs as a Spark
-    job over the parent sidecar (driver holds only the O(changed)
-    override set + compressed sidecar bytes); lowered threshold here
-    to exercise the tier — resolve must be identical and _files()
-    must never run."""
-    from pyspark.sql.types import StructType
-
-    t = _fresh(spark, tmp_path / "tbl")
-    n = ParquetMergeTable._CKPT_INLINE_MAX + 300
-    files = {_key(i): _entry(i) for i in range(n)}
-    _publish_full(t, 1, files)
-    calls = {"files": 0}
-    orig_files = t._files
-    t._files = lambda v: (calls.__setitem__("files", calls["files"] + 1)
-                          or orig_files(v))
-    keep = sorted(files)[:-7]
-    schema = StructType.fromJson(_SCHEMA)
-    # the override set mixes canonical and NON-canonical entries: the
-    # xjson rows ride pyarrow's nullable ints through the job — a
-    # pandas hop here floatifies rows/bytes (NaN ≠ null) and breaks
-    # the verbatim round-trip (regression: r11 pandas-free override)
-    added = {
-        "jobnew.parquet": _entry(0),
-        "jobbare.parquet": {"id": {"min": 5, "max": 9}},
-        "jobnorows.parquet": {"cols": {"id": {"min": 1, "max": 2}}},
-    }
-    orig_every = ParquetMergeTable._CHECKPOINT_EVERY
-    ParquetMergeTable._CHECKPOINT_EVERY = 1
-    ParquetMergeTable._CKPT_SPARK_MIN = 100
-    try:
-        man = t._externalize_files(2, t._assemble_manifest(
-            2, "merge", schema, 1, keep, added))
-        t._publish(2, man)
-    finally:
-        ParquetMergeTable._CHECKPOINT_EVERY = orig_every
-        ParquetMergeTable._CKPT_SPARK_MIN = 4_000_000
-    assert calls["files"] == 0
-    assert "ckpt" in t._manifest(2)
-    expected = {k: files[k] for k in keep}
-    expected.update(added)
-    cold = _fresh(spark, tmp_path / "tbl")
-    assert cold._files(2) == expected
-
-
 def test_checkpoint_xjson_fallback_roundtrips_noncanonical(spark, tmp_path):
-    """Entries outside the canonical zone-map shape (legacy bare
-    dicts, unknown keys, bool-typed stats) ride the checkpoint's
+    """Entries outside the canonical zone-map shape (unknown keys,
+    bool-typed stats, non-finite bounds) ride the checkpoint's
     xjson column VERBATIM: full resolve reproduces them bit-for-bit
     and the lazy classification still matches the dict twins."""
     t = _fresh(spark, tmp_path / "tbl")
     n = ParquetMergeTable._CKPT_INLINE_MAX + 50
     files = {_key(i): _entry(i) for i in range(n)}
     weird = {
-        "w0.parquet": {"id": {"min": 5, "max": 9}},       # legacy bare
         "w1.parquet": {"rows": 7, "cols": {"id": {"min": 1, "max": 2}},
-                       "custom": ["x"]},                  # unknown key
+                       "bytes": 7, "custom": ["x"]},      # unknown key
         "w2.parquet": {"rows": 3, "cols": {"id": {"min": True,
-                                                  "max": False}}},
+                                                  "max": False}},
+                       "bytes": 3},
         "w3.parquet": {"rows": 2, "cols": {"v": {"min": 0.1,
-                                                 "max": float("inf")}}},
+                                                 "max": float("inf")}},
+                       "bytes": 2},
     }
     files.update(weird)
     _publish_full(t, 1, files)

@@ -867,6 +867,41 @@ def test_normalize_star_build_plan_shape(spark, tmp_path_factory):
     release_tracked()
 
 
+def test_write_star_schema_jobs_inherit_callers_job_group(spark, tmp_path):
+    """write_star_schema's 4-writer pool submits its table writes from
+    helper threads; each write inherits the caller's local properties,
+    so every job it runs lands in the caller's job group (a traced op
+    counts them) and none runs ungrouped."""
+    from tests.yelp_fixtures import make_results, write_ndjson
+    from yelp_data_engineering_pipeline_spark.plans.normalize import (
+        normalize,
+        write_star_schema,
+    )
+    from yelp_data_engineering_pipeline_spark.schemas import RESULTS_SCHEMA
+
+    path = write_ndjson(make_results(40, seed=3), tmp_path / "r.ndjson")
+    tables = normalize(spark.read.schema(RESULTS_SCHEMA).json(str(path)))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("star-write-group", "write_star_schema under a group")
+    try:
+        write_star_schema(tables, str(tmp_path / "star"))
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    grouped = tracker.getJobIdsForGroup("star-write-group")
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    store = sc._jsc.sc().statusStore()
+    described = set()
+    for j in grouped:
+        d = store.job(j).description()
+        if d.isDefined():
+            described.add(d.get())
+    assert described >= {f"write_star_schema: {n}" for n in tables}
+
+
 def test_open_now_plan_shape(spark, tmp_path_factory):
     """yelp_e2e plan pin (VERDICT r7 next-6): restaurants_open_now over
     the STORAGE-BACKED star (parquet write + read-back, matching the

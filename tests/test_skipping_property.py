@@ -181,12 +181,11 @@ def _files_dict(draw):
     cols = ["c0", "c1"]
     out = {}
     for i in range(n):
-        e = {"rows": draw(st.integers(0, 1000)), "cols": {}}
+        e = {"rows": draw(st.integers(0, 1000)), "cols": {},
+             "bytes": draw(st.integers(0, 10**9))}
         for c in cols:
             if draw(st.booleans()):
                 e["cols"][c] = draw(_zone())
-        if draw(st.booleans()):
-            e["bytes"] = draw(st.integers(0, 10**9))
         out[f"f{i:02d}.parquet"] = e
     return out
 
@@ -231,7 +230,7 @@ def test_mask_point_matches_dict_twin(files, vals):
     hit = t._mask_point(za, len(keys), col, norm)
 
     def dict_hit(zm):
-        z = t._zone_cols(zm).get(col)
+        z = zm["cols"].get(col)
         if not z:
             return True
         if z.get("all_null"):
@@ -262,9 +261,7 @@ def test_checkpoint_entry_codec_roundtrip(files):
         enc = t._encode_entry(e)
         assert enc is not None, e
         rows, byts, colz = enc
-        back = {"rows": rows, "cols": {}}
-        if byts is not None:
-            back["bytes"] = byts
+        back = {"rows": rows, "cols": {}, "bytes": byts}
         for c, (mn, mx, nl, an) in colz.items():
             z = t._decode_zone(mn, mx, nl, an)
             assert z is not None
@@ -286,7 +283,7 @@ def test_checkpoint_entry_codec_rejects_noncanonical():
         {"rows": 1, "cols": {"c": {"min": 1, "max": 2, "nulls": True}}},
         {"rows": 1, "cols": {"c": {"min": float("nan"), "max": 1.0}}},
         {"rows": 1, "cols": {"c": {"min": 1, "max": 2, "x": 3}}},
-        {"id": {"min": 1, "max": 2}},                  # legacy bare
     ]
     for e in bad:
-        assert t._encode_entry(e) is None, e
+        assert t._encode_entry({**e, "bytes": 1}) is None, e
+    assert t._encode_entry({"rows": 1, "cols": {}}) is None   # no bytes

@@ -583,9 +583,9 @@ def test_race_with_pure_add_commit_zone_gated(spark, tmp_path):
     # never rebase-safe; a provably-missing add is
     man3 = victim._manifest(3)
     read = victim._point_prune("id", [10], 3)
-    fake_added_hit = {"rows": 1,
+    fake_added_hit = {"rows": 1, "bytes": 1,
                       "cols": {"id": {"min": 8, "max": 12, "nulls": 0}}}
-    fake_added_miss = {"rows": 1,
+    fake_added_miss = {"rows": 1, "bytes": 1,
                        "cols": {"id": {"min": 9000, "max": 9001,
                                        "nulls": 0}}}
     import json as _json

@@ -1964,11 +1964,12 @@ def test_vacuum_live_reader_fails_loudly(spark, tmp_path):
 def test_bloom_packed_encoding_parity_and_size(spark, tmp_path):
     """VERDICT r7 next-3: the Bloom index persists as a dense packed
     bitset pair (json meta + raw .bin) instead of JSON words. Pins
-    (a) probe PARITY between the packed blob and the sparse words
-    form it replaced (reconstructed bit-exactly from the blob),
-    (b) zero false negatives against ground truth, and (c) the size
-    budget: ≤1.5 bytes/row at 10 bits/row (the r7 JSON words encoding
-    cost ~4.6 B/row on the 6M fixture)."""
+    (a) PARITY: each file's Spark-built blob equals, byte for byte,
+    the blob ``_words_to_blob`` packs from a pure-Python model of the
+    same hashing over that file's values, (b) zero false negatives
+    against ground truth, and (c) the size budget: ≤1.5 bytes/row at
+    10 bits/row (the r7 JSON words encoding cost ~4.6 B/row on the 6M
+    fixture)."""
     import json as _json
     import os
 
@@ -1989,24 +1990,20 @@ def test_bloom_packed_encoding_parity_and_size(spark, tmp_path):
     idx = t.file_index()["u"]
     assert idx and all("blob" in e for e in idx.values())
 
-    # (a) parity: words form reconstructed from the blob probes
-    # identically for present and absent values
-    def to_words(e):
-        blob, m = e["blob"], e["m"]
-        words = {}
-        for w in range(m // 64):
-            bits = int.from_bytes(blob[8 * w:8 * w + 8], "little")
-            if bits:
-                words[str(w)] = bits
-        return {"m": m, "words": words}
-
-    words_idx = {k: to_words(e) for k, e in idx.items()}
+    # (a) parity with the words model: k bits per value, word w of a
+    # file's bitset holds bits [64w, 64w + 64)
+    words: dict = {k: {} for k in idx}
+    for r in t._scan(t.current_version(), keep_pos=True).select(
+            "_file_rel", "u").collect():
+        m = idx[r._file_rel]["m"]
+        h1, h2 = t._bloom_h12(r.u)
+        for i in range(t._BLOOM_K):
+            b = (h1 + i * h2) % m
+            ws = words[r._file_rel]
+            ws[b // 64] = ws.get(b // 64, 0) | (1 << (b % 64))
+    for k, e in idx.items():
+        assert e["blob"] == t._words_to_blob(e["m"], words[k]), k
     present = [r.u for r in t.read().select("u").limit(50).collect()]
-    probes = present + [f"absent-{i}" for i in range(200)]
-    for k in idx:
-        for p in probes:
-            assert t._bloom_might_contain(idx[k], p) == \
-                t._bloom_might_contain(words_idx[k], p)
 
     # (b) no false negatives: every present value's lookup is exact
     probe = present[:5]
@@ -2307,9 +2304,9 @@ def test_compact_bin_packs_by_target_size(spark, tmp_path):
     """compact(target_mb=) sizes the output from the manifest's
     per-file bytes (recorded at write time — no filesystem listing):
     a generous target collapses to one file, a tiny target fans out to
-    ceil(total/target) files, rows are byte-identical, and entries
-    without a bytes field (pre-r9 manifests) fall back to
-    target_files."""
+    ceil(total/target) files, and rows are byte-identical. An entry
+    without a bytes field (the retired pre-r9 layout) is refused."""
+    import json
     import math
 
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id")
@@ -2333,17 +2330,18 @@ def test_compact_bin_packs_by_target_size(spark, tmp_path):
     assert n2 == want >= 2
     assert t.read().count() == 50_000
 
-    # pre-r9 manifest entries (no bytes): falls back to target_files
-    man = dict(t._manifest(v2))
-    stripped = {k: {kk: vv for kk, vv in zm.items() if kk != "bytes"}
-                for k, zm in t._files(v2).items()}
-    man["files"] = stripped
-    man.pop("ckpt", None)
-    t._mcache[v2] = man
-    t._fcache.pop(v2, None)
-    v3 = t.compact(target_mb=0.001, target_files=2)
-    assert len(t._files(v3)) == 2                  # fallback honored
-    assert t.read().count() == 50_000
+    # a pre-r9 manifest entry (no bytes) is refused, nothing commits
+    p = t._manifest_path(v2)
+    with open(p) as f:
+        man = json.load(f)
+    for zm in man["files"].values():
+        del zm["bytes"]
+    with open(p, "w") as f:
+        json.dump(man, f)
+    cold = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id")
+    with pytest.raises(ValueError, match="without bytes"):
+        cold.compact(target_mb=0.001, target_files=2)
+    assert cold.current_version() == v2
 
 
 def test_maintenance_plan_reports_small_files(spark, tmp_path):
@@ -2603,14 +2601,16 @@ def test_bloom_index_survives_churn_without_rebuild(spark, tmp_path):
     assert got == want and got
 
 
-def test_bloom_coverage_reporting_matches_ground_truth(spark, tmp_path):
+def test_bloom_coverage_reporting_matches_ground_truth(spark, tmp_path,
+                                                      monkeypatch):
     """The coverage leg must report indexed∩live / live exactly, and
-    recommend a rebuild below the floor. auto_bloom=False restores the
-    r9 carry-only behavior, so churn visibly decays coverage."""
+    recommend a rebuild below the floor. The per-commit indexing of
+    added files is best-effort: when it fails, those files stay
+    unindexed, so churn visibly decays coverage."""
     from urllib.parse import unquote
 
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
-                          partition_by="p", auto_bloom=False)
+                          partition_by="p")
 
     def batch(ids):
         return spark.createDataFrame(
@@ -2621,16 +2621,22 @@ def test_bloom_coverage_reporting_matches_ground_truth(spark, tmp_path):
     t.build_file_index("u")
     assert t.maintenance_plan()["bloom"]["u"]["coverage"] == 1.0
 
-    for b in range(8):     # churn partitions 0/1 only, no rebuild —
-        # partitions 2/3 keep their carried entries
-        t.merge(batch([800 + 4 * (10 * b + j) + b % 2 for j in range(10)]))
+    def failing_build(*a, **k):
+        raise RuntimeError("incremental index job lost")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(t, "_bloom_build_entries", failing_build)
+        for b in range(8):     # churn partitions 0/1 only, no rebuild
+            # — partitions 2/3 keep their carried entries
+            t.merge(batch([800 + 4 * (10 * b + j) + b % 2
+                           for j in range(10)]))
     v = t.current_version()
     live = set(t._file_keys(v))
     idx = t.file_index(v)["u"]
     want_cov = sum(1 for k in idx if unquote(k) in live) / len(live)
     plan = t.maintenance_plan()
     assert plan["bloom"]["u"]["coverage"] == round(want_cov, 4)
-    assert want_cov < 1.0             # carry-only really decayed
+    assert want_cov < 1.0             # failed maintenance decayed it
     if want_cov < t._BLOOM_COVERAGE_FLOOR:
         assert "build_file_index('u')" in plan["actions"]
     # unindexed files stay candidates: correctness holds under decay

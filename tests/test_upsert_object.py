@@ -281,28 +281,141 @@ def test_object_mode_compact_collapses_read_groups(spark, tmp_path):
     assert got == {0: 100, 1: 101, 2: 2, 3: 3}
 
 
-def test_snapshot_layout_manifest_refused_on_read_and_write(spark,
-                                                           tmp_path):
-    """A manifest in the retired per-version snapshot layout
-    (``base: "snapshot"``, files under ``v=<n>/``) is refused with a
-    clear ValueError by reads and by writes — never misread as
-    root-relative references."""
+def _strip_head(t, fn):
+    """Rewrite the head manifest on disk, applying ``fn`` to it."""
     import json
     from pathlib import Path
 
-    t = _table(spark, tmp_path / "tbl")
-    t.merge(spark.range(0, 5).withColumn("v", F.col("id")))
-    p = Path(t._manifest_path(1))
+    p = Path(t._manifest_path(t.current_version()))
     man = json.loads(p.read_text())
-    man["base"] = "snapshot"
+    fn(man)
     p.write_text(json.dumps(man))
+
+
+def _first_entry(man):
+    return man["files"][sorted(man["files"])[0]]
+
+
+def _rewrite_ckpt(t, fn):
+    """Rewrite the head's checkpoint sidecar as ``fn(arrow table)``."""
+    import pyarrow.parquet as pq
+
+    path = t._ckpt_path(t._manifest(t.current_version())["ckpt"])
+    pq.write_table(fn(pq.read_table(path)), path)
+
+
+def _retire_snapshot(spark, t):
+    _strip_head(t, lambda m: m.__setitem__("base", "snapshot"))
+
+
+def _retire_bare_entry(spark, t):
+    def bare(man):
+        k = sorted(man["files"])[0]
+        man["files"][k] = man["files"][k]["cols"]
+    _strip_head(t, bare)
+
+
+def _retire_unsized_entry(spark, t):
+    _strip_head(t, lambda m: _first_entry(m).pop("bytes"))
+
+
+def _retire_r9_sidecar(spark, t):
+    import json
+
+    import pyarrow as pa
+
+    files = t._files(t.current_version())
+    _rewrite_ckpt(t, lambda _: pa.table({
+        "key": sorted(files),
+        "entry": [json.dumps(files[k]) for k in sorted(files)]}))
+
+
+def _retire_unsized_sidecar(spark, t):
+    import pyarrow as pa
+
+    def unsized(tbl):
+        b = tbl.column("bytes").to_pylist()
+        b[0] = None
+        i = tbl.schema.get_field_index("bytes")
+        return tbl.set_column(i, "bytes", pa.array(b, pa.int64()))
+    _rewrite_ckpt(t, unsized)
+
+
+def _retire_bloom_words(spark, t):
+    import json
+    from pathlib import Path
+
+    t.build_file_index("id")
+    v = t.current_version()
+    words = {
+        col: {k: {"m": e["m"], "words": {
+            str(w): int.from_bytes(e["blob"][8 * w:8 * w + 8], "little")
+            for w in range(len(e["blob"]) // 8)}}
+            for k, e in files.items()}
+        for col, files in t.file_index(v).items()}
+    Path(t._bloom_file(v)).write_text(json.dumps(words))
+
+
+def _retire_feed_marker(spark, t):
+    import json
+
+    assert t.export_changes() == [1]
+    rec = json.loads(t._backend.get(t._cdf_marker(1)))
+    del rec["schema"]
+    t._backend.put(t._cdf_marker(1), json.dumps(rec).encode())
+
+
+def _read(spark, t):
+    t.read().collect()
+
+
+def _merge(spark, t):
+    t.merge(spark.createDataFrame([(9, 9)], "id long, v long"))
+
+
+# (rewrite into the retired shape, a read that decodes it, a write
+# that decodes it before committing, sidecar listing?)
+_RETIRED = {
+    "snapshot": (_retire_snapshot, _read, _merge, False),
+    "bare_entry": (_retire_bare_entry, _read, _merge, False),
+    "unsized_entry": (_retire_unsized_entry, _read, _merge, False),
+    "r9_sidecar": (_retire_r9_sidecar, _read, _merge, True),
+    "unsized_sidecar": (_retire_unsized_sidecar, _read, _merge, True),
+    # the Bloom index is decoded by point pruning and before every
+    # commit's publish; the feed marker by the feed's reader/exporter
+    "bloom_words": (_retire_bloom_words,
+                    lambda spark, t: t.read_point("id", [3]).collect(),
+                    _merge, False),
+    "feed_marker": (_retire_feed_marker,
+                    lambda spark, t: t.stream_changes(),
+                    lambda spark, t: t.export_changes(), False),
+}
+
+
+@pytest.mark.parametrize("layout", sorted(_RETIRED))
+def test_snapshot_layout_manifest_refused_on_read_and_write(
+        spark, tmp_path, monkeypatch, layout):
+    """Every retired on-disk layout — the per-version snapshot manifest
+    (``base: "snapshot"``, files under ``v=<n>/``), bare col→zone file
+    entries, entries without ``bytes``, r9 ``(key, entry)`` checkpoint
+    sidecars, canonical sidecar rows without ``bytes``, the pre-packed
+    Bloom "words" JSON and finalized feed markers without a schema — is
+    refused with a clear ValueError by a read and by a write that
+    decode it, never misread; the failed write commits nothing."""
+    retire, read, write, sidecar = _RETIRED[layout]
+    if sidecar:
+        monkeypatch.setattr(ParquetMergeTable, "_CKPT_INLINE_MAX", 2)
+    t = _table(spark, tmp_path / "tbl")
+    t.merge(spark.range(0, 8).withColumn("v", F.col("id")).repartition(4))
+    assert ("ckpt" in t._manifest(1)) == sidecar
+    retire(spark, t)
+    v = t.current_version()
+    with pytest.raises(ValueError, match="retired"):
+        read(spark, _table(spark, tmp_path / "tbl"))
     fresh = _table(spark, tmp_path / "tbl")
-    with pytest.raises(ValueError, match="snapshot"):
-        fresh.read()
-    fresh = _table(spark, tmp_path / "tbl")
-    with pytest.raises(ValueError, match="snapshot"):
-        fresh.merge(spark.createDataFrame([(9, 9)], "id long, v long"))
-    assert fresh.current_version() == 1          # nothing committed
+    with pytest.raises(ValueError, match="retired"):
+        write(spark, fresh)
+    assert fresh.current_version() == v          # nothing committed
 
 
 def test_object_mode_time_travel_and_cdf(spark, tmp_path):

@@ -262,9 +262,8 @@ def main() -> None:
     }
 
     # -- full-rewrite baseline LAST (it destroys the clustering) -------
-    # auto_bloom off for this op: the baseline engine being modeled has
-    # no index to maintain, so its cost must not ride the measurement
-    t.auto_bloom = False
+    # (its time includes indexing the rewritten files for the table's
+    # Bloom index, which every commit maintains)
     lo = dlo + (dhi - dlo) // 5
     hi = lo + width
     expect = t.read().filter(not_between(lo, hi)).count()

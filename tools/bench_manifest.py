@@ -40,6 +40,7 @@ def _entry(i: int) -> dict:
                   "nulls": 0},
             "p": {"min": "1-URGENT", "max": "5-LOW", "nulls": 0},
         },
+        "bytes": 134_217_728,
     }
 
 
@@ -169,7 +170,8 @@ def dv_tier(spark, n_positions: int = 600_000, n_files: int = 50) -> dict:
     man = {"format": 2, "version": 1, "operation": "m",
            "committed_at_unix": 0.0, "base": "root", "schema": _SCHEMA,
            "dv": positions, "n_files": n_files, "chain": 0,
-           "files": {k: {"rows": 1, "cols": {}} for k in positions}}
+           "files": {k: {"rows": 1, "cols": {}, "bytes": 1}
+                     for k in positions}}
     t0 = time.time()
     man2 = t._externalize_dv(1, man)
     write_s = time.time() - t0

@@ -581,8 +581,8 @@ class IvfIndex:
         Routing. Default ``prune_files=None`` = AUTO, decided by a
         metadata-only probe of the assignment table's manifest bytes:
 
-        - below :attr:`_RESIDENT_MAX_BYTES`, every file's size known,
-          and no ``where`` or ``rerank``: the RESIDENT route. The
+        - below :attr:`_RESIDENT_MAX_BYTES` and no ``where`` or
+          ``rerank``: the RESIDENT route. The
           table's posting lists (ids, stored vectors, norms per cell)
           are loaded into driver memory once per committed table
           version and cached per (application, index root); every
@@ -644,12 +644,9 @@ class IvfIndex:
             av = self.assign.current_version()
             _, _, bytes_a, _ = self.assign._zone_arrays(
                 av, [], with_bytes=True, with_rows=False)
-            total_b = sum(b for b in bytes_a if isinstance(b, int))
+            total_b = sum(bytes_a)
             prune_files = total_b >= self._PRUNE_MIN_BYTES
-            # a file with no recorded size could hold any amount of
-            # data: only a fully sized table is loaded into the driver
-            sized = all(isinstance(b, int) for b in bytes_a)
-            if (sized and total_b < self._RESIDENT_MAX_BYTES
+            if (total_b < self._RESIDENT_MAX_BYTES
                     and where is None and rerank is None):
                 out = self._resident_search(
                     queries, k, nprobe, av, cents, m.get("store", "float"))

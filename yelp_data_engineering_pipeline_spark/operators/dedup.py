@@ -1334,8 +1334,11 @@ def dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster computes docs→s1→s2 while the driver builds plans. The
     # cache manager serializes any per-partition race with round 0;
     # results are unchanged (the fill is the same subtree round 0 would
-    # compute).
+    # compute). The fill is wrapped in inheritable_thread_target at
+    # submit time, so its jobs inherit the caller's job group.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     sc = spark.sparkContext
 
@@ -1345,7 +1348,7 @@ def dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         sc.setJobDescription(None)
 
     with ThreadPoolExecutor(max_workers=1) as _pool:
-        _fill = _pool.submit(_fill_tiers)
+        _fill = _pool.submit(inheritable_thread_target(spark)(_fill_tiers))
         pairs = minhash_lsh_pairs(s2, "doc_id", "text", jaccard_threshold=0.5)
         labels = connected_components(pairs, "doc_a", "doc_b")
         _fill.result()

@@ -465,7 +465,6 @@ class ParquetMergeTable:
     def __init__(self, spark: SparkSession, root: str, key: str,
                  partition_by: str | list[str] | tuple[str, ...] | None = None,
                  auto_compact_dv: float | None = None,
-                 auto_bloom: bool = True,
                  backend=None) -> None:
         import os
 
@@ -484,9 +483,6 @@ class ParquetMergeTable:
         # opt-in DV maintenance: after DV-writing DML, compact when
         # density crosses this (see maintenance_plan / BASELINE.md)
         self.auto_compact_dv = auto_compact_dv
-        # per-commit Bloom-index maintenance for ADDED files (VERDICT
-        # r9 next-2); False = carry-only (the r9 decay behavior)
-        self.auto_bloom = auto_bloom
         # one column or several (hive-nested dirs p1=a/p2=b — the
         # date+source layout real lakehouse tables use); internal code
         # works on the normalized tuple
@@ -552,14 +548,33 @@ class ParquetMergeTable:
 
             man = _json.loads(self._backend.get(self._manifest_path(version)))
             if man.get("base") != "root":
-                raise ValueError(
-                    f"table at {self.root}: manifest v{version} uses the "
-                    f"retired {man.get('base', 'snapshot')!r} layout "
-                    "(per-version v=<n> snapshot directories); only "
-                    "_data/tx-<id> tables are supported"
-                )
+                raise self._retired(
+                    version, f"{man.get('base', 'snapshot')!r} manifest "
+                    "(per-version v=<n> snapshot directories)")
+            for sec in ("files", "added"):
+                for e in man.get(sec, {}).values():
+                    self._check_entry(version, e)
             self._mcache[version] = man
         return man
+
+    # One on-disk format: every reader decodes a record or sidecar in
+    # exactly one place (_manifest, _ckpt_table, file_index,
+    # _feed_marker), and that place refuses the layouts older builds
+    # wrote instead of carrying read-compat branches for them.
+
+    def _retired(self, version: int, layout: str) -> ValueError:
+        return ValueError(
+            f"table at {self.root}: v{version} uses the retired {layout} "
+            "layout; only the current on-disk format is supported")
+
+    def _check_entry(self, version: int, e) -> None:
+        """A file entry must be ``{"rows", "cols": {col: zone},
+        "bytes": int, ...}`` — what every writer records."""
+        if not isinstance(e, dict) or not isinstance(e.get("cols"), dict):
+            raise self._retired(version, "bare col->zone file entry")
+        b = e.get("bytes")
+        if not isinstance(b, int) or isinstance(b, bool):
+            raise self._retired(version, "file entry without bytes (pre-r9)")
 
     # Full manifests above this many files externalize their listing
     # to a PARQUET sidecar (zstd, one row per file) instead of inline
@@ -581,10 +596,9 @@ class ParquetMergeTable:
 
     # -- checkpoint entry codec (the COLUMNAR stats layout) -----------
     #
-    # The r9 checkpoint stored one JSON blob per file; resolving a
-    # predicate then parsed EVERY file's full entry into a driver dict
-    # — ~12 s and GB-scale memory at a 100 TB table's ~800k files
-    # (VERDICT r9 next-1). The r10 layout columnarizes the zone maps:
+    # Resolving a predicate must not parse EVERY file's full entry
+    # into a driver dict (~12 s and GB-scale memory at a 100 TB
+    # table's ~800k files), so the sidecar columnarizes the zone maps:
     # per table column c the sidecar carries ``z:min:c`` / ``z:max:c``
     # (JSON-encoded normalized bounds), ``z:nul:c`` (exact null count,
     # NULL = unknown) and ``z:an:c`` (TRUE = all-null zone, FALSE =
@@ -607,13 +621,10 @@ class ParquetMergeTable:
 
         if not isinstance(e, dict) or not cls._ENTRY_KEYS >= e.keys():
             return None
-        rows, cols = e.get("rows"), e.get("cols")
-        byts = e.get("bytes")
+        rows, cols, byts = e.get("rows"), e.get("cols"), e.get("bytes")
         if not isinstance(rows, int) or isinstance(rows, bool) or \
+                not isinstance(byts, int) or isinstance(byts, bool) or \
                 not isinstance(cols, dict):
-            return None
-        if "bytes" in e and (not isinstance(byts, int) or
-                             isinstance(byts, bool)):
             return None
         out: dict[str, tuple] = {}
         for c, z in cols.items():
@@ -737,15 +748,6 @@ class ParquetMergeTable:
         out["ckpt"] = name
         return out
 
-    # Checkpoint carries whose resolved file count crosses this run as
-    # a SPARK JOB over the parent sidecar instead of a driver-side
-    # Arrow kernel. The Arrow tier is measured ~0.6 µs/file (ladder:
-    # ckpt_carry at 1M files ≈ 0.6 s, flat), so the job tier — whose
-    # fixed admission cost is ~1-3 s — only wins once the sidecar
-    # itself outgrows comfortable driver memory (~4M+ files, i.e. a
-    # multi-100-TB table). Tests lower this to exercise the path.
-    _CKPT_SPARK_MIN = 4_000_000
-
     def _ckpt_column_order(self, names) -> list[str]:
         """Deterministic checkpoint column order: key, rows, bytes,
         sorted zone columns, xjson — the layout _entries_to_arrow
@@ -754,73 +756,49 @@ class ParquetMergeTable:
         return ["key", "rows", "bytes"] + zs + ["xjson"]
 
     def _carry_checkpoint(self, new_v: int, parent_v: int,
-                          keep_rels, entries: dict) -> str | None:
+                          keep_rels, entries: dict) -> str:
         """Build checkpoint ``new_v``'s sidecar by COLUMNAR CARRY from
-        the parent's checkpoint — the VERDICT r10 next-1 fix for the
-        last linear driver pass. The r10 build materialized every live
-        file's record as a Python dict and re-encoded it (~34 µs/file
-        → 33.9 s at 1M files); this path never touches carried
-        entries row-at-a-time: the parent sidecar is filtered with one
-        vectorized ``is_in`` mask, the bounded O(changed-files)
-        override set (delta-chain adds + this commit's new entries) is
-        encoded and concatenated with null-promotion for new zone
-        columns, and the result is key-sorted and written — all Arrow
-        kernels, ~0.6 µs/file flat (Delta's checkpoint-from-checkpoint
-        design). Above :attr:`_CKPT_SPARK_MIN` resolved files the same
-        carry runs as a Spark job (:meth:`_carry_checkpoint_spark`)
-        so the driver holds only the O(changed) override set and the
-        compressed sidecar bytes. Returns the sidecar name, or None
-        when the fast path doesn't apply (no parent full record with a
-        columnar sidecar → caller falls back to the dict build)."""
+        the parent's nearest full record and return the sidecar name.
+        Carried entries are never touched row-at-a-time: the parent
+        sidecar is filtered with one vectorized ``is_in`` mask, the
+        bounded O(changed-files) override set (delta-chain adds + this
+        commit's new entries) is encoded and concatenated with
+        null-promotion for new zone columns, and the result is
+        key-sorted and written — all Arrow kernels (Delta's
+        checkpoint-from-checkpoint design). ``tools/bench_manifest.py``
+        measures it: 3.7 s at 1M files on a 4-core host, where the
+        per-file dict re-encode it replaced took 33.9 s."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        if parent_v < 1:
-            return None
         chain, man = self._walk_to_full(parent_v)
         fileset = set(keep_rels) | set(entries)
         # replay the bounded delta chain: which keys' entries are
         # defined by a delta (latest wins) vs by the full record
-        drop: set = set()
         addmap: dict = {}
         for d in reversed(chain):
             for r in d.get("removed", ()):
-                drop.add(r)
                 addmap.pop(r, None)
-            for k, e in d.get("added", {}).items():
-                addmap[k] = e
-                drop.discard(k)
+            addmap.update(d.get("added", {}))
         override = {k: e for k, e in addmap.items()
                     if k in fileset and k not in entries}
         override.update(entries)
         carry_set = fileset - set(override)
-        if "ckpt" not in man:
-            if "files" not in man:
-                return None
+        if "files" in man:
             # inline full parent (≤ _CKPT_INLINE_MAX entries): the
             # bounded dict encode IS the cheap path
             base = self._entries_to_arrow(
                 {k: v for k, v in man["files"].items() if k in carry_set})
-            if base.num_rows != len(carry_set):
-                return None                      # inconsistent: fallback
         else:
-            if len(fileset) >= self._CKPT_SPARK_MIN:
-                # non-carried parent keys, all O(changed) in SIZE:
-                # chain-removed + overridden + removed by this commit
-                base_keys = set(self._file_keys(parent_v))
-                gone = ((drop & base_keys) | (set(override) & base_keys)
-                        | (base_keys - fileset))
-                return self._carry_checkpoint_spark(
-                    new_v, man, gone, override)
             t = self._ckpt_table(man)
-            if "entry" in t.schema.names:        # legacy r9 layout
-                return None
-            mask = pc.is_in(t.column("key"),
-                            value_set=pa.array(list(carry_set),
-                                               pa.string()))
-            base = t.filter(mask)
-            if base.num_rows != len(carry_set):
-                return None                      # inconsistent: fallback
+            base = t.filter(pc.is_in(
+                t.column("key"),
+                value_set=pa.array(list(carry_set), pa.string())))
+        if base.num_rows != len(carry_set):
+            raise RuntimeError(
+                f"table at {self.root}: v{new_v} carries "
+                f"{len(carry_set)} files but v{man['version']}'s "
+                f"listing holds {base.num_rows} of them")
         parts = [base]
         if override:
             parts.append(self._entries_to_arrow(override))
@@ -830,117 +808,60 @@ class ParquetMergeTable:
         comb = comb.select(self._ckpt_column_order(comb.schema.names))
         return self._write_ckpt_sidecar(new_v, comb)
 
-    def _carry_checkpoint_spark(self, new_v: int, man: dict,
-                                gone: set, override: dict) -> str:
-        """The JOB tier of the checkpoint carry: executors read the
-        parent sidecar parquet, broadcast-anti-join the O(changed)
-        non-carried key set (``gone`` = chain-removed + overridden +
-        removed by this commit), union the encoded override rows, and
-        sort — the driver's role shrinks to staging the override set
-        and the conditional PUT of the resulting sidecar bytes
-        (Delta's distributed checkpoint write). Used above
-        _CKPT_SPARK_MIN resolved files, where the Arrow tier's
-        driver-resident table would strain memory; driver-side state
-        here is bounded by the CHANGED files and the compressed
-        sidecar bytes, never by per-file records."""
-        import glob
-        import os
-        import shutil
-        import tempfile
-        import uuid
-
-        from .storage import PosixBackend
-
-        src = self._ckpt_path(man["ckpt"])
-        tmp_in = None
-        if not isinstance(self._backend, PosixBackend):
-            # non-posix backends: stage the compressed sidecar bytes
-            # to local disk for the executors (one O(sidecar-bytes)
-            # shuttle; entries never materialize on the driver)
-            fd, tmp_in = tempfile.mkstemp(suffix=".parquet")
-            with os.fdopen(fd, "wb") as f:
-                f.write(self._backend.get(src))
-            src = tmp_in
-        out_dir = tempfile.mkdtemp(prefix="ckptcarry_")
-        try:
-            kept = self.spark.read.parquet(src)
-            if gone:
-                gone_df = self.spark.createDataFrame(
-                    [(k,) for k in sorted(gone)], "key string")
-                kept = kept.join(F.broadcast(gone_df), "key",
-                                 "left_anti")
-            if override:
-                # ship the override rows as PARQUET, never through
-                # pandas: to_pandas() floatifies nullable int64 (rows/
-                # bytes/z:nul become float64 with NaN ≠ null) whenever
-                # any override entry is non-canonical, which would
-                # write a double-typed, NaN-polluted sidecar and break
-                # the xjson verbatim contract
-                import pyarrow.parquet as pq
-
-                ov_path = os.path.join(out_dir, "override.parquet")
-                pq.write_table(self._entries_to_arrow(override),
-                               ov_path)
-                delta = self.spark.read.parquet(ov_path)
-                # unionByName null-fills zone columns new to either
-                # side — same promotion the Arrow tier applies; readers
-                # address checkpoint columns BY NAME, so the appended
-                # column order is cosmetic
-                kept = kept.unionByName(delta, allowMissingColumns=True)
-            (kept.sort("key").coalesce(1)
-                 .write.option("compression", "zstd")
-                 .parquet(os.path.join(out_dir, "out")))
-            part = glob.glob(os.path.join(out_dir, "out",
-                                          "part-*.parquet"))[0]
-            with open(part, "rb") as f:
-                blob = f.read()
-            name = f"{new_v}.ckpt.{uuid.uuid4().hex[:10]}.parquet"
-            self._backend.put(self._ckpt_path(name), blob)
-            return name
-        finally:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            if tmp_in:
-                os.unlink(tmp_in)
-
     def _ckpt_table(self, man: dict, columns=None):
         """Read the checkpoint sidecar, optionally a COLUMN SUBSET —
-        the lazy read the skipping plane rides on. Requested columns
-        absent from the sidecar's schema are silently skipped (legacy
-        r9 sidecars carry (key, entry) only)."""
+        the lazy read the skipping plane rides on (requested zone
+        columns the sidecar lacks are skipped). The layout is checked
+        from the schema and footer statistics, so a keys-only read
+        stays a one-column read: r9 ``(key, entry)`` sidecars and
+        canonical rows without ``bytes`` are refused, and the rare
+        ``xjson`` entries are checked when that column is read."""
         import io
+        import json as _json
 
         import pyarrow.parquet as pq
 
-        bio = io.BytesIO(self._backend.get(self._ckpt_path(man["ckpt"])))
-        if columns is None:
-            return pq.read_table(bio)
-        have = set(pq.ParquetFile(bio).schema_arrow.names)
-        bio.seek(0)
-        return pq.read_table(bio, columns=[c for c in columns
-                                           if c in have])
+        v = man["version"]
+        pf = pq.ParquetFile(
+            io.BytesIO(self._backend.get(self._ckpt_path(man["ckpt"]))))
+        names = pf.schema_arrow.names
+        if "entry" in names:
+            raise self._retired(v, "r9 (key, entry) checkpoint sidecar")
+        # every row is canonical (bytes set) or xjson (bytes NULL), so
+        # NULL bytes beyond the xjson row count are unsized entries
+        md = pf.metadata
+        nulls = 0
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            for c in ("bytes", "xjson"):
+                st = rg.column(names.index(c)).statistics
+                nulls += (st.null_count if st is not None and
+                          st.has_null_count else 0)
+        if nulls > md.num_rows:
+            raise self._retired(v, "file entry without bytes (pre-r9)")
+        t = pf.read(columns=None if columns is None else
+                    [c for c in columns if c in names])
+        if "xjson" in t.column_names:
+            x = t.column("xjson")
+            if x.null_count < len(x):
+                for s in x.drop_null().to_pylist():
+                    self._check_entry(v, _json.loads(s))
+        return t
 
     def _full_files(self, man: dict) -> dict:
         """The files section of a FULL record — inline, or decoded
-        from its parquet checkpoint sidecar (columnar r10 layout, or
-        the legacy r9 (key, entry-JSON) layout)."""
+        from its columnar parquet checkpoint sidecar."""
         if "files" in man:
             return man["files"]
         import json as _json
 
         t = self._ckpt_table(man)
-        names = set(t.schema.names)
-        if "entry" in names:                      # legacy layout
-            return {
-                k: _json.loads(e)
-                for k, e in zip(t.column("key").to_pylist(),
-                                t.column("entry").to_pylist())
-            }
         keys = t.column("key").to_pylist()
-        n = len(keys)
         rows_a = t.column("rows").to_pylist()
         bytes_a = t.column("bytes").to_pylist()
         xjson = t.column("xjson").to_pylist()
-        zc = sorted(c[len("z:an:"):] for c in names if c.startswith("z:an:"))
+        zc = sorted(c[len("z:an:"):] for c in t.column_names
+                    if c.startswith("z:an:"))
         cells = {
             c: (t.column(f"z:min:{c}").to_pylist(),
                 t.column(f"z:max:{c}").to_pylist(),
@@ -958,10 +879,7 @@ class ParquetMergeTable:
                 z = self._decode_zone(mns[i], mxs[i], nls[i], ans[i])
                 if z is not None:
                     cols[c] = z
-            e: dict = {"rows": rows_a[i], "cols": cols}
-            if bytes_a[i] is not None:
-                e["bytes"] = bytes_a[i]
-            out[k] = e
+            out[k] = {"rows": rows_a[i], "cols": cols, "bytes": bytes_a[i]}
         return out
 
     # Deletion vectors above this many TOTAL inline positions per
@@ -1299,9 +1217,8 @@ class ParquetMergeTable:
         aligned python lists with decoded bounds, present only for
         requested columns that carry any zone info. Sources, cheapest
         first: the resolver cache, an inline full record, the
-        checkpoint's COLUMN SUBSET, a legacy (key, entry) checkpoint
-        (full parse — r9-written tables only); then the delta chain
-        replays on top."""
+        checkpoint's COLUMN SUBSET; then the delta chain replays on
+        top."""
         cols = list(cols)
         cached = self._fcache.get(version)
         if cached is not None:
@@ -1362,14 +1279,12 @@ class ParquetMergeTable:
         for k in keys:
             e = files[k]
             if rows is not None:
-                r = e.get("rows") if isinstance(e, dict) else None
+                r = e.get("rows")
                 rows.append(r if isinstance(r, int) and
                             not isinstance(r, bool) else None)
             if byts is not None:
-                b = e.get("bytes") if isinstance(e, dict) else None
-                byts.append(b if isinstance(b, int) and
-                            not isinstance(b, bool) else None)
-            cz = self._zone_cols(e) if isinstance(e, dict) else {}
+                byts.append(e["bytes"])
+            cz = e["cols"]
             for c, (mns, mxs, nls, ans) in za.items():
                 z = cz.get(c)
                 if not isinstance(z, dict):
@@ -1395,12 +1310,10 @@ class ParquetMergeTable:
         """The LAZY columnar read: key (+ rows/bytes when asked) + the
         requested columns' four stat arrays + the xjson fallback —
         nothing else leaves the sidecar, and keys/rows stay ARROW
-        until a consumer materializes what it touches. Legacy
-        (key, entry) sidecars fall back to the full parse (they
-        predate the columnar layout)."""
+        until a consumer materializes what it touches."""
         import json as _json
 
-        want = ["key", "entry", "xjson"]
+        want = ["key", "xjson"]
         if with_rows:
             want.append("rows")
         if with_bytes:
@@ -1409,17 +1322,6 @@ class ParquetMergeTable:
             want += [f"z:min:{c}", f"z:max:{c}", f"z:nul:{c}", f"z:an:{c}"]
         t = self._ckpt_table(man, columns=want)
         names = set(t.schema.names)
-        if "entry" in names:                      # legacy layout
-            # decode from the table already in hand — 'key'/'entry'
-            # were in the requested subset, so a second _full_files
-            # fetch would double the GET + parse (r10 review)
-            files = {
-                k: _json.loads(e)
-                for k, e in zip(t.column("key").to_pylist(),
-                                t.column("entry").to_pylist())
-            }
-            return self._arrays_from_dict(
-                files, cols, with_bytes, with_rows)
         keys = t.column("key")
         n = len(keys)
         rows = t.column("rows") if with_rows else None
@@ -1447,14 +1349,12 @@ class ParquetMergeTable:
                 continue
             e = _json.loads(xj)
             if rows is not None:
-                r = e.get("rows") if isinstance(e, dict) else None
+                r = e.get("rows")
                 rows[i] = (r if isinstance(r, int) and
                            not isinstance(r, bool) else None)
             if byts is not None:
-                b = e.get("bytes") if isinstance(e, dict) else None
-                byts[i] = (b if isinstance(b, int) and
-                           not isinstance(b, bool) else None)
-            cz = self._zone_cols(e) if isinstance(e, dict) else {}
+                byts[i] = e["bytes"]
+            cz = e["cols"]
             for c in cols:
                 z = cz.get(c)
                 if not isinstance(z, dict):
@@ -1932,16 +1832,12 @@ class ParquetMergeTable:
             )
         else:
             rec["chain"] = 0
-            name = None
             if keep_rels and len(fileset) > self._CKPT_INLINE_MAX:
                 # checkpoint BUILD by columnar carry (VERDICT r10
                 # next-1): the parent sidecar is filtered/unioned with
-                # Arrow kernels (or a Spark job above _CKPT_SPARK_MIN),
-                # never materialized as per-file driver dicts
-                name = self._carry_checkpoint(new_v, parent_v,
-                                              keep_rels, entries)
-            if name is not None:
-                rec["ckpt"] = name
+                # Arrow kernels, never materialized as per-file dicts
+                rec["ckpt"] = self._carry_checkpoint(new_v, parent_v,
+                                                     keep_rels, entries)
             else:
                 pfiles = self._files(parent_v) if keep_rels else {}
                 files = {r: pfiles[r] for r in keep_rels}
@@ -1976,8 +1872,10 @@ class ParquetMergeTable:
             new_v, self._assemble_manifest(new_v, op, df.schema,
                                            parent_v, [], entries,
                                            cluster=cluster))
+        # decoded BEFORE the publish: a refused index stops the commit
+        bloom = self.file_index(parent_v)
         self._finalize(new_v, man, stage)
-        self._carry_bloom(parent_v, new_v, set(entries))
+        self._carry_bloom(bloom, new_v, set(entries))
         return new_v
 
     def _commit_carrying(self, out_df, keep_rels, old_v: int, schema,
@@ -2014,6 +1912,7 @@ class ParquetMergeTable:
         # what this commit REMOVES from its parent — invariant across
         # rebases (keep_rels is parent-subset by construction)
         removed_by_us = set(self._file_keys(old_v)) - set(keep_rels)
+        bloom = self.file_index(old_v)
         while True:
             man = self._externalize_files(
                 new_v, self._assemble_manifest(new_v, op, schema, old_v,
@@ -2037,9 +1936,10 @@ class ParquetMergeTable:
                 # orphaned sidecars age out via vacuum's grace sweep)
                 keep_rels = [r for r in self._file_keys(head)
                              if r not in removed_by_us]
+                bloom = self.file_index(head)
                 old_v = head
                 new_v = head + 1
-        self._carry_bloom(old_v, new_v, set(keep_rels) | set(entries))
+        self._carry_bloom(bloom, new_v, set(keep_rels) | set(entries))
         return new_v
 
     def _rebase_safe(self, old_v: int, head: int, read_rels,
@@ -2110,7 +2010,7 @@ class ParquetMergeTable:
         if ranges is not None:
             return not self._range_keep(zm, ranges)
         col, vals = point
-        z = self._zone_cols(zm).get(col)
+        z = zm["cols"].get(col)
         if not z:
             return False
         if z.get("all_null"):
@@ -2733,21 +2633,13 @@ class ParquetMergeTable:
             return None
         return copy.deepcopy(self._files(v))
 
-    @staticmethod
-    def _zone_cols(zm: dict) -> dict:
-        """Column zones of a manifest entry; tolerates the pre-``rows``
-        manifest layout (a bare col→zone dict) for tables written by an
-        older build."""
-        cols = zm.get("cols")
-        return cols if isinstance(cols, dict) else zm
-
     def _range_keep(self, zm: dict, ranges: dict) -> bool:
         """True unless the zone maps PROVE no row in the file can
         satisfy every range (conjunctive BETWEEN semantics: NULL never
         matches, so an all-NULL zone is skippable). Kind-checked
         comparisons — a cross-plane probe (tz-aware vs naive, str vs
         num) is never ordered, hence never prunes."""
-        cols = self._zone_cols(zm)
+        cols = zm["cols"]
         for col, (lo, hi) in ranges.items():
             z = cols.get(col)
             if not z:  # absent or {} (unbounded): can't prune
@@ -2772,7 +2664,7 @@ class ParquetMergeTable:
         satisfies every range: bounds inside [lo, hi] on the normalized
         plane AND an exact zero null count (NULL fails BETWEEN, so an
         unknown null count blocks containment)."""
-        cols = self._zone_cols(zm)
+        cols = zm["cols"]
         for col, (lo, hi) in ranges.items():
             z = cols.get(col)
             if not z or z.get("all_null") or z.get("nulls") != 0:
@@ -3122,21 +3014,13 @@ class ParquetMergeTable:
         word encoding cost ~4.6 B/row). One bin read materializes
         every blob."""
         import json as _json
-        import os
 
         v = version if version is not None else self.current_version()
         if v == 0 or not self._backend.exists(self._bloom_file(v)):
             return {}
         data = _json.loads(self._backend.get(self._bloom_file(v)))
-        if "cols" not in data:   # pre-packed legacy words layout
-            return {
-                col: {
-                    k: {"m": e["m"],
-                        "blob": self._words_to_blob(e["m"], e["words"])}
-                    for k, e in files.items()
-                }
-                for col, files in data.items()
-            }
+        if "cols" not in data:
+            raise self._retired(v, "pre-packed Bloom 'words' JSON index")
         bin_ = self._backend.get(self._bloom_bin_file(v))
         return {
             col: {
@@ -3262,8 +3146,7 @@ class ParquetMergeTable:
         deployment shards this per partition. After the build the
         index MAINTAINS ITSELF: every commit carries surviving files'
         bits and indexes its ADDED files incrementally (VERDICT r9
-        next-2 — no full rebuild under churn; ``auto_bloom=False``
-        opts out).
+        next-2 — no full rebuild under churn).
 
         Lock-free: the index is idempotent per-version metadata, last
         writer wins (see _write_bloom)."""
@@ -3315,9 +3198,7 @@ class ParquetMergeTable:
 
     def _bloom_might_contain(self, entry: dict, value) -> bool:
         """Driver-side probe of one file's bloom — pure Python, no
-        Spark job. True = cannot rule the value out. Accepts the
-        packed blob form and the pre-packing sparse-words form (the
-        parity test probes both)."""
+        Spark job. True = cannot rule the value out."""
         m = entry.get("m")
         if m == 0:
             # build-time sentinel: the file held zero non-null values
@@ -3326,40 +3207,31 @@ class ParquetMergeTable:
         if not m:
             return True
         h1, h2 = self._bloom_h12(str(value))
-        blob = entry.get("blob")
-        if blob is not None:
-            for i in range(self._BLOOM_K):
-                b = (h1 + i * h2) % m
-                if not (blob[b >> 3] >> (b & 7)) & 1:
-                    return False
-            return True
-        words = entry["words"]
+        blob = entry["blob"]
         for i in range(self._BLOOM_K):
             b = (h1 + i * h2) % m
-            if not (words.get(str(b // 64), 0) >> (b % 64)) & 1:
+            if not (blob[b >> 3] >> (b & 7)) & 1:
                 return False
         return True
 
-    def _carry_bloom(self, parent_v: int, new_v: int,
+    def _carry_bloom(self, parent: dict, new_v: int,
                      fileset: set) -> None:
-        """Maintain the Bloom index across a commit: carry surviving
-        files' bits (same key → same bytes), drop rewritten files'
-        stale bits, and — NEW in r10 (VERDICT r9 next-2) — index the
-        commit's ADDED files with one bounded Spark job, so the index
-        never decays toward full-candidate scans under normal churn
-        and a full-table rebuild is never needed. Incremental cost ∝
-        added files — the same proportionality as the commit's own
-        write. Runs AFTER the manifest create; the incremental job is
-        BEST-EFFORT (a failure leaves added files unindexed, which
-        read_point treats as candidates — correct, just less pruned).
-        ``auto_bloom=False`` restores the carry-only r9 behavior. A
-        column dropped or retyped by schema evolution loses its index
-        (its rendering contract no longer holds)."""
+        """Maintain the parent's Bloom index (``parent``, decoded by
+        the committer before its publish) across a commit: carry
+        surviving files' bits (same key → same bytes), drop rewritten
+        files' stale bits, and index the commit's ADDED files with one
+        bounded Spark job, so the index never decays toward
+        full-candidate scans under normal churn and a full-table
+        rebuild is never needed. Incremental cost ∝ added files — the
+        same proportionality as the commit's own write. Runs AFTER the
+        manifest create; the incremental job is BEST-EFFORT (a failure
+        leaves added files unindexed, which read_point treats as
+        candidates — correct, just less pruned; ``maintenance_plan``
+        reports the coverage gap). A column dropped or retyped by
+        schema evolution loses its index (its rendering contract no
+        longer holds)."""
         from urllib.parse import unquote
 
-        if parent_v < 1:
-            return
-        parent = self.file_index(parent_v)
         if not parent:
             return
         from pyspark.sql.types import StructType
@@ -3380,7 +3252,7 @@ class ParquetMergeTable:
             added = sorted(
                 fileset - {unquote(k) for k in files}
             )
-            if added and getattr(self, "auto_bloom", True):
+            if added:
                 try:
                     surviving.update(
                         self._bloom_build_entries(new_v, col,
@@ -3710,6 +3582,22 @@ class ParquetMergeTable:
         return os.path.join(self._cdf_dir(), "_exported",
                             f"{version}.json")
 
+    def _feed_marker(self, version: int) -> dict | None:
+        """Decode ``version``'s export marker; None when it is absent
+        or unreadable (a torn claim write). A FINALIZED marker records
+        the export-time schema (every finalize has since r11) — one
+        without it is refused."""
+        import json as _json
+
+        try:
+            rec = _json.loads(self._backend.get(self._cdf_marker(version)))
+        except (OSError, ValueError):
+            return None
+        if rec.get("files") and "schema" not in rec:
+            raise self._retired(
+                version, "change-feed marker without a schema (pre-r11)")
+        return rec
+
     def _churn_scans(self, v: int) -> tuple[DataFrame, DataFrame]:
         """The (old-side, new-side) scans of exactly the files commit
         ``v`` CHURNED — added, removed, rewritten, or DV-moved; files
@@ -3919,9 +3807,8 @@ class ParquetMergeTable:
             claim = {"version": v, "token": token, "files": None,
                      "claimed_at_unix": round(_time.time(), 3)}
             if self._backend.exists(marker):
-                try:
-                    rec = _json.loads(self._backend.get(marker))
-                except (OSError, ValueError):
+                rec = self._feed_marker(v)
+                if rec is None:
                     continue
                 if rec.get("files") is not None:
                     continue           # finalized
@@ -3969,10 +3856,7 @@ class ParquetMergeTable:
             # interleaved double-finalize remains possible; the orphan
             # sweep below turns that residue into bounded-lifetime
             # litter instead of a permanent duplicate.
-            try:
-                cur = _json.loads(self._backend.get(marker))
-            except (OSError, ValueError):
-                cur = None
+            cur = self._feed_marker(v)
             if not cur or cur.get("token") != token or \
                     cur.get("files") is not None:
                 for fn in moved:
@@ -3998,7 +3882,6 @@ class ParquetMergeTable:
         touched, and by the finalized-marker check so unclaimed /
         in-claim versions keep their stage. Called by export_changes
         and vacuum_change_feed; idempotent."""
-        import json as _json
         import os
         import time as _time
 
@@ -4010,12 +3893,8 @@ class ParquetMergeTable:
                 continue
             v = int(m.group(1))
             if v not in listed:
-                try:
-                    rec = _json.loads(
-                        self._backend.get(self._cdf_marker(v)))
-                    files = rec.get("files")
-                except (OSError, ValueError):
-                    files = None
+                rec = self._feed_marker(v)
+                files = rec.get("files") if rec else None
                 # None ⇒ unfinalized/unreadable: leave everything
                 listed[v] = set(files) if files is not None else None
             ref = listed[v]
@@ -4059,10 +3938,8 @@ class ParquetMergeTable:
                 continue
             if n >= before_version:
                 continue
-            marker = self._cdf_marker(n)
-            try:
-                rec = _json.loads(self._backend.get(marker))
-            except (OSError, ValueError):
+            rec = self._feed_marker(n)
+            if rec is None:
                 continue
             files = rec.get("files")
             if not files:           # unfinalized crash or already swept
@@ -4071,7 +3948,8 @@ class ParquetMergeTable:
                 self._backend.delete(os.path.join(self._cdf_dir(), f))
             rec["files"] = []
             rec["vacuumed_at_unix"] = round(_time.time(), 3)
-            self._backend.put(marker, _json.dumps(rec).encode())
+            self._backend.put(self._cdf_marker(n),
+                              _json.dumps(rec).encode())
             removed.append(n)
         # finalize-race residue: files no finalized marker lists
         # (ADVICE r10), grace-guarded against in-flight exporters
@@ -4088,10 +3966,7 @@ class ParquetMergeTable:
         schema and raise a clear error naming the boundary; the
         operator then either vacuums the feed past it
         (``vacuum_change_feed(v+1)``) or replays history through
-        ``changes_at`` per version. Markers without a recorded schema
-        (pre-r11 exports) are skipped — same documented trust as
-        before."""
-        import json as _json
+        ``changes_at`` per version."""
         import os as _os
 
         from pyspark.sql.types import StructType
@@ -4103,13 +3978,9 @@ class ParquetMergeTable:
                 ver = int(name.split(".", 1)[0])
             except ValueError:
                 continue
-            try:
-                rec = _json.loads(
-                    self._backend.get(self._cdf_marker(ver)))
-            except (OSError, ValueError):
-                continue
-            if not rec.get("files") or "schema" not in rec:
-                continue          # vacuumed / unfinalized / pre-r11
+            rec = self._feed_marker(ver)
+            if not rec or not rec.get("files"):
+                continue          # unreadable / unfinalized / vacuumed
             exported = self._to_nullable(
                 StructType.fromJson(rec["schema"]))
             for f_ in exported.fields:
@@ -4376,9 +4247,7 @@ class ParquetMergeTable:
         file count, everybody knows the right file size): the output
         file count is ceil(total bytes of the rewritten files /
         target_mb), computed from the manifest's per-file ``bytes``
-        (recorded at write time — no filesystem listing). Entries
-        written by a pre-r9 build lack ``bytes`` and fall back to
-        ``target_files``.
+        (recorded at write time — no filesystem listing).
 
         ``zorder_by=(c1, ..., ck)`` makes this OPTIMIZE ZORDER for any
         number of keys: the rewrite range-partitions + sorts on the
@@ -4391,12 +4260,10 @@ class ParquetMergeTable:
         def _n_out(rels, sizes: dict) -> int:
             if target_mb is None:
                 return max(1, target_files)
-            got = [sizes.get(r) for r in rels]
-            if not got or any(b is None for b in got):
-                return max(1, target_files)  # pre-r9 entries: no bytes
             import math
 
-            return max(1, math.ceil(sum(got) / (target_mb * 1e6)))
+            total = sum(sizes[r] for r in rels)
+            return max(1, math.ceil(total / (target_mb * 1e6)))
 
         def _layout(df: DataFrame, n: int) -> DataFrame:
             if zorder_by is None:
@@ -5079,7 +4946,7 @@ class ParquetMergeTable:
         DV density vs the compaction threshold, how many
         tx-dir read groups a scan unions, and the SMALL-FILE load —
         files under ``small_file_mb`` (from the manifest's per-file
-        bytes; entries without bytes don't count), the classic
+        bytes), the classic
         many-small-merges symptom — all repaid by ``compact()`` /
         ``compact(target_mb=...)``. The acting form of the documented
         policy; ``auto_compact_dv`` applies the DV leg automatically
@@ -5101,11 +4968,8 @@ class ParquetMergeTable:
                 groups = len({
                     "/".join(r.split("/", 2)[:2]) for r in keys
                 })
-            for b in bytes_a:
-                if isinstance(b, int):
-                    total_b += b
-                    if b < small_file_mb * 1e6:
-                        small += 1
+            total_b = sum(bytes_a)
+            small = sum(1 for b in bytes_a if b < small_file_mb * 1e6)
         compact_dv = d["dv_positions"] > 0 and d["density"] >= threshold
         compact_small = n_files > 1 and small > n_files / 2
         actions = []
@@ -5114,10 +4978,10 @@ class ParquetMergeTable:
         elif compact_small:
             actions.append(f"compact(target_mb={small_file_mb * 8:g})")
         # Bloom-coverage leg (VERDICT r9 next-2): covered-file fraction
-        # per indexed column, with a rebuild recommendation when churn
-        # has outpaced maintenance (auto_bloom keeps this at 1.0; a
-        # table written by an older build, or run with auto_bloom off,
-        # decays and shows up here). Metadata-only, zero Spark jobs.
+        # per indexed column, with a rebuild recommendation when live
+        # files went unindexed (per-commit maintenance keeps this at
+        # 1.0; a failed best-effort incremental build leaves its added
+        # files out and shows up here). Metadata-only, zero Spark jobs.
         from urllib.parse import unquote
 
         bloom: dict[str, dict] = {}
@@ -5183,20 +5047,14 @@ class ParquetMergeTable:
 
         if v and self._backend.list_names(
                 _os.path.join(self._cdf_dir(), "_exported")):
-            import json as _json
-
             def _finalized(n: int) -> bool:
                 # a claim whose export crashed has files=None — its
                 # rows were never published, so it counts as BACKLOG
                 # (export_changes' repair path re-exports it), not as
                 # exported; bare existence would report a green feed
                 # while consumers are missing a version
-                try:
-                    rec = _json.loads(
-                        self._backend.get(self._cdf_marker(n)))
-                except (OSError, ValueError):
-                    return False
-                return rec.get("files") is not None
+                rec = self._feed_marker(n)
+                return rec is not None and rec.get("files") is not None
 
             retained = sorted(h["version"] for h in self.history())
             rset = set(retained)
@@ -5412,7 +5270,6 @@ class ParquetMergeTable:
         one small GET per marker. ``export_changes`` publishes
         versions in order and repairs crashed claims, so the max
         finalized marker is the consumer-visible frontier."""
-        import json as _json
         import os as _os
 
         best = 0
@@ -5425,11 +5282,8 @@ class ParquetMergeTable:
             v = int(m.group(1))
             if v <= best:
                 continue
-            try:
-                rec = _json.loads(self._backend.get(self._cdf_marker(v)))
-            except (OSError, ValueError):
-                continue
-            if rec.get("files") is not None:
+            rec = self._feed_marker(v)
+            if rec is not None and rec.get("files") is not None:
                 best = v
         return best
 

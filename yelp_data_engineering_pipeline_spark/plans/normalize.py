@@ -23,10 +23,12 @@ Semantic deltas vs the reference (deliberate, documented):
 
 Scale notes: every dim is bounded-cardinality → broadcast joins for FK
 attachment; the only fact-scale shuffles are the surrogate-id sort and
-the explodes' downstream writes. Dense-id assignment uses a global
-row_number window — fine for dimension-sized outputs; for fact-scale id
-assignment at 100 TB swap in the two-phase per-partition-offset scheme
-(count per partition → prefix-sum offsets) noted in operators/dim_merge.
+the explodes' downstream writes. Only the bounded name dims use a
+global row_number window (``dense_ids_window``). ``business`` ids come
+from ``dense_ids`` (two-phase: per-range counts → prefix-sum offsets)
+and the five child tables' ids from ``dense_ids_grid_long`` (fixed-grid
+per-cell offsets), both in operators/ids.py — no single-partition
+window at fact scale.
 """
 
 from __future__ import annotations
@@ -207,22 +209,34 @@ def write_star_schema(tables: dict[str, DataFrame], out_dir: str) -> None:
     current one's stragglers freed (~25-30% off the bench's 8k-row
     ingest leg at local[32] — see OPTIMIZATION_r13.md for the
     recorded A/B). FIFO scheduling (the default) preserves the back-fill
-    behavior; per-thread job descriptions keep the UI readable. The
+    behavior; per-thread job descriptions keep the UI readable. Each
+    write is wrapped in ``inheritable_thread_target`` at submit time,
+    so its jobs carry the caller's local properties and session tags
+    (job group, scheduler pool) and count toward the caller's op. The
     first write materializes the shared ``keyed`` cache exactly once —
     concurrent fills of one cached plan are serialized by Spark's
     cache manager, and every frame here derives from it, so duplicate
     upstream compute is bounded to the race on the first fill."""
     from concurrent.futures import ThreadPoolExecutor
 
-    def _write(item: tuple[str, DataFrame]) -> None:
-        name, df = item
+    from pyspark import inheritable_thread_target
+
+    def _write(name: str, df: DataFrame) -> None:
         sc = df.sparkSession.sparkContext
         sc.setJobDescription(f"write_star_schema: {name}")
         df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
         sc.setJobDescription(None)
 
+    # one wrap per write: each snapshots the caller's properties into
+    # its own copy, so one write's description never leaks into another
     with ThreadPoolExecutor(max_workers=4) as pool:
-        list(pool.map(_write, tables.items()))
+        futures = [
+            pool.submit(inheritable_thread_target(df.sparkSession)(_write),
+                        name, df)
+            for name, df in tables.items()
+        ]
+        for f in futures:
+            f.result()
 
 
 def read_star_schema(
