@@ -125,20 +125,23 @@ def test_assignment_matches_window_reference_bit_identical(spark, tmp_path):
 
 
 def test_assignment_fuzz_matches_window_reference(spark):
-    """Hypothesis twin of the fixed-fixture equivalence: random
-    non-degenerate vectors AND a crafted tie population (duplicated
-    centroids → equal rounded sims → the (cent_sim DESC, cell ASC)
-    tiebreak decides) must assign identically under the map-side
-    argmax and the removed r11 window formulation. Zero-norm vectors
-    are excluded by construction — their NaN cosine has no meaningful
-    cell and the two shapes rank NaN differently (documented in
-    ivf_assign_cell)."""
-    from hypothesis import HealthCheck, given, settings
+    """Hypothesis twin of the fixed-fixture equivalence: ivf_assign's
+    argmax cell AND its nprobe ranking must match two independent
+    references — the removed r11 window formulation (row_number over
+    cent_sim DESC, cell ASC) and the resident route's NumPy kernel
+    (``_cos_round4`` + ``_rank``, tests/ivf_ref.py). Populations
+    include 4th-decimal ties between cells (centroids a tiny
+    perturbation apart, whose rounded sims collide or differ in the
+    last place), duplicated centroids, vectors equal to a centroid,
+    1-cell codebooks and nprobe >= cells. Zero-norm vectors are
+    excluded by construction — their cosine has no meaningful cell."""
+    from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
     from pyspark.sql import Window
 
+    from tests.ivf_ref import numpy_cells
     from yelp_data_engineering_pipeline_spark.operators.similarity import (
-        cosine, ivf_assign_cell,
+        cosine, ivf_assign,
     )
 
     unit = st.floats(min_value=-1.0, max_value=1.0,
@@ -150,24 +153,33 @@ def test_assignment_fuzz_matches_window_reference(spark):
         vec = st.lists(unit, min_size=dim, max_size=dim).filter(
             lambda v: sum(x * x for x in v) > 1e-6)
         cents = draw(st.lists(vec, min_size=1, max_size=5))
-        if draw(st.booleans()) and cents:
+        if draw(st.booleans()):
             cents.append(list(cents[0]))      # duplicated centroid: ties
+        if draw(st.booleans()):               # 4th-decimal near-ties
+            eps = draw(st.sampled_from([1e-5, 5e-5, 1e-4, 5e-4]))
+            j = draw(st.integers(0, dim - 1))
+            near = list(cents[-1])
+            near[j] += eps
+            cents.append(near)
         vecs = draw(st.lists(vec, min_size=1, max_size=12))
         vecs.extend(list(c) for c in cents[:2])   # exact-hit ties too
-        return dict(enumerate(cents)), vecs
+        nprobe = draw(st.integers(1, len(cents) + 2))
+        return dict(enumerate(cents)), vecs, nprobe
 
     @settings(max_examples=12, deadline=None,
               suppress_health_check=[HealthCheck.function_scoped_fixture])
     @given(cc=corpus_and_cents())
+    @example(cc=({0: [0.6, 0.8]}, [[1.0, 0.0], [0.0, -1.0]], 3))
+    @example(cc=({0: [1.0, 1e-3], 1: [1.0, 0.0], 2: [1.0, 0.0],
+                  3: [1.0, 2e-2]},
+                 [[1.0, 0.0], [1.0, 1e-3], [1.0, 1.5e-2], [-1.0, 0.5]], 4))
     def run(cc):
-        cents, vecs = cc
-        df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(vecs)],
-            "vec_id long, embedding array<double>")
-        got = {r.vec_id: r.cell for r in df.select(
-            "vec_id",
-            ivf_assign_cell(F.col("embedding"), cents).alias("cell")
-        ).collect()}
+        cents, vecs, nprobe = cc
+        rows = list(enumerate(vecs))
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        got = {r.vec_id: r.cell for r in ivf_assign(df, cents).collect()}
+        probed = {r.vec_id: list(r.cell) for r in
+                  ivf_assign(df, cents, nprobe=nprobe).collect()}
         cdf = spark.createDataFrame(
             [(int(c), [float(x) for x in v])
              for c, v in sorted(cents.items())],
@@ -179,10 +191,18 @@ def test_assignment_fuzz_matches_window_reference(spark):
                           .alias("s")))
         w = Window.partitionBy("vec_id").orderBy(
             F.col("s").desc(), F.col("cell"))
-        want = {r.vec_id: r.cell for r in
-                scored.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).collect()}
+        ranked = sorted(
+            (r.vec_id, r._rn, r.cell) for r in
+            scored.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= nprobe).collect())
+        want_probe: dict[int, list[int]] = {}
+        for vid, _, cell in ranked:
+            want_probe.setdefault(vid, []).append(cell)
+        want = {vid: cells[0] for vid, cells in want_probe.items()}
         assert got == want, (cents, vecs)
+        assert got == numpy_cells(rows, cents), (cents, vecs)
+        assert probed == want_probe, (cents, vecs, nprobe)
+        assert probed == numpy_cells(rows, cents, nprobe), (cents, vecs)
 
     run()
 
@@ -1112,12 +1132,8 @@ def test_resident_search_zero_norm_defers_to_distributed(spark, tmp_path):
 def test_resident_search_matches_distributed_sq8_and_big_codebook(
         spark, tmp_path):
     """sq8 storage (scores over the dequantized q/127 grid) and a
-    64-cell codebook past the literal bound (the distributed probe
-    rides the one-row broadcast plane) stay bit-identical."""
-    from yelp_data_engineering_pipeline_spark.operators.similarity import (
-        _CODEBOOK_LITERAL_MAX_VALUES,
-    )
-
+    64-cell codebook (the distributed probe rides the one-row
+    broadcast plane) stay bit-identical."""
     corpus = _corpus(spark, str(tmp_path / "c"), n=128)
     ix = IvfIndex(spark, str(tmp_path / "ix8"), store="sq8")
     ix.build(corpus, n_centroids=8)
@@ -1133,7 +1149,6 @@ def test_resident_search_matches_distributed_sq8_and_big_codebook(
          for i in range(320)], SCHEMA))
     bix = IvfIndex(spark, str(tmp_path / "ix64"))
     bix.build(big, n_centroids=64)
-    assert 64 * dim > _CODEBOOK_LITERAL_MAX_VALUES
     qb = big.read().filter(F.col("vec_id") < 12)
     for nprobe in (2, 5):
         _assert_routes_agree(bix, qb, 5, nprobe)

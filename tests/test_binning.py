@@ -215,10 +215,11 @@ def test_topk_adaptive_routes_by_structure(spark, sf_dir):
     """The adaptive default must take the IVF branch on the (near-
     uniform) driver fixture and the multitable-LSH branch on a
     clustered corpus — checked by plan shape: the IVF branch joins
-    candidates on the map-side-assigned ``cell`` (since r12 the
-    centroid assignment is a literal-codebook argmax — no
-    BroadcastNestedLoopJoin left anywhere), the LSH branch on the
-    (tid, bucket) composite key."""
+    candidates on the map-side-assigned ``cell`` (the centroid
+    assignment is an argmax against the one-row codebook plane — its
+    two broadcast attaches are the only nested loops), the LSH branch
+    on the (tid, bucket) composite key."""
+    from tests.ivf_ref import plane_nested_loops
     from yelp_data_engineering_pipeline_spark.operators.similarity import (
         topk_adaptive,
     )
@@ -230,7 +231,7 @@ def test_topk_adaptive_routes_by_structure(spark, sf_dir):
         topk_adaptive(q, uniform, k=3)._jdf.queryExecution().executedPlan().toString()
     )
     assert "cell#" in plan and "bucket#" not in plan  # the IVF branch
-    assert "BroadcastNestedLoopJoin" not in plan      # r12 map-side assign
+    assert plane_nested_loops(plan) == (2, 2), plan   # map-side assign
 
     clustered = _blob_corpus(spark)
     qc = clustered.filter(F.col("vec_id") < 5)

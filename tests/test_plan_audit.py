@@ -135,14 +135,25 @@ def test_ivf_corpus_assignment_plans_no_exchange_no_window(spark, sf_dir):
     """VERDICT r11 what's-wrong #1 made mechanical: IVF cell assignment
     (the corpus hot path shared by similarity.topk_ivf and
     ann_index.IvfIndex._assigned) must plan as ONE map-side projection
-    — zero Exchange, zero Window. The r9–r11 shape broadcast-joined the
-    k-row codebook (k× row expansion) and took top-1 per id with a
-    row_number window: a hash shuffle of |corpus|×k embedding-carrying
-    rows, ~10¹² rows per full assignment at the 100 TB sizing."""
+    against a broadcast one-row codebook plane: no Window, no shuffle
+    exchange, and exactly ONE BroadcastExchange, sitting directly on a
+    LocalTableScan. The one broadcast row is the codebook; no corpus
+    row moves. The r9–r11 shape broadcast-joined the k-row codebook
+    (k× row expansion) and took top-1 per id with a row_number
+    window: a hash shuffle of |corpus|×k embedding-carrying rows,
+    ~10¹² rows per full assignment at the 100 TB sizing.
+
+    The plan must also not grow with the codebook: the codebook is
+    data in the plane, never literals, so the optimized plan text
+    (expression ids normalized) has the same length for a 4-cell and
+    a 64-cell codebook."""
+    import random
+    import re
+
     from pyspark.sql import functions as F
 
     from yelp_data_engineering_pipeline_spark.operators.similarity import (
-        ivf_assign_cell,
+        ivf_assign,
     )
     from yelp_data_engineering_pipeline_spark.tables import load
 
@@ -151,61 +162,62 @@ def test_ivf_corpus_assignment_plans_no_exchange_no_window(spark, sf_dir):
         int(r["vec_id"]): [float(x) for x in r["embedding"]]
         for r in emb.filter(F.col("vec_id") < 8).collect()
     }
-    assigned = emb.select(
-        "vec_id", ivf_assign_cell(F.col("embedding"), cents).alias("cell")
-    )
+    assigned = ivf_assign(emb.select("vec_id", "embedding"), cents)
     plan = assigned._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
     assert "Window" not in plan, plan
+    for part in ("hashpartitioning", "rangepartitioning",
+                 "SinglePartition", "RoundRobinPartitioning"):
+        assert part not in plan, plan
+    lines = [ln.lstrip(" +-:*") for ln in plan.splitlines()]
+    at = [i for i, ln in enumerate(lines)
+          if ln.startswith("BroadcastExchange")]
+    assert len(at) == 1, plan
+    assert lines[at[0] + 1].startswith("LocalTableScan"), plan
+
+    rng = random.Random(4)
+    d16 = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
+
+    def opt_len(k: int) -> int:
+        book = {c: [rng.uniform(-1, 1) for _ in range(16)] for c in range(k)}
+        text = (ivf_assign(d16, book)._jdf.queryExecution()
+                .optimizedPlan().toString())
+        return len(re.sub(r"#\d+", "#", text))
+
+    assert opt_len(4) == opt_len(64)
 
 
 def test_large_codebook_assignment_stays_shuffle_free_and_equivalent(
         spark, sf_dir):
-    """The 100 TB codebook regime (k·d past the literal bound): the
-    codebook must ride as a ONE-ROW broadcast — no ShuffleExchange, no
-    Window, no k-row expansion — and assign identically to the literal
-    kernel (equivalence across the transport threshold). Planning must
-    stay sub-second-scale (the literal form measured ~30 s at
-    k=1024·d=64 — the codegen blowup the router exists to avoid)."""
+    """The 100 TB codebook regime (k·d in the thousands): the codebook
+    must ride as a ONE-ROW broadcast — no ShuffleExchange, no Window,
+    no k-row expansion — and assign exactly like the NumPy reference
+    (tests/ivf_ref.py) for both the argmax and the probe list."""
     import random
 
     from pyspark.sql import functions as F
 
+    from tests.ivf_ref import numpy_cells
     from yelp_data_engineering_pipeline_spark.operators.similarity import (
-        _CODEBOOK_LITERAL_MAX_VALUES, ivf_assign,
+        ivf_assign,
     )
 
     rng = random.Random(9)
     d = 16
-    k = _CODEBOOK_LITERAL_MAX_VALUES // d + 8      # just past the bound
+    k = 136                                        # 2,176 codebook values
     cents = {c: [rng.uniform(-1, 1) for _ in range(d)] for c in range(k)}
-    emb = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(d)]) for i in range(80)],
-        "vec_id long, embedding array<double>")
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(d)]) for i in range(80)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     big = ivf_assign(emb, cents)
     plan = big._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan, plan
     assert "Window" not in plan, plan
     assert "BroadcastNestedLoopJoin" in plan      # the 1-row attach
-    got = {r.vec_id: r.cell for r in big.collect()}
-
-    # equivalence with the literal kernel on a subset small enough to
-    # take the literal path (same arithmetic, same tiebreak)
-    sub = {c: cents[c] for c in range(_CODEBOOK_LITERAL_MAX_VALUES // d - 1)}
-    lit = {r.vec_id: r.cell
-           for r in ivf_assign(emb, sub).collect()}
-    # force the broadcast transport for the SAME small codebook by
-    # lowering the bound, then compare bit-for-bit
-    import yelp_data_engineering_pipeline_spark.operators.similarity as S
-    orig = S._CODEBOOK_LITERAL_MAX_VALUES
-    S._CODEBOOK_LITERAL_MAX_VALUES = 0
-    try:
-        forced = {r.vec_id: r.cell for r in ivf_assign(emb, sub).collect()}
-    finally:
-        S._CODEBOOK_LITERAL_MAX_VALUES = orig
-    assert forced == lit
-    assert set(got) == set(lit)                   # same population either way
+    assert {r.vec_id: r.cell for r in big.collect()} \
+        == numpy_cells(rows, cents)
+    probed = ivf_assign(emb, cents, nprobe=5)
+    assert {r.vec_id: list(r.cell) for r in probed.collect()} \
+        == numpy_cells(rows, cents, nprobe=5)
 
 
 def test_topk_ivf_plans_single_window_and_no_corpus_shuffle(spark, sf_dir):
@@ -299,24 +311,19 @@ def test_kmeans_round_plans_no_join_one_bounded_exchange(spark, sf_dir):
 
 def test_ann_index_bigbook_entry_routes_broadcast_plane(spark, sf_dir):
     """The large-codebook catalog entry must actually EXERCISE the
-    one-row-broadcast transport (the regime the 100 TB claim leans
-    on): its codebook exceeds the literal bound, the search plan
-    attaches it as a BroadcastNestedLoopJoin one-row plane with no
-    Window beyond the single per-query final rank, and the build-time
-    corpus assignment subtree stays Exchange/Window-free like the
-    literal kernel."""
-    from pyspark.sql import functions as F
-
+    one-row-broadcast plane through the distributed plan (the regime
+    the 100 TB claim leans on): the search plan attaches the codebook
+    as a BroadcastNestedLoopJoin one-row plane with no Window beyond
+    the single per-query final rank, and the build-time corpus
+    assignment subtree stays shuffle- and Window-free."""
     from yelp_data_engineering_pipeline_spark.operators import ann_index as AI
     from yelp_data_engineering_pipeline_spark.operators.similarity import (
-        _CODEBOOK_LITERAL_MAX_VALUES, ivf_assign,
+        ivf_assign,
     )
     from yelp_data_engineering_pipeline_spark.tables import load
 
     ix = AI._demo_index(spark, sf_dir, n_cells=AI._BIG_CELLS)
     cents = ix._cents_from_meta(ix.meta())
-    n_vals = sum(len(v) for v in cents.values())
-    assert n_vals > _CODEBOOK_LITERAL_MAX_VALUES, n_vals
 
     # the corpus-assignment subtree under the big codebook
     emb = load(spark, sf_dir, "embeddings")

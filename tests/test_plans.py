@@ -204,12 +204,19 @@ def test_ann_variants_never_cross_join(spark, sf_dir):
         plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         # never a shuffle cartesian of query x corpus
         assert "CartesianProduct" not in plan, fn.__name__
-    # RPH is pure equi-join; since r12 IVF's assignment is a map-side
-    # argmax over the literal codebook (no join at all), so NEITHER
-    # path may plan a nested loop anywhere.
-    for fn in (similarity_topk_rph, similarity_topk_ivf):
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" not in plan, fn.__name__
+    # RPH is pure equi-join: no nested loop at all. IVF's assignment
+    # attaches the one-row codebook plane by broadcast — once for the
+    # queries, once for the corpus — and those two are the ONLY
+    # nested loops: each builds on the plane's LocalTableScan, never
+    # on the query or corpus side.
+    from tests.ivf_ref import plane_nested_loops
+
+    plan = similarity_topk_rph(spark, sf_dir)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan
+    plan = similarity_topk_ivf(spark, sf_dir)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plane_nested_loops(plan) == (2, 2), plan
 
 
 def test_similarity_topk_ivf_executes_not_just_plans(spark, sf_dir):
@@ -1210,83 +1217,33 @@ def test_multiprobe_sql_twin_matches_column_form(spark, sf_dir):
     )
 
 
-def test_ivf_kernel_sql_twin_matches_column_form(spark, sf_dir):
-    """ivf_assign's literal-codebook kernel is ONE parsed, memoized
-    expression (r14, guide §7.3); the ivf_assign_cell/ivf_probe_cells
-    Column builders stay the equivalence oracle: canonical optimized
-    plans AND rows must match for both the assign and the probe form."""
+def test_ivf_kernel_vector_column_named_like_placeholder(spark, sf_dir):
+    """A vector column whose name contains ``_cb`` (``emb_cb``) must
+    assign and probe exactly like the same vectors under a plain name,
+    and like the NumPy reference: an earlier SQL kernel spliced the
+    codebook over a ``_cb`` placeholder by string replace, which also
+    rewrote such column names, and the codebook plane's own columns
+    are ``_cb_``-prefixed."""
+    from tests.ivf_ref import numpy_cells
     from yelp_data_engineering_pipeline_spark.operators.similarity import (
-        _ivf_kernel_expr,
-        ivf_assign_cell,
-        ivf_probe_cells,
+        ivf_assign,
     )
     from yelp_data_engineering_pipeline_spark.tables import load
 
-    emb = load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = {
         int(r["vec_id"]): list(r["embedding"])
         for r in emb.orderBy("vec_id").limit(4).collect()
     }
-    base = emb.select("vec_id", "embedding")
+    renamed = emb.select("vec_id", F.col("embedding").alias("emb_cb"))
+    rows = [(r.vec_id, r.embedding) for r in emb.collect()]
     for nprobe in (None, 2):
-        col_expr = (
-            ivf_assign_cell(F.col("embedding"), cents)
-            if nprobe is None
-            else ivf_probe_cells(F.col("embedding"), cents, nprobe)
-        )
-        ref = base.select("vec_id", col_expr.alias("cell"))
-        new = base.select(
-            "vec_id", _ivf_kernel_expr("embedding", cents, nprobe).alias("cell")
-        )
-        po = ref._jdf.queryExecution().optimizedPlan().canonicalized().toString()
-        pn = new._jdf.queryExecution().optimizedPlan().canonicalized().toString()
-        assert po == pn, f"nprobe={nprobe}: canonical plans diverge"
-        rr = [(r["vec_id"], r["cell"]) for r in ref.collect()]
-        rn = [(r["vec_id"], r["cell"]) for r in new.collect()]
-        assert sorted(rr) == sorted(rn)
-
-
-def test_ivf_kernel_vector_column_named_like_placeholder(spark, sf_dir):
-    """A vector column whose name contains ``_cb`` (``emb_cb``) must
-    assign and probe exactly like the Column-form kernel: the SQL twin
-    once spliced the codebook literal over a ``_cb`` placeholder by
-    string replace, which also rewrote such column names."""
-    from yelp_data_engineering_pipeline_spark.operators.similarity import (
-        ivf_assign,
-        ivf_assign_cell,
-        ivf_probe_cells,
-    )
-    from yelp_data_engineering_pipeline_spark.tables import load
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").alias("emb_cb"))
-    cents = {
-        int(r["vec_id"]): list(r["emb_cb"])
-        for r in emb.orderBy("vec_id").limit(4).collect()
-    }
-    for nprobe, ref_expr in (
-        (None, ivf_assign_cell(F.col("emb_cb"), cents)),
-        (2, ivf_probe_cells(F.col("emb_cb"), cents, 2)),
-    ):
-        got = ivf_assign(emb, cents, vec_col="emb_cb", nprobe=nprobe)
-        want = emb.select("vec_id", "emb_cb", ref_expr.alias("cell"))
-        assert sorted(map(tuple, got.select("vec_id", "cell").collect())) \
-            == sorted(map(tuple, want.select("vec_id", "cell").collect()))
-
-
-def test_ivf_kernel_expression_memo_is_bounded(spark):
-    """The parsed-kernel memo keeps a small LRU, not one entry per
-    codebook version ever seen (split_cell and re-builds each yield a
-    new codebook)."""
-    from yelp_data_engineering_pipeline_spark.operators import similarity as S
-
-    for i in range(S._CELL_EXPR_CACHE_MAX + 8):
-        S._ivf_kernel_expr("embedding", {0: [1.0, float(i)], 1: [0.0, 1.0]},
-                           None)
-    assert len(S._CELL_EXPR_CACHE) == S._CELL_EXPR_CACHE_MAX
-    newest = {0: [1.0, float(S._CELL_EXPR_CACHE_MAX + 7)], 1: [0.0, 1.0]}
-    assert S._ivf_kernel_expr("embedding", newest, None) is \
-        S._ivf_kernel_expr("embedding", newest, None)
+        got = ivf_assign(renamed, cents, vec_col="emb_cb", nprobe=nprobe)
+        plain = ivf_assign(emb, cents, nprobe=nprobe)
+        got_d = {r.vec_id: r.cell for r in got.select("vec_id", "cell").collect()}
+        assert got_d == {r.vec_id: r.cell for r in
+                         plain.select("vec_id", "cell").collect()}
+        assert got_d == numpy_cells(rows, cents, nprobe)
 
 
 def test_rank_histogram_grid_lazy_matches_eager(spark):

@@ -3,6 +3,7 @@ hard point 4), upsert semantics, SCD-2, salting equivalence."""
 
 from __future__ import annotations
 
+import logging
 from datetime import datetime
 
 import pytest
@@ -25,6 +26,14 @@ from yelp_data_engineering_pipeline_spark.operators.upsert import (
 )
 from yelp_data_engineering_pipeline_spark.plans.normalize import normalize
 from yelp_data_engineering_pipeline_spark.schemas import RESULTS_SCHEMA
+
+_UPSERT_LOGGER = "yelp_data_engineering_pipeline_spark.operators.upsert"
+
+
+def _warnings(caplog) -> list[str]:
+    """The upsert module's WARNING messages captured so far."""
+    return [r.getMessage() for r in caplog.records
+            if r.name == _UPSERT_LOGGER and r.levelno == logging.WARNING]
 
 
 @pytest.fixture(scope="module")
@@ -2121,12 +2130,14 @@ def test_explicit_version_validation_on_metadata_apis(spark, tmp_path):
     assert t.count_where({"id": (0, 5)}) == 3
 
 
-def test_auto_compact_failure_never_masks_committed_dml(spark, tmp_path):
+def test_auto_compact_failure_never_masks_committed_dml(spark, tmp_path,
+                                                       caplog):
     """_maybe_auto_compact is best-effort (ADVICE r8): the DML has
     already committed when the hook runs, so a compaction failure —
     e.g. a lost wait=False race — must not surface to the DML caller;
     the committed version is returned and a later compact() still
-    repays the DVs."""
+    repays the DVs. The swallowed failure is logged as ONE warning
+    naming the table, the committed version and the exception."""
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
                           auto_compact_dv=0.01)
     t.merge(spark.range(0, 200).selectExpr("id", "id as v")
@@ -2139,12 +2150,20 @@ def test_auto_compact_failure_never_masks_committed_dml(spark, tmp_path):
 
     ParquetMergeTable.compact = boom
     try:
-        v = t.delete_where({"id": (0, 49)}, use_deletion_vectors=True)
+        with caplog.at_level(logging.WARNING, logger=_UPSERT_LOGGER):
+            # part of one ~50-row file: a DV, not a whole-file drop —
+            # so the density policy fires and compact() is attempted
+            v = t.delete_where({"id": (0, 9)}, use_deletion_vectors=True)
     finally:
         ParquetMergeTable.compact = orig
+    warned = _warnings(caplog)
+    assert len(warned) == 1, warned
+    assert t.root in warned[0] and "version 2" in warned[0]
+    assert "lost the compaction race" in warned[0]
     assert v == 2                       # the DML's committed version
     assert t.current_version() == 2     # compaction never landed
-    assert t.read().count() == 150
+    assert t.deletion_vectors() != {}   # its DVs are still there
+    assert t.read().count() == 190
     t.compact()                         # policy retried explicitly
     assert t.deletion_vectors() == {}
 
@@ -2602,11 +2621,12 @@ def test_bloom_index_survives_churn_without_rebuild(spark, tmp_path):
 
 
 def test_bloom_coverage_reporting_matches_ground_truth(spark, tmp_path,
-                                                      monkeypatch):
+                                                      monkeypatch, caplog):
     """The coverage leg must report indexed∩live / live exactly, and
     recommend a rebuild below the floor. The per-commit indexing of
     added files is best-effort: when it fails, those files stay
-    unindexed, so churn visibly decays coverage."""
+    unindexed, so churn visibly decays coverage — and each failure is
+    logged as a warning naming the table, version, column and error."""
     from urllib.parse import unquote
 
     t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="id",
@@ -2624,13 +2644,20 @@ def test_bloom_coverage_reporting_matches_ground_truth(spark, tmp_path,
     def failing_build(*a, **k):
         raise RuntimeError("incremental index job lost")
 
-    with monkeypatch.context() as mp:
+    v0 = t.current_version()
+    with monkeypatch.context() as mp, \
+            caplog.at_level(logging.WARNING, logger=_UPSERT_LOGGER):
         mp.setattr(t, "_bloom_build_entries", failing_build)
         for b in range(8):     # churn partitions 0/1 only, no rebuild
             # — partitions 2/3 keep their carried entries
             t.merge(batch([800 + 4 * (10 * b + j) + b % 2
                            for j in range(10)]))
     v = t.current_version()
+    warned = _warnings(caplog)
+    assert len(warned) == 8, warned      # one per failed commit
+    for n, msg in zip(range(v0 + 1, v + 1), warned):
+        assert t.root in msg and f"version {n}" in msg
+        assert "'u'" in msg and "incremental index job lost" in msg
     live = set(t._file_keys(v))
     idx = t.file_index(v)["u"]
     want_cov = sum(1 for k in idx if unquote(k) in live) / len(live)

@@ -114,18 +114,21 @@ COMMENTARY = {
         "corpus scan, no join-by-neighbor_id, no corpus exchange."
     ),
     "similarity_topk_ivf": (
-        "r12 map-side assignment: the corpus's cell comes from ONE "
-        "argmax expression over the literal codebook — no join, no "
-        "window, no Exchange anywhere in the assignment subtree "
-        "(CI-asserted; the r9-r11 shape shuffled |corpus|x k expanded "
-        "rows through a per-id row_number). The only Window left is "
-        "the per-query final rank; candidates come from the cell "
-        "equi-join."
+        "Map-side assignment: the corpus's cell comes from ONE argmax "
+        "expression against the codebook, broadcast as a single "
+        "Arrow-built row (BroadcastNestedLoopJoin over a "
+        "LocalTableScan) — no window and no shuffle Exchange in the "
+        "assignment subtree, and a plan that does not grow with the "
+        "codebook (CI-asserted; the r9-r11 shape shuffled |corpus|x k "
+        "expanded rows through a per-id row_number). The only Window "
+        "left is the per-query final rank; candidates come from the "
+        "cell equi-join."
     ),
     "similarity_recall_at_k": (
         "The adaptive router's IVF branch on the near-uniform fixture: "
-        "centroid assignment is the r12 map-side literal-codebook "
-        "argmax (no join at all), candidate pairs come from the cell "
+        "centroid assignment is the map-side argmax against the "
+        "one-row broadcast codebook plane (the only nested loops are "
+        "those two 1-row attaches), candidate pairs come from the cell "
         "equi-join, and the isotropy probe's sample is "
         "TakeOrderedAndProject (CI-asserted since r7) — no global "
         "sort, no corpus cross-join anywhere."

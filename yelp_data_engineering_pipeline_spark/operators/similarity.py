@@ -27,9 +27,6 @@ in double precision — no Python UDF, no collect.
 
 from __future__ import annotations
 
-import threading
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -198,18 +195,26 @@ def _cosine_sql_frag(a: str, b: str) -> str:
     product with double casts, 0.0 init, left-fold ``+`` aggregates,
     sqrt norms), so values are bit-identical (pinned by
     tests/test_plans.py)."""
-    def _sq(v: str) -> str:
-        return (
-            f"aggregate({v}, 0.0D, "
-            f"(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-        )
+    return f"({_dot_sql(a, b)} / (sqrt({_sq_sql(a)}) * sqrt({_sq_sql(b)})))"
 
-    dot_ = (
+
+def _sq_sql(v: str) -> str:
+    """:func:`sq_norm` as Spark SQL TEXT: the left fold from 0.0D of
+    ``x*x`` over the doubles of fragment ``v``."""
+    return (
+        f"aggregate({v}, 0.0D, "
+        f"(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
+    )
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """:func:`dot` as Spark SQL TEXT: the left fold from 0.0D of the
+    element-wise double products of fragments ``a`` and ``b``."""
+    return (
         f"aggregate(zip_with({a}, {b}, "
         f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         f"0.0D, (acc, x) -> acc + x)"
     )
-    return f"({dot_} / (sqrt({_sq(a)}) * sqrt({_sq(b)})))"
 
 
 def _cosine_spark_sql(a: str, b: str) -> str:
@@ -248,16 +253,6 @@ def topk_rph(
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return pairs.withColumn("rk", F.row_number().over(w).cast("bigint")).filter(F.col("rk") <= k)
-
-
-# Parsed (tid, bucket) tag-array Columns, keyed on (applicationId, emb
-# column, plane matrix CONTENT). An EXPRESSION memo, not a result
-# cache: entries are unevaluated Catalyst trees — every query still
-# computes from its inputs. applicationId in the key drops entries
-# from previous sessions (a Column holds a JVM reference that dies
-# with its context). Bounded: one entry per distinct plane
-# configuration x column name (two in the whole repo).
-_TAG_EXPR_CACHE: dict = {}
 
 
 def topk_lsh_multitable(
@@ -309,28 +304,16 @@ def topk_lsh_multitable(
         # (transform/zip_with/aggregate fold, 0.0D init, CASE sign
         # bits), so bucket strings are bit-identical to rph_bucket —
         # pinned by tests/test_plans.py::test_multitable_tag_sql_matches_rph_bucket.
-        # The parsed Column is memoized per (application, emb, planes):
-        # the ~10 KB text re-parses in the JVM on every construction
-        # otherwise (~0.1 s per table side), and bench/serving loops
-        # rebuild this exact expression every call.
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            emb,
-            tuple(tuple(tuple(r) for r in p) for p in plane_tables),
-        )
-        tagged = _TAG_EXPR_CACHE.get(key)
-        if tagged is None:
-            tagged = F.expr(
-                "array("
-                + ",".join(
-                    f"named_struct('tid', {i}, 'bucket', "
-                    + _rph_bucket_spark_sql(emb, p)
-                    + ")"
-                    for i, p in enumerate(plane_tables)
-                )
+        tagged = F.expr(
+            "array("
+            + ",".join(
+                f"named_struct('tid', {i}, 'bucket', "
+                + _rph_bucket_spark_sql(emb, p)
                 + ")"
+                for i, p in enumerate(plane_tables)
             )
-            _TAG_EXPR_CACHE[key] = tagged
+            + ")"
+        )
         return df.select(id_col, F.col(emb), F.explode(tagged).alias("k")).select(
             id_col, F.col(emb), F.col("k.tid").alias("tid"), F.col("k.bucket").alias("bucket")
         )
@@ -354,189 +337,67 @@ def topk_lsh_multitable(
     return pairs.withColumn("rk", F.row_number().over(w).cast("bigint")).filter(F.col("rk") <= k)
 
 
-def _cell_structs(vec: Column, cents: dict[int, list[float]]) -> Column:
-    """``array<struct(-round(cosine(vec, centroid_c), 4), c)>`` over
-    the whole codebook, as a transform over a LITERAL matrix. Struct
-    ordering on (neg_sim, cell) == the IVF tiebreak (cent_sim DESC,
-    cell ASC).
+def _codebook_plane(spark: SparkSession,
+                    cents: dict[int, list[float]]) -> DataFrame:
+    """The codebook as ONE row — ``_cb_mat`` (cells × dims doubles),
+    ``_cb_ids`` (cell ids, ascending) and ``_cb_norm`` (each
+    centroid's norm) — built from a ``pyarrow.Table``, which Spark
+    turns into a LocalRelation (no Python RDD, no Python-worker task
+    to broadcast it). The plan holds the codebook as data, never as
+    literals, so its size is independent of k·d.
 
-    The literal form costs one expression node per codebook VALUE
-    (PySpark's ``lit`` unrolls nested lists into array() constructors),
-    so Catalyst analysis grows with k·d — fine for the catalog/test
-    regime (≤16 cells × 64 dims), measurably slow past ~2k values and
-    ~30 s at k=1024·d=64. :func:`ivf_assign` therefore routes LARGE
-    codebooks through the one-row-broadcast data plane
-    (:func:`_scored_cells_over`) instead; this literal kernel stays
-    the join-free small-codebook path the plan-audit tests pin."""
-    keys = sorted(cents)
-    # one parsed expression per literal (bulklit, r13): the per-value
-    # F.lit form cost ~1 s of driver time at 16 cells × 64 dims on
-    # every search/assign plan construction
-    mat = lit_double_matrix([[float(x) for x in cents[c]] for c in keys])
-    ids = lit_long_array([int(c) for c in keys])
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(len(keys))),
-        lambda i: F.struct(
-            (-F.round(cosine(vec, F.element_at(mat, i)), 4))
-            .alias("neg_sim"),
-            F.element_at(ids, i).cast("long").alias("cell"),
-        ),
-    )
+    ``_cb_norm[c]`` is ``math.sqrt`` of the left fold from 0.0 of
+    ``x*x`` over the centroid's doubles: the same IEEE operations, in
+    the same order, as ``sqrt(aggregate(c, 0.0D, (acc, x) -> acc +
+    x*x))`` in Spark, so each norm is bit-identical to the centroid
+    factor of :func:`cosine`."""
+    import math
 
-
-def ivf_assign_cell(vec: Column, cents: dict[int, list[float]]) -> Column:
-    """MAP-SIDE IVF cell assignment: argmax_c round(cosine(vec,
-    centroid_c), 4), ties to the LOWEST cell id, as ONE per-row
-    expression over literal centroids — the ``clustering._nearest`` /
-    ``semdedup_cells`` pattern. Assigning a corpus to cells therefore
-    needs NO join, NO window, NO shuffle: the r9–r11 broadcast-expand +
-    per-id row_number shape moved |corpus|×k rows (each carrying the
-    embedding) through a hash exchange just to pick a max per id — at
-    the 100 TB sizing (10⁹ vectors, k≈2¹⁰ cells) that is a ~10¹²-row
-    shuffle per full assignment (VERDICT r11 what's-wrong #1). The
-    driver holds k×d floats (bounded by definition), the same codebook
-    state the k-means operator collects.
-
-    Tiebreak is bit-identical to the old window's (cent_sim DESC, cell
-    ASC) via struct-min on (−sim, cell) for every real-valued sim; a
-    NaN sim (a zero-norm CENTROID) now ranks last instead of first —
-    zero-norm vectors have no meaningful cosine cell either way, and
-    no fixture or oracle exercises one."""
-    if not cents:
-        raise ValueError("empty codebook")
-    return F.array_min(_cell_structs(vec, cents))["cell"]
-
-
-def ivf_probe_cells(vec: Column, cents: dict[int, list[float]],
-                    nprobe: int) -> Column:
-    """The query-side dial: the ``nprobe`` nearest cells as an
-    array<long>, map-side (array_sort over the k literal structs, then
-    slice) — ordering/ties identical to ``ivf_assign_cell`` extended
-    to rank n. O(k log k) per row vs the assign path's O(k), fine for
-    the bounded QUERY side; the corpus hot path keeps the O(k) min."""
-    if not cents:
-        raise ValueError("empty codebook")
-    ranked = F.array_sort(_cell_structs(vec, cents))
-    return F.transform(
-        F.slice(ranked, 1, max(1, nprobe)), lambda s: s["cell"]
-    )
-
-
-# Above this many codebook VALUES (k cells × d dims) the literal form
-# stops paying: a literal array-of-arrays is built from one expression
-# node per value, and Catalyst analysis grows with it — measured at
-# d=64: ~1 s of planning at k=32, ~4 s at k=128, ~30 s at k=1024 (and
-# whole-stage codegen gives up long before that). Past the bound the
-# codebook rides as DATA in a ONE-ROW broadcast instead: O(1) plan
-# size, the same map-side argmin, and (measured, k=1024 d=64) 3-5×
-# faster per corpus row than even the pre-r12 broadcast-expand +
-# window shape — while still shuffling nothing.
-_CODEBOOK_LITERAL_MAX_VALUES = 2048
-
-
-def _cell_structs_sql(vec_frag: str, cents: dict[int, list[float]]) -> str:
-    """:func:`_cell_structs` as Spark SQL TEXT over a raw vector
-    FRAGMENT (r14, guide §7.3 — the minhash/semdedup single-parse
-    pattern): the whole scored-cells transform — codebook matrix
-    literal, id array, cosine fold, struct — renders as one string for
-    a single ``F.expr`` parse, instead of ~500 py4j round trips of
-    Column chatter per search/assign construction (measured ~0.3 s per
-    ``ivf_assign`` call at 8 cells × 64 dims). Same expression tree,
-    bit-identical values — pinned by
-    tests/test_plans.py::test_ivf_kernel_sql_twin_matches_column_form."""
-    from ..functions.bulklit import sql_double_matrix
+    import pyarrow as pa
 
     keys = sorted(cents)
-    mat = sql_double_matrix([[float(x) for x in cents[c]] for c in keys])
-    ids = "array(" + ",".join(f"{int(c)}L" for c in keys) + ")"
-    cos = _cosine_sql_frag(vec_frag, f"element_at({mat}, i)")
-    return (
-        f"transform(sequence(1, {len(keys)}), i -> struct("
-        f"-round({cos}, 4) AS neg_sim, "
-        f"CAST(element_at({ids}, i) AS BIGINT) AS cell))"
-    )
-
-
-# Parsed probe/assign Columns keyed on (applicationId, vector column,
-# nprobe, codebook CONTENT) — an EXPRESSION memo like the LSH tag
-# memo above (unevaluated Catalyst trees, never results); serving
-# loops rebuild the identical kernel every search call otherwise.
-# A small LRU: every split_cell or re-build yields a new codebook
-# (a new key holding up to _CODEBOOK_LITERAL_MAX_VALUES literals), so
-# an unbounded memo would keep one dead expression per codebook
-# version for the life of the process.
-_CELL_EXPR_CACHE: OrderedDict = OrderedDict()
-_CELL_EXPR_CACHE_MAX = 16
-_CELL_EXPR_LOCK = threading.Lock()
-
-
-def _ivf_kernel_expr(vec_col: str, cents: dict[int, list[float]],
-                     nprobe: int | None) -> Column:
-    """The literal-codebook assign (nprobe None) / probe-cells kernel
-    as ONE parsed, memoized expression."""
-    key = (
-        None,
-        vec_col,
-        nprobe,
-        tuple((int(c), tuple(float(x) for x in cents[c])) for c in sorted(cents)),
-    )
-    from pyspark.sql import SparkSession
-
-    sess = SparkSession.getActiveSession()
-    if sess is not None:
-        key = (sess.sparkContext.applicationId,) + key[1:]
-    with _CELL_EXPR_LOCK:
-        cached = _CELL_EXPR_CACHE.get(key)
-        if cached is not None:
-            _CELL_EXPR_CACHE.move_to_end(key)
-            return cached
-    structs = _cell_structs_sql(f"`{vec_col}`", cents)
-    if nprobe is None:
-        text = f"array_min({structs})['cell']"
-    else:
-        text = (
-            f"transform(slice(array_sort({structs}), 1, {max(1, nprobe)}), "
-            f"s -> s['cell'])"
-        )
-    parsed = F.expr(text)
-    with _CELL_EXPR_LOCK:
-        _CELL_EXPR_CACHE[key] = parsed
-        while len(_CELL_EXPR_CACHE) > _CELL_EXPR_CACHE_MAX:
-            _CELL_EXPR_CACHE.popitem(last=False)
-    return parsed
-
-
-def _scored_cells_over(vec: Column, mat: Column, ids: Column) -> Column:
-    """The codebook-as-data twin of :func:`_cell_structs`: score
-    ``vec`` against every row of the matrix COLUMN (one broadcast row
-    per partition, never per record). Identical arithmetic/tiebreak."""
-    return F.transform(
-        F.sequence(F.lit(1), F.size(mat)),
-        lambda i: F.struct(
-            (-F.round(cosine(vec, F.element_at(mat, i)), 4))
-            .alias("neg_sim"),
-            F.element_at(ids, i).cast("long").alias("cell"),
-        ),
-    )
+    mat = [[float(x) for x in cents[c]] for c in keys]
+    norms = []
+    for row in mat:
+        # a plain left fold: sum() compensates float rounding on
+        # Python >= 3.12 and would drift from Spark's aggregate
+        acc = 0.0
+        for x in row:
+            acc = acc + x * x
+        norms.append(math.sqrt(acc))
+    dbl = pa.list_(pa.float64())
+    return spark.createDataFrame(pa.table({
+        "_cb_mat": pa.array([mat], pa.list_(dbl)),
+        "_cb_ids": pa.array([[int(c) for c in keys]], pa.list_(pa.int64())),
+        "_cb_norm": pa.array([norms], dbl),
+    }))
 
 
 def ivf_assign(df: DataFrame, cents: dict[int, list[float]],
                vec_col: str = "embedding", cell_col: str = "cell",
                nprobe: int | None = None,
                explode: bool = False) -> DataFrame:
-    """``df`` plus the IVF cell column (or, with ``nprobe``, the
-    probed-cells array) — the ONE assignment entry point that picks
-    the codebook transport by size:
+    """``df`` plus the IVF cell column: argmax_c round(cosine(vec,
+    centroid_c), 4), ties to the LOWEST cell id — or, with ``nprobe``,
+    the ``nprobe`` best cells in that order as an array<long>.
 
-    - small codebooks (k·d ≤ ``_CODEBOOK_LITERAL_MAX_VALUES``): the
-      literal kernels (:func:`ivf_assign_cell` /
-      :func:`ivf_probe_cells`) — join-free, constant-foldable, the
-      plan shape the audit tests pin for the catalog regime;
-    - large codebooks (the 100 TB regime, k≈2¹⁰): the codebook as a
-      ONE-ROW broadcast (matrix + id arrays) with the same transform
-      argmin over the matrix COLUMN. No row expansion, no shuffle —
-      the broadcast build side is a single row, not k rows, so this
-      is NOT the pre-r12 expand-and-window shape.
+    The codebook rides as the one-row plane of :func:`_codebook_plane`,
+    attached by broadcast (a BroadcastNestedLoopJoin against a single
+    row: no row expansion, no shuffle of ``df``). Every row scores the
+    whole codebook in ONE SQL expression whose text does not depend
+    on the codebook: a transform over the plane's matrix emitting
+    ``struct(-round(cos, 4) AS neg_sim, cell)``, where ``cos`` is the
+    :func:`_cosine_sql_frag` dot over the vector's norm times the
+    plane's ``_cb_norm``. Struct order on (neg_sim, cell) is the IVF
+    tiebreak (cent_sim DESC, cell ASC): ``array_min`` picks the cell,
+    ``array_sort`` + ``slice`` the probe list. A zero-norm centroid
+    divides by zero as cosine does; a NaN similarity ranks last.
+
+    Assigning a corpus therefore needs NO window and moves no corpus
+    row: the r9–r11 broadcast-expand + per-id row_number shape moved
+    |corpus|×k embedding-carrying rows through a hash exchange just to
+    pick a max per id. The driver holds k×d floats, the same codebook
+    state the k-means operator collects.
 
     ``explode`` (with ``nprobe``): emit one ROW per probed cell,
     with the generator INSIDE this call's own projection. Callers
@@ -545,38 +406,25 @@ def ivf_assign(df: DataFrame, cents: dict[int, list[float]],
     query-vs-corpus self-join (Spark's plan dedup re-keys one side's
     attributes; hit at r12 as a deterministic
     INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND in topk_ivf — the
-    plan-shape regression test pins the working form).
-
-    Either way: zero shuffle of ``df``, bit-identical results
-    (equivalence is test-pinned across the threshold)."""
+    plan-shape regression test pins the working form)."""
     if not cents:
         raise ValueError("empty codebook")
-    keys = sorted(cents)
-    n_vals = sum(len(cents[c]) for c in keys)
-    vec = F.col(vec_col)
-    if n_vals <= _CODEBOOK_LITERAL_MAX_VALUES:
-        # single-parse + memoized kernel (r14): same tree as the
-        # ivf_probe_cells/ivf_assign_cell Column builders, which stay
-        # as the twin-test equivalence oracle
-        expr = _ivf_kernel_expr(vec_col, cents, nprobe)
-        if nprobe is not None and explode:
-            expr = F.explode(expr)
-        return df.select(*df.columns, expr.alias(cell_col))
-    onerow = df.sparkSession.createDataFrame(
-        [([[float(x) for x in cents[c]] for c in keys],
-          [int(c) for c in keys])],
-        "_cb_mat array<array<double>>, _cb_ids array<bigint>")
-    scored = _scored_cells_over(vec, F.col("_cb_mat"), F.col("_cb_ids"))
+    vec = f"`{vec_col}`"
+    cos = (f"({_dot_sql(vec, 'element_at(_cb_mat, i)')} / "
+           f"(sqrt({_sq_sql(vec)}) * element_at(_cb_norm, i)))")
+    scored = (f"transform(sequence(1, size(_cb_mat)), i -> struct("
+              f"-round({cos}, 4) AS neg_sim, "
+              f"element_at(_cb_ids, i) AS cell))")
     if nprobe is None:
-        expr = F.array_min(scored)["cell"]
+        text = f"array_min({scored})['cell']"
     else:
-        expr = F.transform(
-            F.slice(F.array_sort(scored), 1, max(1, nprobe)),
-            lambda s: s["cell"])
+        text = (f"transform(slice(array_sort({scored}), 1, "
+                f"{max(1, nprobe)}), s -> s['cell'])")
         if explode:
-            expr = F.explode(expr)
-    return (df.join(F.broadcast(onerow))
-            .select(*df.columns, expr.alias(cell_col)))
+            text = f"explode({text})"
+    plane = _codebook_plane(df.sparkSession, cents)
+    return (df.join(F.broadcast(plane))
+            .select(*df.columns, F.expr(text).alias(cell_col)))
 
 
 def topk_ivf(
@@ -585,22 +433,22 @@ def topk_ivf(
 ) -> DataFrame:
     """IVF ANN with a REAL nprobe (VERDICT r9 next-7): every corpus
     vector is assigned to its nearest centroid by a per-row argmax
-    over the LITERAL codebook (:func:`ivf_assign_cell` — map-side, the
-    corpus truly never shuffles for assignment; the r11 verdict
+    against the one-row codebook plane (:func:`ivf_assign` — map-side,
+    the corpus never shuffles for assignment; the r11 verdict
     falsified the previous shape's claim, which window-ranked a k×
     broadcast expansion); each QUERY probes the UNION of its
-    ``nprobe`` nearest centroids' cells (:func:`ivf_probe_cells`,
-    also map-side). A corpus vector lives in exactly one cell, so the
-    candidate pairs need no dedup. Recall climbs with nprobe (cells
-    visited) while verify cost stays ≈ nprobe/C of brute force — the
-    standard IVF recall/cost dial (tests pin the measured curve;
-    BASELINE.md records it).
+    ``nprobe`` nearest centroids' cells (:func:`ivf_assign` with
+    ``nprobe``, also map-side). A corpus vector lives in exactly one
+    cell, so the candidate pairs need no dedup. Recall climbs with
+    nprobe (cells visited) while verify cost stays ≈ nprobe/C of brute
+    force — the standard IVF recall/cost dial (tests pin the measured
+    curve; BASELINE.md records it).
 
     Centroids here are the first ``n_centroids`` vectors by id — a
     deterministic, engine-portable stand-in for a k-means codebook (a
-    production deployment trains centroids offline and folds them into
-    the plan identically; the k×d collect is the same bounded codebook
-    state ``clustering.kmeans`` holds). The plan shape IS the IVF
+    production deployment trains centroids offline and ships them as
+    the same one-row plane; the k×d collect is the same bounded
+    codebook state ``clustering.kmeans`` holds). The plan shape IS the IVF
     shape: cell assignment cost |corpus|×C map-side compute with zero
     corpus shuffle, search cost bounded by probed cell sizes, never
     all-pairs."""
