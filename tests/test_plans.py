@@ -849,13 +849,34 @@ def test_prefix_filter_candidate_join_is_equijoin(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _child_row_operators(plan: str) -> list[str]:
+    """Operator lines of a physical plan string outside every broadcast
+    build side and every cached relation: the operators that child rows
+    themselves pass through."""
+    kept, skip_below = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" +-:"))
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = None
+        op = line.lstrip(" +-:*").lstrip("()0123456789 ")
+        if op.startswith(("BroadcastExchange", "InMemoryRelation")):
+            skip_below = depth
+        else:
+            kept.append(op)
+    return kept
+
+
 def test_normalize_star_build_plan_shape(spark, tmp_path_factory):
     """yelp_e2e plan pin (VERDICT r7 next-6): the star build's dim
     joins must all broadcast — the bench tier's 1.3x budget is too
     coarse to catch a lost broadcast hint, so the shape is asserted
-    directly. Bridges join exploded fact rows to name dims
-    (plans/normalize.py bridge()/business_amenity/open_hours); a
-    SortMergeJoin anywhere would shuffle the fact side on a dim key."""
+    directly. Child rows are posexploded from the cached business pass
+    and join the name dims (plans/normalize.py child()); a
+    SortMergeJoin anywhere would shuffle the fact side on a dim key.
+    Child ids are the business pass's offsets + array positions, so
+    outside the dim build sides and the cached business pass a child
+    table plans no Window and no Exchange."""
     from tests.yelp_fixtures import make_results, write_ndjson
     from yelp_data_engineering_pipeline_spark.plans.normalize import normalize
     from yelp_data_engineering_pipeline_spark.schemas import RESULTS_SCHEMA
@@ -864,11 +885,19 @@ def test_normalize_star_build_plan_shape(spark, tmp_path_factory):
         make_results(80, seed=7), tmp_path_factory.mktemp("np") / "r.ndjson"
     )
     tables = normalize(spark.read.schema(RESULTS_SCHEMA).json(str(path)))
-    for name in ("business_food_category", "business_amenity", "open_hours"):
+    for name in ("open_hours", "business_food_category", "business_search_term",
+                 "business_highlight", "business_amenity"):
         plan = _formatted(tables[name])
         assert "SortMergeJoin" not in plan, f"{name}: dim join lost broadcast"
         assert "ShuffledHashJoin" not in plan, f"{name}: dim join lost broadcast"
         assert "BroadcastHashJoin" in plan, name
+        ops = _child_row_operators(
+            tables[name]._jdf.queryExecution().executedPlan().toString())
+        assert any(op.startswith("BroadcastHashJoin") for op in ops), name
+        assert any(op.startswith("Generate posexplode") for op in ops), name
+        assert any(op.startswith("InMemoryTableScan") for op in ops), name
+        assert not [op for op in ops if op.startswith("Window")], (name, ops)
+        assert not [op for op in ops if op.startswith("Exchange")], (name, ops)
     from yelp_data_engineering_pipeline_spark.cache import release_tracked
 
     release_tracked()
@@ -1045,35 +1074,6 @@ def test_minhash_sql_twin_matches_column_formulation(spark, sf_dir):
     assert ref_plan == new_plan
     assert sorted(map(tuple, ref.collect())) == sorted(map(tuple, new.collect()))
     release_tracked()
-
-
-def test_dense_ids_grid_long_matches_dense_ids(spark):
-    """dense_ids_grid_long (one eager count job, lazy rank window) must
-    assign the SAME ids as the two-phase range scheme for integer-led
-    total orders — including keys spanning multiple grid cells and
-    multi-column tiebreaks (r13, the star-schema child-table path)."""
-    from yelp_data_engineering_pipeline_spark.operators.ids import (
-        dense_ids,
-        dense_ids_grid_long,
-    )
-
-    rows = [
-        (int(k), int(f), float(v))
-        for k, f, v in zip(
-            [7, 3, 3, 200_000, 99_999, 65_536, 65_535, 0, 7, 3],
-            [2, 9, 1, 4, 4, 4, 4, 1, 1, 2],
-            [0.5, 1.5, -2.0, 3.25, 0.0, 9.0, 8.0, 7.0, 6.0, 5.0],
-        )
-    ]
-    df = spark.createDataFrame(rows, "k long, f long, v double")
-    a = dense_ids(df, "k", "f", "v", id_col="id")
-    b = dense_ids_grid_long(df, "k", "f", "v", id_col="id")
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb
-    # the window must be partitioned (plan-audit posture: _cell spec)
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "windowspecdefinition(_cell" in plan
 
 
 def test_cosine_sql_twin_matches_column_cosine(spark, sf_dir):

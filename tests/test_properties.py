@@ -713,3 +713,132 @@ def test_incremental_cc_equals_full_recompute(spark, raw_edges, cut):
         )
     inc = {(r.node, r.label) for r in inc_labels.collect()}
     assert inc == full
+
+
+# Hour strings with their parsed (open_time, close_time) ranges; None
+# marks an unparseable string (routed to hours_rejects).
+_HOURS = {
+    "11:00 AM - 3:00 PM4:30 PM - 10:00 PM": [(39600, 54000), (59400, 79200)],
+    "5:00 PM - 11:00 PM11:00 AM - 2:00 PM": [(61200, 82800), (39600, 50400)],
+    "6:00 PM - 2:00 AM (Next day)": [(64800, 7200)],
+    "9 AM - 5 PM9 AM - 5 PM": [(32400, 61200), (32400, 61200)],
+    "Open 24 hours": [(0, 86399)],
+    "Closed": [],
+    "see website": None,
+}
+_NAMES = st.sampled_from(["Pizza", "Bar", "Cafe", None])
+_NAME_LISTS = st.one_of(st.none(), st.lists(_NAMES, max_size=5))
+_AMENITIES = st.one_of(st.none(), st.lists(st.one_of(st.none(), st.tuples(
+    st.sampled_from(["Wi-Fi", "Patio", None]),
+    st.sampled_from([True, False, None]))), max_size=5))
+_HOUR_ENTRIES = st.one_of(st.none(), st.lists(st.one_of(st.none(), st.tuples(
+    st.sampled_from([*WEEKDAY_ORDER, None]),
+    st.sampled_from(sorted(_HOURS)))), max_size=6))
+_BUSINESS = st.tuples(_HOUR_ENTRIES, _NAME_LISTS, _AMENITIES, _NAME_LISTS, _NAME_LISTS)
+# always present: every edge case at once, and businesses with no children
+_FIXED = [
+    ([("Mon", s) for s in sorted(_HOURS)] + [None, (None, "Closed")],
+     ["Bar", "Bar", None, "Pizza"],
+     [("Wi-Fi", True), ("Wi-Fi", False), ("Wi-Fi", None), None, (None, True)],
+     [None], ["Cafe", "Cafe"]),
+    (None, None, None, None, None),
+    ([], [], [], [], []),
+]
+
+
+@settings(max_examples=3, deadline=None)
+@given(st.lists(_BUSINESS, min_size=8, max_size=16), st.randoms())
+def test_child_ids_equal_window_over_full_column_order(spark, drawn, rnd):
+    """normalize numbers each child table by the business pass's
+    offsets + sorted array positions. Its rows must be exactly the
+    explode + inner dim join rows, and its ids exactly a row_number
+    over the table's full column order — with duplicate and NULL
+    elements, NULL and empty arrays, one amenity listed with both
+    is_available values, split shifts, overnight/Closed/24-hour and
+    unparseable hour strings, and businesses spread over several range
+    partitions."""
+    from yelp_data_engineering_pipeline_spark.operators.ids import dense_ids_window
+    from yelp_data_engineering_pipeline_spark.plans.normalize import normalize
+    from yelp_data_engineering_pipeline_spark.schemas import RESULTS_SCHEMA
+
+    biz = _FIXED + drawn
+    order = list(range(len(biz)))
+    rnd.shuffle(order)  # bizId order differs from input order
+    rows = [
+        (f"b{order[i]:03d}", i, f"R{i}", None, None, oh, None, fc, None, None,
+         am, hl, st_)
+        for i, (oh, fc, am, st_, hl) in enumerate(biz)
+    ]
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        t = normalize(spark.createDataFrame(rows, RESULTS_SCHEMA))
+        parts = t["business"].select(F.spark_partition_id()).distinct().count()
+        got = {n: sorted(map(tuple, t[n].collect())) for n in (
+            "open_hours", "business_food_category", "business_search_term",
+            "business_highlight", "business_amenity")}
+        dims = {d: {r["name"]: r["id"] for r in t[d].collect()} for d in (
+            "weekday", "food_category", "search_term", "highlight", "amenity")}
+        biz_id = {r["name"]: r["id"] for r in t["business"].collect()}
+        rejects = list(map(tuple, t["hours_rejects"].collect()))
+        windowed = {n: sorted(map(tuple, dense_ids_window(
+            t[n].drop("id"), *t[n].columns[1:]).select(*t[n].columns).collect()))
+            for n in got}
+    finally:
+        spark.conf.set(conf, prev)
+        from yelp_data_engineering_pipeline_spark.cache import release_tracked
+
+        release_tracked()
+    assert parts >= 2
+    assert got == windowed
+
+    want = {n: [] for n in (*got, "hours_rejects")}
+    for i, (oh, fc, am, st_, hl) in enumerate(biz):
+        b = biz_id[f"R{i}"]
+        for table, dim, names in (("business_food_category", "food_category", fc),
+                                  ("business_search_term", "search_term", st_),
+                                  ("business_highlight", "highlight", hl)):
+            want[table] += [(b, dims[dim][x]) for x in names or [] if x is not None]
+        want["business_amenity"] += [(b, dims["amenity"][a], v)
+                                     for a, v in filter(None, am or [])
+                                     if a is not None]
+        want["open_hours"] += [(b, dims["weekday"][d], o, c)
+                               for d, s in filter(None, oh or [])
+                               if d is not None for o, c in _HOURS[s] or []]
+        want["hours_rejects"] += [(b, d, s) for d, s in (e or (None, None) for e in oh or [])
+                                  if s is None or _HOURS[s] is None]
+    got = {n: [r[1:] for r in rs] for n, rs in got.items()}
+    got["hours_rejects"] = rejects
+    assert {n: sorted(r, key=repr) for n, r in got.items()} == {
+        n: sorted(w, key=repr) for n, w in want.items()}
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.text(st.characters(categories=("Nd", "No", "Nl")), min_size=1, max_size=3))
+def test_dim_key_resolution_never_raises_on_numeric_text(spark, key):
+    """Only decimal strings are dim ids: other numeric characters
+    ("²", "½", "Ⅻ") resolve as names, so an unknown one is not found
+    instead of an int() crash; decimal digits of any script are ids."""
+    from yelp_data_engineering_pipeline_spark.plans.yelp_queries import (
+        _resolve_dim_id,
+        restaurants_by_category,
+        restaurants_by_day,
+    )
+
+    dim = _numeric_dim(spark)
+    got = _resolve_dim_id(dim, key)
+    assert got == (int(key) if key.isdecimal() else None)
+    tables = {"food_category": dim, "weekday": dim}
+    if not key.isdecimal():
+        assert restaurants_by_category(tables, key) == {"error": "Category not found"}
+        assert restaurants_by_day(tables, key) == {"error": "Invalid weekday"}
+
+
+_NUMERIC_DIM = []
+
+
+def _numeric_dim(spark):
+    if not _NUMERIC_DIM:
+        _NUMERIC_DIM.append(spark.createDataFrame([(1, "Pizza")], "id long, name string"))
+    return _NUMERIC_DIM[0]

@@ -1,24 +1,30 @@
-"""Dense surrogate-id assignment (SURVEY.md §2.5 W3, §7 hard point 4).
+"""Dense surrogate ids and global ranks (SURVEY.md §2.5 W3, §7 hard
+point 4): rows numbered 1..n in a total order. What remains, and who
+calls it:
 
-Two implementations with identical results:
-
-- ``dense_ids_window`` — row_number over a global window. Simple, but
-  the window is a SINGLE partition: fine for dimension-sized outputs,
-  a straggler for fact-scale tables.
-- ``dense_ids`` — the scalable two-phase scheme:
-
-    1. range-repartition by the natural key (ordered partitions),
-    2. count rows per partition (tiny driver-side collect, one row per
-       partition), prefix-sum the counts into offsets,
-    3. row_number within each partition + broadcast offset.
-
-  Every stage is distributed; the only global structure is the
-  n_partitions-row offset table. Ids depend only on the global key
-  order, not on where Spark draws range boundaries, so results are
-  deterministic run-to-run.
+- ``dense_ids_window`` — row_number over one global (SINGLE-partition)
+  window, for dimension-sized inputs: normalize's name dims; the tests'
+  reference for the other schemes.
+- ``dense_ids_with_offsets`` — the two-phase range scheme for
+  fact-scale keys of any type: (1) range-repartition by the key,
+  (2) count rows per partition (tiny driver-side collect) and
+  prefix-sum them into offsets, (3) row_number within each partition
+  + broadcast offset. Ids depend only on the key order, not on where
+  Spark draws range boundaries. The same collect and window carry
+  exclusive prefix sums of per-row counts: normalize's business ids,
+  whose child-count sums number the five child tables.
+  ``dense_ids_with_total`` (ids and n, no offsets) serves
+  preptext.length_bins with ``ntile_from_rank``; ``dense_ids`` (ids
+  only) wraps it.
+- ``rank_histogram_grid_lazy`` — global rank of bounded numeric values
+  on a fixed integer grid (no sample, persist or collect; one action):
+  analytics.window_rank_distribution with ``ntile_from_rank_col``.
+  ``rank_histogram_grid``, its eager form, is the tests' reference.
 """
 
 from __future__ import annotations
+
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,18 +35,32 @@ def dense_ids_window(df: DataFrame, *order_cols: str, id_col: str = "id") -> Dat
     return df.withColumn(id_col, F.row_number().over(w).cast("bigint"))
 
 
-def dense_ids_with_total(
-    df: DataFrame, *order_cols: str, id_col: str = "id", num_partitions: int | None = None
-) -> tuple[DataFrame, int]:
-    """:func:`dense_ids` plus the total row count (already known from the
-    per-partition count collect — no extra job for callers that need n,
-    e.g. percent_rank/cume_dist)."""
+def dense_ids_with_offsets(
+    df: DataFrame,
+    *order_cols: str,
+    offsets: Mapping[str, Column],
+    id_col: str = "id",
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, dict[str, int]]:
+    """The two-phase range scheme (module docstring) with prefix sums.
+
+    Adds dense bigint ids 1..n in ``order_cols`` order (a total order)
+    and, for each ``offsets`` entry, the EXCLUSIVE prefix sum of a
+    non-negative integer count expression over ``df``, in id order (0 on
+    the first row). Returns the frame and the totals: n under
+    ``id_col``, each count's sum under its offset column. The
+    per-partition sums ride the count collect and the in-partition
+    running sums ride the row_number window, so offsets add no job."""
     cols = [F.col(c) for c in order_cols]
+    cnts = {f"_cnt{i}": name for i, name in enumerate(offsets)}
     parted = (
         df.repartitionByRange(num_partitions, *cols)
         if num_partitions is not None
         else df.repartitionByRange(*cols)
-    ).withColumn("_pid", F.spark_partition_id())
+    ).withColumns({
+        "_pid": F.spark_partition_id(),
+        **{c: offsets[name].cast("bigint") for c, name in cnts.items()},
+    })
     # MUST persist: range partitioning samples boundaries per action —
     # without this, the count job and the id job can draw different
     # boundaries and the offsets silently mismatch the final layout.
@@ -50,23 +70,52 @@ def dense_ids_with_total(
 
     parted = tracked_persist(parted)
 
-    counts = parted.groupBy("_pid").count().orderBy("_pid").collect()
-    offsets = {}
-    acc = 0
+    counts = (
+        parted.groupBy("_pid")
+        .agg(F.count(F.lit(1)).alias("_n"), *[F.sum(c).alias(c) for c in cnts])
+        .orderBy("_pid")
+        .collect()
+    )
+    acc = dict.fromkeys(("_n", *cnts), 0)
+    rows = []
     for r in counts:
-        offsets[r["_pid"]] = acc
-        acc += r["count"]
+        rows.append((r["_pid"], *acc.values()))
+        for c in acc:
+            acc[c] += r[c] or 0
     offset_df = parted.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()] or [(0, 0)], "_pid int, _off long"
+        rows or [(0,) * (len(acc) + 1)],
+        ", ".join(["_pid int", *[f"_off{c} long" for c in acc]]),
     )
 
+    def z(c: Column) -> Column:
+        return F.coalesce(c, F.lit(0))
+
     w = Window.partitionBy("_pid").orderBy(*cols)
+    before = w.rowsBetween(Window.unboundedPreceding, -1)
     out = (
         parted.join(F.broadcast(offset_df), "_pid", "left")
-        .withColumn(id_col, (F.row_number().over(w) + F.coalesce(F.col("_off"), F.lit(0))).cast("bigint"))
-        .drop("_pid", "_off")
+        .withColumns({
+            id_col: (F.row_number().over(w) + z(F.col("_off_n"))).cast("bigint"),
+            **{
+                name: (z(F.sum(c).over(before)) + z(F.col(f"_off{c}"))).cast("bigint")
+                for c, name in cnts.items()
+            },
+        })
+        .drop("_pid", *cnts, *[f"_off{c}" for c in acc])
     )
-    return out, acc
+    return out, {id_col: acc["_n"], **{name: acc[c] for c, name in cnts.items()}}
+
+
+def dense_ids_with_total(
+    df: DataFrame, *order_cols: str, id_col: str = "id", num_partitions: int | None = None
+) -> tuple[DataFrame, int]:
+    """:func:`dense_ids` plus the total row count (already known from the
+    per-partition count collect — no extra job for callers that need n,
+    e.g. percent_rank/cume_dist)."""
+    out, totals = dense_ids_with_offsets(
+        df, *order_cols, offsets={}, id_col=id_col, num_partitions=num_partitions
+    )
+    return out, totals[id_col]
 
 
 def dense_ids(
@@ -170,72 +219,6 @@ def rank_histogram_grid_lazy(
             (F.row_number().over(w) + F.coalesce(F.col("_off"), F.lit(0))).cast("bigint"),
         )
         .drop("_cell", "_off")
-    )
-
-
-def dense_ids_grid_long(
-    df: DataFrame, *order_cols: str, id_col: str = "id", cell_shift: int = 16
-) -> DataFrame:
-    """:func:`dense_ids` semantics (dense bigint ids 1..n in
-    ``order_cols`` order) for frames whose LEADING order column is a
-    non-negative integer — one eager job instead of two (r13,
-    guide §1.2 fewer passes).
-
-    The range-repartition scheme must run a boundary-SAMPLE job (a full
-    scan of the input pipeline), persist the shuffled frame (sampled
-    boundaries are action-nondeterministic), then run the count job —
-    two eager scans of the input per call, serialized at
-    plan-construction time. Quantizing the leading key to a fixed grid
-    (``cell = key >> cell_shift``) is deterministic, so no sample, no
-    persist, no unpersist churn — and (r14, VERDICT r13 next-6) the
-    per-cell prefix sum now stays JVM-side: the counts frame (input
-    rows / 2^cell_shift — bounded) takes a running-sum window ordered
-    by ``_cell`` and broadcast-joins back, so NOTHING is collected to
-    the driver and the whole id assignment plans lazily — zero eager
-    jobs; the caller's action materializes the counts subtree as a
-    broadcast build. Ordering by (cell, *order_cols) equals
-    (*order_cols) because shift-right is monotone on non-negative keys.
-
-    Scale: with dense surrogate leading keys (the star-schema child
-    case) cells are uniformly filled; 2^cell_shift rows/cell bounds the
-    per-task window state, and the cell count grows with the data, so
-    the window is never global. Skewed/unbounded/string keys keep
-    :func:`dense_ids`.
-
-    Ids are identical to :func:`dense_ids` by construction (both are
-    the unique total order's row number); goldens and the DuckDB
-    oracle sweep pin it.
-    """
-    lead = order_cols[0]
-    cell = F.shiftright(F.col(lead).cast("long"), cell_shift)
-    tagged = df.withColumn("_cell", cell)
-    offset_df = _cell_offsets(tagged)
-    w = Window.partitionBy("_cell").orderBy(*order_cols)
-    return (
-        tagged.join(F.broadcast(offset_df), "_cell", "left")
-        .withColumn(
-            id_col,
-            (F.row_number().over(w) + F.coalesce(F.col("_off"), F.lit(0))).cast(
-                "bigint"
-            ),
-        )
-        .drop("_cell", "_off")
-    )
-
-
-def _cell_offsets(tagged: DataFrame) -> DataFrame:
-    """(_cell, _off) prefix-sum offsets of the per-cell row counts,
-    fully lazy (r14): a running-sum window ORDERED by ``_cell`` over
-    the counts frame — bounded at rows/2^cell_shift, so the
-    single-partition window is over the tiny aggregate, never the
-    data — replaces the driver-side collect + createDataFrame. The
-    exclusive prefix (rowsBetween unboundedPreceding → -1) is NULL for
-    the first cell; coalesce pins it to 0, matching the old collect
-    loop's acc=0 seed exactly."""
-    counts = tagged.groupBy("_cell").agg(F.count(F.lit(1)).alias("_cnt"))
-    wcum = Window.orderBy("_cell").rowsBetween(Window.unboundedPreceding, -1)
-    return counts.select(
-        "_cell", F.coalesce(F.sum("_cnt").over(wcum), F.lit(0)).alias("_off")
     )
 
 

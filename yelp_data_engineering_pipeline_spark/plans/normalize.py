@@ -4,53 +4,94 @@
 The reference loads row-at-a-time with per-value ``get_or_create``
 round trips (N+1). This plan is the set-oriented rewrite (SURVEY E2.4):
 
-    bronze (nested)                    # one cached pass
+    bronze (nested)
       ├─ quarantine split (P11: pydantic constraint regexes)
-      ├─ business + surrogate ids (W3)
-      ├─ per collection: explode → distinct → dim ids → broadcast-join
-      │  FKs back (J5 batch dim-merge — no per-row lookups)
-      └─ open_hours: explode entries → parse ranges (F2/F4/F5) →
-         second explode (N1: split shifts → multiple rows)
+      ├─ business + surrogate ids (W3), one cached pass that also
+      │  carries each child table's sorted per-business array
+      ├─ per collection: explode → distinct → dim ids (J5 batch
+      │  dim-merge — no per-row lookups)
+      └─ per child table: posexplode the sorted array → broadcast-join
+         the dim FK; open_hours' array holds the parsed ranges
+         (F2/F4/F5), split shifts as several elements (N1)
 
 Semantic deltas vs the reference (deliberate, documented):
 - surrogate ids are deterministic (row_number over natural key), not
   insertion-order autoincrement — same shape, different values;
-- weekday ids follow Mon..Sun canonical order;
+- weekday ids follow Mon..Sun canonical order (other names after
+  NULL and before Mon, by name);
 - constraint-violating rows and unparseable hour strings go to
   quarantine outputs instead of failing the whole transaction
   (the reference rolls back everything on one bad row,
   parse_and_upload_to_db.py:175-179).
 
 Scale notes: every dim is bounded-cardinality → broadcast joins for FK
-attachment; the only fact-scale shuffles are the surrogate-id sort and
-the explodes' downstream writes. Only the bounded name dims use a
-global row_number window (``dense_ids_window``). ``business`` ids come
-from ``dense_ids`` (two-phase: per-range counts → prefix-sum offsets)
-and the five child tables' ids from ``dense_ids_grid_long`` (fixed-grid
-per-cell offsets), both in operators/ids.py — no single-partition
-window at fact scale.
+attachment; the only fact-scale shuffle is the business id sort. Name
+dims number by a global window in name order (``dense_ids_window``);
+``business`` by the two-phase range scheme (``dense_ids_with_offsets``,
+operators/ids.py), which also carries the exclusive prefix sum of each
+business's child count per child table. A child row's id is that
+offset + its position in the business's sorted child array, so the
+five child tables are a ``posexplode`` of the cached business rows and
+a broadcast dim join — no window, no shuffle, no id pass of their own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import math
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hours import hours_ranges
-from ..operators.ids import dense_ids, dense_ids_grid_long, dense_ids_window
+from ..operators.ids import dense_ids_window, dense_ids_with_offsets
 from ..schemas import HEALTH_SCORE_PATTERN, PRICE_PATTERN, WEEKDAY_ORDER
 
-# Fact-scale tables (business, bridges, open_hours) get a distributed
-# id assigner; bounded dims use the plain window (cheaper below
-# ~millions of rows, identical results — equivalence tested). The
-# business table keys on the scraped string id → two-phase range
-# scheme; the five child tables lead with the dense business_id
-# surrogate → the fixed-grid scheme (no sample, no persist and no
-# eager job: the per-cell offsets are a lazy JVM-side window the
-# caller's action evaluates — r14, guide §1.2; ids identical, goldens
-# + oracle sweep pin it).
-_dense_ids = dense_ids
-_child_dense_ids = dense_ids_grid_long
+# A child table inherits the business pass's partitions; it is coalesced
+# to one partition per this many rows (about the child rows in one
+# 64 MiB AQE advisory shuffle partition), so a small star's child tables
+# stay one file each and request-time scans open no more files.
+_CHILD_ROWS_PER_PARTITION = 1 << 20
+
+
+def _weekday_pos(name: Column) -> Column:
+    """1-based canonical Mon..Sun position; 0 for other names."""
+    return F.array_position(F.array(*[F.lit(d) for d in WEEKDAY_ORDER]), name)
+
+
+def _child_arrays() -> dict[str, Column]:
+    """Each child table's rows of one business, as an array whose
+    ``array_sort`` is the table's id order. Elements the inner dim join
+    would drop (NULL names or weekdays, unparseable hour strings) are
+    left out. Bridges sort by name, and name order is dim-id order
+    (``_name_dim``); ``business_amenity``'s (amenity, is_available)
+    structs break name ties by availability; ``open_hours`` sorts by
+    (weekday position, weekday name), the weekday dim's order, then
+    (open_time, close_time)."""
+
+    def kept(col: str, field: str | None = None) -> Column:
+        return F.filter(col, lambda x: (x[field] if field else x).isNotNull())
+
+    def ranges(e: Column) -> Column:  # [] for unparseable hour strings
+        return F.coalesce(
+            F.transform(
+                hours_ranges(e["open_hours"]),
+                lambda r: F.struct(
+                    _weekday_pos(e["weekday"]).alias("pos"),
+                    e["weekday"].alias("weekday_name"),
+                    r["open_time"].alias("open_time"),
+                    r["close_time"].alias("close_time"),
+                ),
+            ),
+            F.array(),
+        )
+
+    return {
+        "open_hours": F.flatten(F.transform(kept("open_hours", "weekday"), ranges)),
+        "business_food_category": kept("food_category"),
+        "business_search_term": kept("related_search_terms"),
+        "business_highlight": kept("highlights"),
+        "business_amenity": kept("amenities", "amenity"),
+    }
 
 
 def _name_dim(values: DataFrame) -> DataFrame:
@@ -76,125 +117,96 @@ def normalize(results: DataFrame) -> dict[str, DataFrame]:
     valid = results.filter(validity_predicate())
     quarantine = results.filter(~validity_predicate())
 
-    keyed = _dense_ids(valid, "bizId").cache()
-
-    business = keyed.select(
-        "id", "name", "website", "phone_number", "address", "price", "health_score"
+    # The child counts ride the business id pass; the sorted arrays are
+    # built once, into the cached rows, after it (built before the range
+    # shuffle, the boundary-sample job and the shuffle each built them).
+    arrays = _child_arrays()
+    keyed, totals = dense_ids_with_offsets(
+        valid,
+        "bizId",
+        offsets={
+            f"_off_{t}": F.when(arr.isNull(), 0).otherwise(F.size(arr))
+            for t, arr in arrays.items()
+        },
     )
+    keyed = keyed.withColumns(
+        {f"_{t}": F.array_sort(arr) for t, arr in arrays.items()}
+    ).cache()
 
     # --- weekday dim: canonical Mon..Sun ordering (W2) ----------------------
-    weekday_pos = F.array_position(
-        F.array(*[F.lit(d) for d in WEEKDAY_ORDER]), F.col("name")
-    )
     weekday = (
         keyed.select(F.explode("open_hours").alias("oh"))
         .select(F.col("oh.weekday").alias("name"))
         .distinct()
-        .withColumn("id", F.row_number().over(Window.orderBy(weekday_pos)).cast("bigint"))
+        .withColumn(
+            "id",
+            F.row_number().over(Window.orderBy(_weekday_pos(F.col("name")), "name")).cast("bigint"),
+        )
         .select("id", "name")
     )
 
-    # --- simple name dims + bridges (N2-N4 / J5) ----------------------------
-    def bridge(array_col: str, dim: DataFrame, fk_name: str) -> DataFrame:
-        ex = keyed.select(F.col("id").alias("business_id"), F.explode(array_col).alias("name"))
-        joined = ex.join(F.broadcast(dim.withColumnRenamed("id", fk_name)), "name").select(
-            "business_id", fk_name
-        )
-        return _child_dense_ids(joined, "business_id", fk_name).select("id", "business_id", fk_name)
-
-    food_category = _name_dim(
-        keyed.select(F.explode("food_category").alias("name"))
-    )
-    search_term = _name_dim(keyed.select(F.explode("related_search_terms").alias("name")))
-    highlight = _name_dim(keyed.select(F.explode("highlights").alias("name")))
-    amenity = _name_dim(keyed.select(F.explode("amenities.amenity").alias("name")))
-
-    def _business_amenity() -> DataFrame:
-        # --- amenity bridge carries the is_available payload (N5) -----------
-        am_ex = keyed.select(
-            F.col("id").alias("business_id"),
-            F.explode("amenities").alias("am"),
-        ).select("business_id", F.col("am.amenity").alias("name"), F.col("am.is_available").alias("is_available"))
-        return _child_dense_ids(
-            am_ex.join(F.broadcast(amenity.withColumnRenamed("id", "amenity_id")), "name").select(
-                "business_id", "amenity_id", "is_available"
-            ),
-            "business_id",
-            "amenity_id",
-        ).select("id", "business_id", "amenity_id", "is_available")
-
-    # --- open_hours: double explode with range parsing (N1) -----------------
-    entries = keyed.select(
-        F.col("id").alias("business_id"), F.explode("open_hours").alias("oh")
-    ).select(
-        "business_id",
-        F.col("oh.weekday").alias("weekday_name"),
-        F.col("oh.open_hours").alias("hours_str"),
-        hours_ranges(F.col("oh.open_hours")).alias("ranges"),
-    )
-    hours_rejects = entries.filter(F.col("ranges").isNull()).select(
-        "business_id", "weekday_name", "hours_str"
-    )
-
-    def _open_hours() -> DataFrame:
-        oh = (
-            entries.filter(F.col("ranges").isNotNull())
-            .select("business_id", "weekday_name", F.explode("ranges").alias("r"))
-            .join(
-                F.broadcast(
-                    weekday.select(F.col("id").alias("weekday_id"), F.col("name").alias("weekday_name"))
-                ),
-                "weekday_name",
-            )
-            .select(
-                "business_id",
-                "weekday_id",
-                F.col("r.open_time").alias("open_time"),
-                F.col("r.close_time").alias("close_time"),
-            )
-        )
-        return _child_dense_ids(
-            oh, "business_id", "weekday_id", "open_time", "close_time"
-        ).select("id", "business_id", "weekday_id", "open_time", "close_time")
-
-    # The five child tables plan lazily: dense_ids_grid_long
-    # (operators/ids.py) runs no job at plan-construction time — its
-    # per-cell offsets are a broadcast running-sum window the caller's
-    # action evaluates, so each child action reads its input subtree
-    # twice (counts build + probe side), both off the shared ``keyed``
-    # cache. The plans are mutually independent once ``keyed`` exists,
-    # so the pool below only overlaps their driver-side construction
-    # (py4j analysis), not Spark jobs. Results are byte-identical to
-    # the sequential build (goldens pin them).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        f_bfc = pool.submit(bridge, "food_category", food_category, "food_category_id")
-        f_bst = pool.submit(bridge, "related_search_terms", search_term, "search_term_id")
-        f_bhl = pool.submit(bridge, "highlights", highlight, "highlight_id")
-        f_bam = pool.submit(_business_amenity)
-        f_oh = pool.submit(_open_hours)
-        business_food_category = f_bfc.result()
-        business_search_term = f_bst.result()
-        business_highlight = f_bhl.result()
-        business_amenity = f_bam.result()
-        open_hours = f_oh.result()
-
-    return {
-        "business": business,
+    tables = {
+        "business": keyed.select(
+            "id", "name", "website", "phone_number", "address", "price", "health_score"
+        ),
         "weekday": weekday,
-        "food_category": food_category,
-        "search_term": search_term,
-        "highlight": highlight,
-        "amenity": amenity,
-        "open_hours": open_hours,
-        "business_food_category": business_food_category,
-        "business_search_term": business_search_term,
-        "business_highlight": business_highlight,
-        "business_amenity": business_amenity,
-        "quarantine": quarantine,
-        "hours_rejects": hours_rejects,
+        **{
+            d: _name_dim(keyed.select(F.explode(src).alias("name")))
+            for d, src in (
+                ("food_category", "food_category"),
+                ("search_term", "related_search_terms"),
+                ("highlight", "highlights"),
+                ("amenity", "amenities.amenity"),
+            )
+        },
     }
+
+    def child(t: str, dim: str, fk: str, name: str, *cols: str) -> DataFrame:
+        """id = business offset + array position; ``fk`` from the
+        broadcast ``dim`` joined on the element field ``name``."""
+        rows = keyed.select(
+            F.col("id").alias("business_id"),
+            F.col(f"_off_{t}").alias("_off"),
+            F.posexplode(f"_{t}").alias("_pos", "e"),
+        ).select(
+            (F.col("_off") + F.col("_pos") + 1).cast("bigint").alias("id"),
+            "business_id",
+            F.col(name).alias("_name"),
+            *[F.col(f"e.{c}").alias(c) for c in cols],
+        )
+        ids = tables[dim].select(F.col("id").alias(fk), F.col("name").alias("_name"))
+        parts = math.ceil(totals[f"_off_{t}"] / _CHILD_ROWS_PER_PARTITION)
+        return (
+            rows.join(F.broadcast(ids), "_name")
+            .select("id", "business_id", fk, *cols)
+            .coalesce(max(1, parts))
+        )
+
+    # bridges (N2-N4 / J5; the amenity bridge carries is_available, N5)
+    # and open_hours, one row per parsed range: split shifts (N1)
+    tables["open_hours"] = child(
+        "open_hours", "weekday", "weekday_id", "e.weekday_name", "open_time", "close_time"
+    )
+    for t, dim, name in (
+        ("business_food_category", "food_category", "e"),
+        ("business_search_term", "search_term", "e"),
+        ("business_highlight", "highlight", "e"),
+    ):
+        tables[t] = child(t, dim, f"{dim}_id", name)
+    tables["business_amenity"] = child(
+        "business_amenity", "amenity", "amenity_id", "e.amenity", "is_available"
+    )
+    tables["quarantine"] = quarantine
+    tables["hours_rejects"] = (
+        keyed.select(F.col("id").alias("business_id"), F.explode("open_hours").alias("oh"))
+        .filter(hours_ranges(F.col("oh.open_hours")).isNull())
+        .select(
+            "business_id",
+            F.col("oh.weekday").alias("weekday_name"),
+            F.col("oh.open_hours").alias("hours_str"),
+        )
+    )
+    return tables
 
 
 def write_star_schema(tables: dict[str, DataFrame], out_dir: str) -> None:

@@ -78,8 +78,10 @@ _DIM_MAP_CACHE: "weakref.WeakKeyDictionary[DataFrame, dict[str, int]]" = (
 def _resolve_dim_id(dim: DataFrame, key: int | str) -> int | None:
     """Digit-dispatch id/name resolution (P10, app.py:57-64): ints pass
     through; names match case-insensitively (ilike with no wildcards).
-    NULL names are skipped (they can never match a requested name)."""
-    if isinstance(key, int) or (isinstance(key, str) and key.isdigit()):
+    NULL names are skipped (they can never match a requested name).
+    Only decimal strings are ids: ``"²".isdigit()`` is True but
+    ``int("²")`` raises, so such keys resolve as names."""
+    if isinstance(key, int) or (isinstance(key, str) and key.isdecimal()):
         return int(key)
     m = _DIM_MAP_CACHE.get(dim)
     if m is None:
